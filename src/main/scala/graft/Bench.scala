@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, one JSON line to stdout.
@@ -8,6 +8,40 @@ import org.apache.spark.sql.SparkSession
   * of every output row/column — rather than `.count()`, which would let
   * Catalyst prune projections and under-report the real work. */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+  /** (wall seconds, shuffle MB) from one execution, or why it failed. */
+  type Measured = Either[String, (Double, Double)]
+  type Run = Seq[(String, Measured)]
+
+  /** Times one query through the noop sink. Time and shuffle MB come
+    * from the SAME execution — a kept minimum time must carry its own
+    * run's shuffle stats. A query that throws is a failure, not a
+    * (short) measurement. `totals` must be registered on `spark`. */
+  def runOne(spark: SparkSession, sfDir: String, totals: TaskTotals,
+      name: String, fn: Query): Measured = {
+    val (r, c) = totals.around(spark) {
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Right((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        Left(e.toString)
+      }
+    }
+    r.map(t => (t, c.shuffleWriteBytes / 1048576.0))
+  }
+
+  /** Names that failed in any run, and each run's rows without them:
+    * a failed query stays out of every timed figure and guard. */
+  def splitFailed(runs: Seq[Run]): (Seq[Seq[(String, (Double, Double))]], Seq[String]) = {
+    val failed = runs.flatMap(_.collect { case (n, Left(_)) => n }).distinct.sorted
+    (runs.map(_.collect { case (n, Right(m)) if !failed.contains(n) => n -> m }), failed)
+  }
+
+  private def okSeconds(run: Run): Double =
+    run.collect { case (_, Right((t, _))) => t }.sum
+
   def main(args: Array[String]): Unit = {
     // dev loop: `runMain graft.Bench q1 q2 ...` times ONLY those
     // queries and never touches the committed snapshot or its guards
@@ -107,41 +141,13 @@ object Bench {
           smallEdgeThreshold = 0L)
         .write.format("noop").mode("overwrite").save()
     }
-    // per-query physical-work attribution: task-metric sums between
-    // query boundaries (bus drained before each read so attribution
-    // does not race async delivery). Shuffle bytes are THE scale
-    // signal — a query whose time looks fine but whose shuffle volume
-    // grows superlinearly is the one that dies at 100 TB first.
-    object work extends org.apache.spark.scheduler.SparkListener {
-      val shuffleW = new java.util.concurrent.atomic.AtomicLong
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) shuffleW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-      def reset(): Unit = shuffleW.set(0L)
-    }
-    spark.sparkContext.addSparkListener(work)
-    // (wall seconds, shuffle MB) measured from the SAME execution — a
-    // kept minimum time must carry its own run's shuffle stats, never
-    // pair a time from one run with volume from another
-    def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
-      org.apache.spark.sql.GraftShims.drainListenerBus(spark)
-      work.reset()
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      val t = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.GraftShims.drainListenerBus(spark)
-      (t, work.shuffleW.get / 1048576.0)
-    }
-    def runSuite(): Seq[(String, (Double, Double))] =
+    val totals = new TaskTotals
+    spark.sparkContext.addSparkListener(totals)
+    def runSuite(): Run =
       SparkEntry.queries.toSeq
         .filter { case (name, _) => only.forall(_.contains(name)) }
         .sortBy(_._1).map { case (name, fn) =>
-          name -> runOne(name, fn)
+          name -> runOne(spark, sfDir, totals, name, fn)
         }
     // Round 4 committed a snapshot from one noisy host window (160 s where
     // a controlled re-run measures 95 s) and the next round nearly chased
@@ -192,20 +198,21 @@ object Bench {
     var attempts = List(runSuite())
     while (attempts.size < minRuns ||
       (attempts.size < 3 && prevTimes.nonEmpty && {
-        val t = attempts.head.map(_._2._1).sum
+        val t = okSeconds(attempts.head)
         t > prevTotal * 1.5 || t < prevTotal / 1.5
       })) {
       if (attempts.size >= minRuns)
-        System.err.println(f"[bench] total ${attempts.head.map(_._2._1).sum}%.1f s deviates >1.5x from previous committed ${prevTotal}%.1f s; re-running")
+        System.err.println(f"[bench] total ${okSeconds(attempts.head)}%.1f s deviates >1.5x from previous committed ${prevTotal}%.1f s; re-running")
       attempts ::= runSuite()
     }
+    val (okRuns, suiteFailed) = splitFailed(attempts)
     // multiple runs: keep each query's MINIMUM across runs (wall noise
     // only ever adds time; time and shuffle stay paired per execution)
-    val fastest = attempts.minBy(_.map(_._2._1).sum)
+    val fastest = okRuns.minBy(_.map(_._2._1).sum)
     val picked =
-      if (attempts.size == 1) fastest
+      if (okRuns.size == 1) fastest
       else {
-        val maps = attempts.map(_.toMap)
+        val maps = okRuns.map(_.toMap)
         fastest.map { case (name, _) =>
           name -> maps.map(_(name)).minBy(_._1)
         }
@@ -222,17 +229,21 @@ object Bench {
     // the snapshot then records each query's true cost, and an `outliers`
     // entry survives only for a regression that reproduces across up to
     // three independent measurements.
-    val results = picked.map { case (name, first) =>
-      var best = first
-      var tries = 0
-      while (tries < 2 && isOutlier(name, best._1)) {
+    def remeasure(name: String, best: (Double, Double), tries: Int): Measured =
+      if (tries == 2 || !isOutlier(name, best._1)) Right(best)
+      else {
         System.err.println(f"[bench] $name%s ${best._1}%.3f s is >3x its committed ${prevTimes(name)}%.3f s; re-measuring")
-        val r = runOne(name, SparkEntry.queries(name))
-        if (r._1 < best._1) best = r // keep time AND shuffle from one run
-        tries += 1
+        runOne(spark, sfDir, totals, name, SparkEntry.queries(name)).flatMap { r =>
+          // keep time AND shuffle from one run
+          remeasure(name, if (r._1 < best._1) r else best, tries + 1)
+        }
       }
-      name -> best
+    val remeasured = picked.map { case (name, first) =>
+      name -> remeasure(name, first, 0)
     }
+    val results = remeasured.collect { case (name, Right(m)) => name -> m }
+    val failed = (suiteFailed ++ remeasured.collect { case (n, Left(_)) => n })
+      .sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val outliers = results.collect {
       case (name, (t, _)) if isOutlier(name, t) =>
         "\"" + name + f"""":[${prevTimes(name)}%.3f,$t%.3f]"""
@@ -256,7 +267,7 @@ object Bench {
         "\"" + name + f"""":[${prevShuffle(name)}%.1f,$s%.1f]"""
     }.mkString("{", ",", "}")
     val full =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"shuffle_mb":$smb,"outliers":$outliers,"shuffle_outliers":$shuffleOutliers,"runs":${attempts.size},"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"shuffle_mb":$smb,"outliers":$outliers,"shuffle_outliers":$shuffleOutliers,"failed":$failed,"runs":${attempts.size},"sf":"$sfDir"}"""
     // The full per-query line is ~2.3 KB for 90 queries, but the round
     // driver keeps only the LAST 2000 chars of output — the line's head
     // (and the total) was being truncated every round. Three sinks so
@@ -289,7 +300,7 @@ object Bench {
       .map { case (k, (t, _)) => "\"" + k + f"""":$t%.3f""" }
       .mkString("{", ",", "}")
     val filePtr = if (wrote) outFile else ""
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"queries_file":"$filePtr","slowest":$slowest,"sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"failed":$failed,"queries_file":"$filePtr","slowest":$slowest,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

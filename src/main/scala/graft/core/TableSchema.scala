@@ -89,9 +89,6 @@ case class TableSchema(
     nullableColumns: Seq[String] = Seq.empty,
     uniqueColumns: Seq[String] = Seq.empty,
     primaryKey: Seq[String] = Seq.empty) {
-  def columnType(name: String): Option[GDataType] = columns.collectFirst {
-    case (n, t) if n == name => t
-  }
   /** Columns that must be present AND non-null: required − nullable.
     * Reference: `validators.py:180-191`. */
   def notNullColumns: Seq[String] = requiredColumns.filterNot(nullableColumns.contains)

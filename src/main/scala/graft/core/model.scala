@@ -31,11 +31,6 @@ case class ChangeEvent(
     affectedRows: Long,
     metadata: Map[String, String] = Map.empty) {
   require(ChangeType.all.contains(changeType), s"bad changeType: $changeType")
-
-  /** Dedup key — deliberately includes the event timestamp, so only *exact
-    * re-deliveries* dedup, not logical duplicates.
-    * Reference: `src/ingestion/change_detection.py:102-104`. */
-  def dedupKey: String = s"$sourceId:$tableName:$changeType:${timestamp.getTime}"
 }
 
 /** Outcome of a sink load. Reference: `src/interfaces/base.py:62-69`. */

@@ -31,12 +31,6 @@ object Dedup {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** Size of each exact-duplicate group (>1 ⇒ duplicates exist). */
-  def exactGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.groupBy(col(textCol))
-      .agg(count(lit(1)).as("group_size"), min(col(idCol)).as("keeper_id"))
-      .filter(col("group_size") > 1)
-
   /** Cross-snapshot EXACT dedup of an arriving batch against a large
     * historical index, bloom-prefiltered
     * ([[graft.functions.NativeBloom]]): returns the new rows whose
@@ -866,7 +860,7 @@ object Dedup {
     // spelling ran ArraySort's interpreted struct comparator + a lambda
     // per LINE of the corpus on the post-shuffle side (measured 1.6–1.7×
     // warm, ≤2.4× across windows, at 40× volume / 10.8M lines —
-    // graft.RepackAb); SortedStructConcatExpr is its parity-pinned
+    // SCALE.md); SortedStructConcatExpr is its parity-pinned
     // one-pass twin (SortedStructConcatSpec)
     val rebuilt = kept.groupBy(col("__id"))
       .agg(graft.functions.NativeText.sortedStructConcat(

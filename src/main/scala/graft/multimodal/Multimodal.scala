@@ -942,7 +942,7 @@ object Multimodal {
     * preimages — see below). Earlier spellings that
     * range-partition on `size DESC` do the OPPOSITE of balancing when
     * outliers are rare — the whole heavy head lands in partition 0
-    * (measured by `graft.MultimodalStress`; naive hash placement
+    * (measured by `graft.stress.MultimodalStress`; naive hash placement
     * clusters them Poisson-style instead).
     *
     * Contract + cost notes (ADVICE r13): `idCol` must be UNIQUE and
@@ -1016,8 +1016,8 @@ object Multimodal {
     // LPT put it. A range exchange here re-introduces sampler jitter:
     // its boundaries drift by O(inputRows/sampleSize) rows, and one
     // boundary crossing one outlier costs a whole outlier of balance
-    // (measured 1.4–1.9× on the MultimodalStress corpus; exact
-    // placement reproduces the per-bin 1.02×).
+    // (measured 1.4–1.9× on the graft.stress.MultimodalStress corpus;
+    // exact placement reproduces the per-bin 1.02×).
     val preimage: Array[Int] = {
       val out = new Array[Int](parts)
       val seen = new Array[Boolean](parts)

@@ -60,10 +60,6 @@ object Layout {
     }.reduce(_ bitwiseOR _)
   }
 
-  /** Uniform 16-bit bucket of a numeric column over [lo, hi]. */
-  def bucket16(x: Column, lo: Double, hi: Double): Column =
-    bucketN(x, lo, hi, 16)
-
   /** Uniform `nBits`-bit bucket of a numeric column over [lo, hi]. */
   def bucketN(x: Column, lo: Double, hi: Double, nBits: Int): Column = {
     require(hi > lo, "bucketN needs hi > lo")

@@ -325,7 +325,7 @@ object CoreQueries extends QueryPack {
     * compiled [[graft.functions.SortedStructConcatExpr]] — the
     * interpreted transform/array_sort spelling ran two lambdas per
     * ORDER of the corpus post-shuffle (round 15; same swap as d10's
-    * line re-pack, RepackAb-measured 1.6–1.7× at volume). */
+    * line re-pack, measured 1.6–1.7× at volume, SCALE.md). */
   def q11StatusListagg(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     table(s, dir, "orders")
@@ -362,7 +362,7 @@ object CoreQueries extends QueryPack {
     * same sets from ONE scan — per-customer year flags, then two
     * conditional counts. Writing `a.intersect(b)` / `a.except(b)` here
     * would instantiate each year's subtree twice (4 scans + 4 shuffles
-    * of the fact, verified with PlanProbe — Spark does not reuse
+    * of the fact, seen with `Inspect shape` — Spark does not reuse
     * exchanges across the two set-op branches); the flag form is one
     * scan, one shuffle, and is the spelling that survives 100 TB. */
   def q13SetOps(s: SparkSession, dir: String): DataFrame = {

@@ -824,7 +824,7 @@ object TextQueries extends QueryPack {
     // union + max aggregate + ONE membership join replaces the six
     // per-stage doc_id joins the ledger used to pay (round 15, guide
     // §2.4: the same small-side shuffle repeated six times is five
-    // removable exchanges; PretrainChainProbe prices the tail).
+    // removable exchanges; SCALE.md prices the tail).
     val reached = Seq(c.modelKept, c.exact, c.near, c.decon,
         c.deconNear, c.sampled)
       .zipWithIndex.map { case (df, i) =>

@@ -58,8 +58,6 @@ class MultiSourceRunner(spark: SparkSession, maxConcurrent: Int = 4) {
 
   def unregister(name: String): Unit = synchronized { starters -= name }
 
-  def sourceNames: Seq[String] = synchronized { starters.keys.toSeq }
-
   def maxObservedConcurrency: Int = highWater
 
   // running totals per query id, fed by `observe` below — recentProgress

@@ -275,7 +275,7 @@ object Boilerplate {
         (col("__cov").isNull || col("__cov") < col("pos")))
     // compiled re-pack (same justification and parity pin as
     // dedupLinesGlobal: the interpreted spelling cost a struct-compare
-    // + lambda per surviving TOKEN; measured in graft.RepackAb)
+    // + lambda per surviving TOKEN; measured A/B in SCALE.md)
     val rebuilt = kept.groupBy(col("doc_id"))
       .agg(graft.functions.NativeText.sortedStructConcat(
         collect_list(struct(col("pos"), col("tok"))), " ").as("__clean"))

@@ -78,10 +78,6 @@ object Validator {
     (count(lit(1)).as("row_count") +: (typeChecks ++ nullChecks ++ uniqueChecks)) ++ pkCheck
   }
 
-  /** Fused aggregate for a set of rules (V1–V8). */
-  def ruleAggs(rules: Seq[Rules.Rule]): Seq[Column] =
-    count(lit(1)).as("row_count") +: rules.map(_.violationCount)
-
   /** One-row DataFrame with every constraint + rule count for `schema` —
     * the single fused job. */
   def countsFrame(df: DataFrame, schema: TableSchema,

@@ -1,0 +1,39 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The library ships only its two entry-point mains, the benchmark and
+  * the correctness dump: probes, A/B tests, stress harnesses and dev
+  * tools live under src/test. */
+class LayoutSpec extends AnyFunSuite {
+
+  private val allowed = Set("graft.Bench", "graft.Verify")
+
+  /** `pkg.Object` for every `def main(` / `extends App` in `file`. */
+  private def mains(file: Path): Seq[String] = {
+    val src = Files.readString(file)
+    val pkg = """(?m)^package\s+([\w.]+)""".r.findAllMatchIn(src)
+      .map(_.group(1)).mkString(".")
+    val objects = """\bobject\s+(\w+)""".r.findAllMatchIn(src).toSeq
+    """\bdef\s+main\s*\(|\bextends\s+App\b""".r.findAllMatchIn(src).map { m =>
+      val owner = objects.filter(_.start < m.start).lastOption
+        .fold("<no object>")(_.group(1))
+      s"$pkg.$owner"
+    }.toSeq
+  }
+
+  test("src/main defines no main but graft.Bench and graft.Verify") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val found = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap(f => mains(f).map(_ -> f))
+    val extra = found.filterNot(m => allowed(m._1))
+    assert(extra.isEmpty, "mains besides graft.Bench and graft.Verify: " +
+      extra.map { case (o, f) => s"$o ($f)" }.mkString(", "))
+    assert(found.map(_._1).toSet == allowed, s"scan missed graft.Bench or graft.Verify: $found")
+  }
+}

@@ -112,28 +112,17 @@ class QuantilesSpec extends AnyFunSuite with SparkSpec {
     // shuffle ~60k rows; refinement passes shuffle only bucket counts
     val df = s.range(0, 60000).select(lit("k").as("g"),
       (col("id") * 2654435761L % 1000003L).cast("double").as("v"))
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
+    val (r, work) = graft.TaskTotals.measure(s) {
+      Quantiles.exactQuantiles(df, "g", "v", Seq(0.5)).collect()
     }
-    s.sparkContext.addSparkListener(listener)
-    try {
-      val r = Quantiles.exactQuantiles(df, "g", "v", Seq(0.5))
-        .collect()
-      org.apache.spark.sql.GraftShims.drainListenerBus(s)
-      assert(r.length == 1 && r.head.getLong(2) == 60000L)
-      // brute check the median value
-      val vals = df.select("v").collect().map(_.getDouble(0)).sorted
-      assert(r.head.getDouble(3) == vals(30000 - 1))
-      // all passes together move far less than the 480 KB the raw
-      // (key) column would cost a row shuffle
-      assert(shuffleBytes.get < 200L * 1024,
-        s"refinement shuffled ${shuffleBytes.get} bytes")
-    } finally s.sparkContext.removeSparkListener(listener)
+    assert(r.length == 1 && r.head.getLong(2) == 60000L)
+    // brute check the median value
+    val vals = df.select("v").collect().map(_.getDouble(0)).sorted
+    assert(r.head.getDouble(3) == vals(30000 - 1))
+    // all passes together move far less than the 480 KB the raw
+    // (key) column would cost a row shuffle
+    assert(work.shuffleWriteBytes < 200L * 1024,
+      s"refinement shuffled ${work.shuffleWriteBytes} bytes")
   }
 
   test("equiDepthBounds + bucketOf: every bucket's mass ≈ n/b; " +

@@ -113,7 +113,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkSpec {
     // (round 15) d10_line_dedup / tx_dup_span_removal(_runs) left this
     // list: their per-doc re-packs — the two corpus-proportional
     // entries, flagged by the r14 verdict — are now the compiled
-    // SortedStructConcatExpr (graft.RepackAb: interpreted spelling
+    // SortedStructConcatExpr (A/B in SCALE.md: interpreted spelling
     // 1.6–1.7× slower warm at 40× volume / 10.8M elements;
     // SortedStructConcatSpec pins byte parity). q11_status_listagg and
     // w_pattern_match followed in the same round once the expression

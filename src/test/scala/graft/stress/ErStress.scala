@@ -1,11 +1,12 @@
-package graft
+package graft.stress
 
 import graft.er.EntityResolution
 import graft.er.EntityResolution.{BlockingPass, ErScoring}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scale stress for entity resolution (`sbt "runMain graft.ErStress"`):
+import Stress.timed
+
+/** Scale stress for entity resolution (`sbt "Test/runMain graft.stress.ErStress"`):
   * the full block → score → cluster → survive pipeline at 10× and 40×
   * the bench feed volume, plus the degenerate-block guard.
   *
@@ -16,19 +17,7 @@ import org.apache.spark.sql.functions._
   * SCALE.md. */
 object ErStress {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val spark = Stress.session()
 
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val customer = spark.read.parquet(s"$sfDir/customer.parquet")

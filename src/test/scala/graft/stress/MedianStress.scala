@@ -1,10 +1,9 @@
-package graft
+package graft.stress
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stress for the exact-median family's cardinality escape hatch
-  * (`sbt "runMain graft.MedianStress"`): ONE group × 10⁷ DISTINCT
+  * (`sbt "Test/runMain graft.stress.MedianStress"`): ONE group × 10⁷ DISTINCT
   * continuous values — the shape that degenerates the q9/q17/q20
   * window-over-distincts technique into a one-task sort of the whole
   * group no matter how many executors exist (VERDICT r13 "What's
@@ -21,13 +20,7 @@ import org.apache.spark.sql.functions._
   * ANY cardinality. Numbers land in SCALE.md. */
 object MedianStress {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Stress.session()
     import graft.operators.Quantiles
 
     val n = sys.env.getOrElse("SPARK_GRAFT_MEDIAN_N", "10000000").toLong
@@ -40,21 +33,15 @@ object MedianStress {
       .localCheckpoint()
     println(s"rows: ${byVal.count()} (all distinct, one group)")
     val cuts = Seq(("p05", 1, 20), ("p50", 1, 2), ("p95", 19, 20))
-
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
     // window route (force by setting the bound above n): the plan a
     // pre-hatch q20 would run — the whole group's distinct set sorts
     // in ONE task
     spark.conf.set("graft.median.distinctBound", (n + 1).toString)
-    val (w, tw) = time(Quantiles.rankCuts(byVal, "grp", "v", "cnt", cuts)
+    val (w, tw) = Stress.timed(Quantiles.rankCuts(byVal, "grp", "v", "cnt", cuts)
       .collect().toSeq)
     // refinement route (force with bound 0): count-only shuffles
     spark.conf.set("graft.median.distinctBound", "0")
-    val (r, tr) = time(Quantiles.rankCuts(byVal, "grp", "v", "cnt", cuts)
+    val (r, tr) = Stress.timed(Quantiles.rankCuts(byVal, "grp", "v", "cnt", cuts)
       .collect().toSeq)
     spark.conf.unset("graft.median.distinctBound")
     println(f"window-over-distincts (ONE-task sort of $n%,d): $tw%6.2f s")

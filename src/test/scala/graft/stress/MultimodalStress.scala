@@ -1,11 +1,13 @@
-package graft
+package graft.stress
 
 import graft.multimodal.{MediaRecord, Multimodal}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import Stress.timed
+
 /** Volume + skew stress for the multimodal tier
-  * (`sbt "runMain graft.MultimodalStress"`): 100k payloads with a
+  * (`sbt "Test/runMain graft.stress.MultimodalStress"`): 100k payloads with a
   * ≥2,000× size spread (2–8 KB rows, 128 deterministic 12–19 MB
   * outliers ≈ half the corpus mass), proving
   *
@@ -44,20 +46,8 @@ object MultimodalStress {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Stress.session()
     import spark.implicits._
-
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
 
     val parts = 32
     val work = "/tmp/graft-mmstress"
@@ -107,15 +97,6 @@ object MultimodalStress {
         f"and the old range layout ($naiveSpread%.2f×)")
 
     // ——— 2. decode walls + spill-free assertion ———
-    val spilled = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null)
-          spilled.addAndGet(
-            e.taskMetrics.memoryBytesSpilled + e.taskMetrics.diskBytesSpilled)
-    }
-    spark.sparkContext.addSparkListener(listener)
     def decodeWall(df: DataFrame, label: String): Double = {
       val (n, t) = timed {
         Multimodal.extractFeatures(df.as[MediaRecord]).count()
@@ -125,16 +106,17 @@ object MultimodalStress {
         f"(${(nSmall + nBig) / t}%.0f rows/s, ${totalBytes / t / 1e6}%.0f MB/s)")
       t
     }
-    val tHash = decodeWall(
-      media.repartition(parts, col("doc_id")).localCheckpoint(), "hash")
-    val tHint = decodeWall(
-      Multimodal.repartitionBySizeHint(media, parts, "sz").localCheckpoint(),
-      "sizeHint")
-    spark.sparkContext.removeSparkListener(listener)
-    println(f"decode spill: ${spilled.get()} bytes " +
+    val ((tHash, tHint), decode) = graft.TaskTotals.measure(spark) {
+      (decodeWall(
+        media.repartition(parts, col("doc_id")).localCheckpoint(), "hash"),
+       decodeWall(
+        Multimodal.repartitionBySizeHint(media, parts, "sz").localCheckpoint(),
+        "sizeHint"))
+    }
+    println(f"decode spill: ${decode.spillBytes} bytes " +
       f"(hash ${tHash}%.1f s vs sizeHint ${tHint}%.1f s)")
-    require(spilled.get() == 0L,
-      s"decode stage spilled ${spilled.get()} bytes")
+    require(decode.spillBytes == 0L,
+      s"decode stage spilled ${decode.spillBytes} bytes")
 
     // ——— 3. perceptual-hash dedup exactness under volume ———
     val hinted = Multimodal.repartitionBySizeHint(media, parts, "sz")

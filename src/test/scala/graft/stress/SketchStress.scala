@@ -1,7 +1,8 @@
-package graft
+package graft.stress
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import Stress.timed
 import org.apache.spark.sql.types.LongType
 
 /** Stress harness for the round-7 sketch/graph additions (the
@@ -26,26 +27,7 @@ import org.apache.spark.sql.types.LongType
   */
 object SketchStress {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def peakHeapMb(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(_.getType == java.lang.management.MemoryType.HEAP)
-        .map(p => Option(p.getPeakUsage).map(_.getUsed).getOrElse(0L))
-        .sum / (1024 * 1024)
-    }
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val spark = Stress.session()
 
     // ——— 1. KMV sketch: 5M rows, 12,500 distinct per key × 20 keys ———
     val k = 256
@@ -211,7 +193,12 @@ object SketchStress {
     val kllSec32 = kllRun(32)
     val kllSec7 = kllRun(7)
 
-    println(f"""{"metric":"sketch_stress","kmv_rows":$rows,"kmv_sec":$kmvSec%.1f,"pagerank_edges":11000000,"pagerank_sec":$prSec%.1f,"cc_closure_sec":$closureSec%.1f,"cc_fold_sec":$foldSec%.1f,"cc_reclosure_sec":$reclosureSec%.1f,"rouge_docs":$nResp,"rouge_sec":$rougeSec%.1f,"kll_rows":$kllN,"kll_sec_32p":$kllSec32%.1f,"kll_sec_7p":$kllSec7%.1f,"peak_heap_mb":${peakHeapMb()}}""")
+    Stress.report("sketch_stress", "kmv_rows" -> rows, "kmv_sec" -> kmvSec,
+      "pagerank_edges" -> 11000000, "pagerank_sec" -> prSec,
+      "cc_closure_sec" -> closureSec, "cc_fold_sec" -> foldSec,
+      "cc_reclosure_sec" -> reclosureSec, "rouge_docs" -> nResp,
+      "rouge_sec" -> rougeSec, "kll_rows" -> kllN,
+      "kll_sec_32p" -> kllSec32, "kll_sec_7p" -> kllSec7)
     spark.stop()
   }
 }

@@ -1,7 +1,8 @@
-package graft
+package graft.stress
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import Stress.timed
 
 /** Skew stress harness (dev/bench main, not part of a pipeline): pins
   * that the two de-skewed operators hold at HUB scale, not just on the
@@ -28,26 +29,7 @@ object SkewStress {
   def main(args: Array[String]): Unit = {
     val spokes = sys.env.getOrElse("SPARK_GRAFT_STRESS_SPOKES", "1000000").toLong
     val docs = sys.env.getOrElse("SPARK_GRAFT_STRESS_DOCS", "1000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def peakHeapMb(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(_.getType == java.lang.management.MemoryType.HEAP)
-        .map(p => Option(p.getPeakUsage).map(_.getUsed).getOrElse(0L))
-        .sum / (1024 * 1024)
-    }
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val spark = Stress.session()
 
     // ——— 1. forced-distributed connected components on a hub graph ———
     // hub 0 ↔ spokes 1..S; chain S+1..S+1000 (forces multi-round
@@ -94,7 +76,8 @@ object SkewStress {
     require(lineAgg.getLong(0) == 1L && lineAgg.getLong(1) == docs,
       s"unexpected line-dedup result: $lineAgg")
 
-    println(f"""{"metric":"skew_stress","cc_forced_distributed_sec":$ccSec%.1f,"cc_spokes":$s,"line_dedup_sec":$lineSec%.1f,"line_docs":$docs,"peak_heap_mb":${peakHeapMb()}}""")
+    Stress.report("skew_stress", "cc_forced_distributed_sec" -> ccSec,
+      "cc_spokes" -> s, "line_dedup_sec" -> lineSec, "line_docs" -> docs)
     spark.stop()
   }
 }

@@ -1,7 +1,8 @@
-package graft
+package graft.stress
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming-sink stress harness (dev/bench main, the [[TextStress]]
   * pattern): the round-6 sinks are correctness-tested but were never
@@ -32,25 +33,12 @@ object StreamStress {
   def main(args: Array[String]): Unit = {
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_STRESS_TEXT_DOCS", "50000").toLong
     val nBatches = 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Stress.session()
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.streaming.Streams
 
-    def peakHeapMb(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(_.getType == java.lang.management.MemoryType.HEAP)
-        .map(p => Option(p.getPeakUsage).map(_.getUsed).getOrElse(0L))
-        .sum / (1024 * 1024)
-    }
     def dirSize(path: String): (Long, Long) = {
       def walk(f: java.io.File): (Long, Long) =
         if (f.isFile) (f.length, 1L)
@@ -62,25 +50,7 @@ object StreamStress {
       if (root.exists) walk(root) else (0L, 0L)
     }
 
-    // the TextStress corpus: 100-token salad, unique end marker, shared
-    // boilerplate prefix on every 7th doc
-    val words = Seq("the", "be", "to", "of", "and", "that", "have",
-      "with", "table", "scan", "row", "filter", "vector", "sort",
-      "query", "fast", "group", "agg", "hash", "merge", "batch",
-      "value", "part", "spark", "line", "window", "key", "slow",
-      "plan", "join", "shuffle", "stage")
-    val vocab = array(words.map(lit): _*)
-    val boiler = Seq.tabulate(60)(k => words(k % words.size)).mkString(" ")
-    val body = concat_ws(" ",
-      transform(sequence(lit(0), lit(98)),
-        i => element_at(vocab,
-          pmod(hash(col("doc_id") * 101 + i), lit(words.size)) + 1)))
-    val docs = spark.range(0, nDocs).select(col("id").as("doc_id"))
-      .select(col("doc_id"),
-        concat(
-          when(col("doc_id") % 7 === 0, lit(boiler + " ")).otherwise(lit("")),
-          body, lit(" endmark"), col("doc_id").cast("string")).as("text"))
-      .localCheckpoint()
+    val (docs, _) = Stress.textCorpus(spark, nDocs)
 
     val batchBound = nDocs / nBatches
     def partsOf[T](rows: Array[T], idOf: T => Long): Seq[Seq[T]] =
@@ -98,6 +68,16 @@ object StreamStress {
     def jsonSecs(sink: String): String =
       walls.getOrElse(sink, Vector.empty)
         .map(s => f"$s%.2f").mkString("[", ",", "]")
+    // feeds each batch through `input` into the query `start` builds,
+    // waiting for the batch to commit before the next
+    def drive[T](input: MemoryStream[T], batches: Seq[Seq[T]])(
+        start: DataFrame => StreamingQuery): Unit = {
+      val q = start(input.toDF())
+      try {
+        batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+        require(q.exception.isEmpty, q.exception.toString)
+      } finally q.stop()
+    }
 
     // ——— 1. sftPrepSink: 50k conversations, 10 micro-batches ———
     val toksOf = split(col("text"), "\\s+")
@@ -124,17 +104,11 @@ object StreamStress {
     val sftRows = docs.withColumn("conv", convCol)
       .select(col("doc_id"), col("conv"))
       .collect().map(r => (r.getLong(0), r.getString(1)))
-    locally {
-      val input = MemoryStream[(Long, String)]
-      val q = Streams.sftPrepSink(input.toDF().toDF("doc_id", "conv"),
-          s"$work/sft/corpus", s"$work/sft/index", s"$work/sft/cp",
-          "doc_id", "conv", trig = Streams.trigger(1),
-          onLoad = record("sft")).start()
-      try {
-        partsOf(sftRows, (r: (Long, String)) => r._1)
-          .foreach { b => input.addData(b: _*); q.processAllAvailable() }
-        require(q.exception.isEmpty, q.exception.toString)
-      } finally q.stop()
+    drive(MemoryStream[(Long, String)], partsOf(sftRows, (r: (Long, String)) => r._1)) { in =>
+      Streams.sftPrepSink(in.toDF("doc_id", "conv"),
+        s"$work/sft/corpus", s"$work/sft/index", s"$work/sft/cp",
+        "doc_id", "conv", trig = Streams.trigger(1),
+        onLoad = record("sft")).start()
     }
     val sftKept = spark.read.parquet(s"$work/sft/corpus").count()
     require(sftKept == expSft,
@@ -155,17 +129,12 @@ object StreamStress {
         col("text").as("src_text")), Seq("src_id"))
       .select(col("doc_id"), col("src_text").cast("binary").as("payload"))
       .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]]("payload")))
-    locally {
-      val input = MemoryStream[(Long, Array[Byte])]
-      val q = Streams.phashDedupSink(input.toDF().toDF("doc_id", "payload"),
-          s"$work/phash/corpus", s"$work/phash/index", s"$work/phash/cp",
-          "doc_id", "payload", maxHamming = 3, trig = Streams.trigger(1),
-          onLoad = record("phash")).start()
-      try {
-        partsOf(payloadRows, (r: (Long, Array[Byte])) => r._1)
-          .foreach { b => input.addData(b: _*); q.processAllAvailable() }
-        require(q.exception.isEmpty, q.exception.toString)
-      } finally q.stop()
+    drive(MemoryStream[(Long, Array[Byte])],
+        partsOf(payloadRows, (r: (Long, Array[Byte])) => r._1)) { in =>
+      Streams.phashDedupSink(in.toDF("doc_id", "payload"),
+        s"$work/phash/corpus", s"$work/phash/index", s"$work/phash/cp",
+        "doc_id", "payload", maxHamming = 3, trig = Streams.trigger(1),
+        onLoad = record("phash")).start()
     }
     val phashKeptIds = spark.read.parquet(s"$work/phash/corpus")
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
@@ -183,20 +152,14 @@ object StreamStress {
         concat(lit("s"), (col("doc_id") % 4).cast("string")).as("source"),
         col("text"))
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-    locally {
-      val input = MemoryStream[(Long, String, String)]
-      val q = Streams.pretrainPipelineSink(
-          input.toDF().toDF("doc_id", "source", "text"),
-          s"$work/flag/state", s"$work/flag/cp", "doc_id", "source", "text",
-          evalDocs = evalSlice, evalTextCol = "text",
-          blocklistTerms = Seq("slow"), maxHits = 8L,
-          segment = c => concat(c, lit(".")),
-          trig = Streams.trigger(1), onLoad = record("flagship")).start()
-      try {
-        partsOf(flagRows, (r: (Long, String, String)) => r._1)
-          .foreach { b => input.addData(b: _*); q.processAllAvailable() }
-        require(q.exception.isEmpty, q.exception.toString)
-      } finally q.stop()
+    drive(MemoryStream[(Long, String, String)],
+        partsOf(flagRows, (r: (Long, String, String)) => r._1)) { in =>
+      Streams.pretrainPipelineSink(in.toDF("doc_id", "source", "text"),
+        s"$work/flag/state", s"$work/flag/cp", "doc_id", "source", "text",
+        evalDocs = evalSlice, evalTextCol = "text",
+        blocklistTerms = Seq("slow"), maxHits = 8L,
+        segment = c => concat(c, lit(".")),
+        trig = Streams.trigger(1), onLoad = record("flagship")).start()
     }
     val stages = Streams.pretrainPipelineStages(spark, s"$work/flag/state")
       .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
@@ -228,18 +191,11 @@ object StreamStress {
       val start = (i % 40).toInt
       (i, mlSamples(lang).slice(start, start + 80))
     }.toArray
-    locally {
-      val input = MemoryStream[(Long, String)]
-      val q = Streams.multilingualCurationSink(
-          input.toDF().toDF("doc_id", "text"),
-          s"$work/ml/corpus", s"$work/ml/index", s"$work/ml/cp",
-          "doc_id", "text", mlRoutes, trig = Streams.trigger(1),
-          onLoad = record("ml")).start()
-      try {
-        partsOf(mlRows, (r: (Long, String)) => r._1)
-          .foreach { b => input.addData(b: _*); q.processAllAvailable() }
-        require(q.exception.isEmpty, q.exception.toString)
-      } finally q.stop()
+    drive(MemoryStream[(Long, String)], partsOf(mlRows, (r: (Long, String)) => r._1)) { in =>
+      Streams.multilingualCurationSink(in.toDF("doc_id", "text"),
+        s"$work/ml/corpus", s"$work/ml/index", s"$work/ml/cp",
+        "doc_id", "text", mlRoutes, trig = Streams.trigger(1),
+        onLoad = record("ml")).start()
     }
     val mlCorpus = spark.read.parquet(s"$work/ml/corpus")
     val mlKept = mlCorpus.count()
@@ -263,19 +219,13 @@ object StreamStress {
     val prefArr = docs.select(col("doc_id"), promptCol, col("text"), scoreCol)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
         r.getLong(3)))
-    locally {
-      val input = MemoryStream[(Long, String, String, Long)]
-      val q = Streams.preferencePairSink(
-          input.toDF().toDF("doc_id", "prompt", "response", "score")
-            .drop("doc_id"),
-          s"$work/pref/state", s"$work/pref/cp",
-          "prompt", "response", "score", trig = Streams.trigger(1),
-          onLoad = record("pref")).start()
-      try {
-        partsOf(prefArr, (r: (Long, String, String, Long)) => r._1)
-          .foreach { b => input.addData(b: _*); q.processAllAvailable() }
-        require(q.exception.isEmpty, q.exception.toString)
-      } finally q.stop()
+    drive(MemoryStream[(Long, String, String, Long)],
+        partsOf(prefArr, (r: (Long, String, String, Long)) => r._1)) { in =>
+      Streams.preferencePairSink(
+        in.toDF("doc_id", "prompt", "response", "score").drop("doc_id"),
+        s"$work/pref/state", s"$work/pref/cp",
+        "prompt", "response", "score", trig = Streams.trigger(1),
+        onLoad = record("pref")).start()
     }
     val prefStreamed = Streams.preferencePairsOf(spark, s"$work/pref/state",
       "prompt", "response", "score")
@@ -297,17 +247,11 @@ object StreamStress {
         1, 15), 16, 10).cast("long").as("h"))
     val kmvArr = kmvCols.collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    locally {
-      val input = MemoryStream[(Long, String, Long)]
-      val q = Streams.kmvMergeSink(
-          input.toDF().toDF("doc_id", "key", "h").drop("doc_id"),
-          s"$work/kmv/state", s"$work/kmv/cp", Seq("key"), "h", 64,
-          trig = Streams.trigger(1), onLoad = record("kmv")).start()
-      try {
-        partsOf(kmvArr, (r: (Long, String, Long)) => r._1)
-          .foreach { b => input.addData(b: _*); q.processAllAvailable() }
-        require(q.exception.isEmpty, q.exception.toString)
-      } finally q.stop()
+    drive(MemoryStream[(Long, String, Long)],
+        partsOf(kmvArr, (r: (Long, String, Long)) => r._1)) { in =>
+      Streams.kmvMergeSink(in.toDF("doc_id", "key", "h").drop("doc_id"),
+        s"$work/kmv/state", s"$work/kmv/cp", Seq("key"), "h", 64,
+        trig = Streams.trigger(1), onLoad = record("kmv")).start()
     }
     def kmvMap(df: org.apache.spark.sql.DataFrame): Map[String, (Seq[Long], Long)] =
       df.collect().map(r => r.getAs[String]("key") ->
@@ -341,22 +285,14 @@ object StreamStress {
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getInt(2),
         r.getDouble(3), r.getString(4), r.getString(5)))
-    locally {
-      val input = MemoryStream[(Long, String, Int, Double, String, String)]
-      val q = Streams.erLinkSink(
-          input.toDF().toDF("rec_id", "name", "nationkey", "acctbal",
-            "segment", "src"),
-          s"$work/er/records", s"$work/er/links", s"$work/er/cp",
-          "rec_id", "name", "segment", "acctbal", Seq("nationkey"),
-          EntityResolution.customerNamePasses,
-          trig = Streams.trigger(1), onLoad = record("er")).start()
-      try {
-        (0 until nBatches).foreach { b =>
-          input.addData(erRows.filter(_._1 % nBatches == b).toSeq: _*)
-          q.processAllAvailable()
-        }
-        require(q.exception.isEmpty, q.exception.toString)
-      } finally q.stop()
+    drive(MemoryStream[(Long, String, Int, Double, String, String)],
+        (0 until nBatches).map(b => erRows.filter(_._1 % nBatches == b).toSeq)) { in =>
+      Streams.erLinkSink(
+        in.toDF("rec_id", "name", "nationkey", "acctbal", "segment", "src"),
+        s"$work/er/records", s"$work/er/links", s"$work/er/cp",
+        "rec_id", "name", "segment", "acctbal", Seq("nationkey"),
+        EntityResolution.customerNamePasses,
+        trig = Streams.trigger(1), onLoad = record("er")).start()
     }
     val erStreamedGolden = Streams.erGoldenState(spark, s"$work/er/records",
       s"$work/er/links", "rec_id", "name", "segment", "acctbal")
@@ -380,21 +316,13 @@ object StreamStress {
           .cast("float")).as("embedding")).localCheckpoint()
     val vecRows = vecDf.collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
-    locally {
-      val input = MemoryStream[(Long, Seq[Float])]
-      val q = Streams.gramMergeSink(
-          input.toDF().toDF("vec_id", "embedding")
-            .withColumn("corpus", lit("all")),
-          s"$work/gram/state", s"$work/gram/cp", Seq("corpus"),
-          "embedding", trig = Streams.trigger(1),
-          onLoad = record("gram")).start()
-      try {
-        (0 until nBatches).foreach { b =>
-          input.addData(vecRows.filter(_._1 % nBatches == b).toSeq: _*)
-          q.processAllAvailable()
-        }
-        require(q.exception.isEmpty, q.exception.toString)
-      } finally q.stop()
+    drive(MemoryStream[(Long, Seq[Float])],
+        (0 until nBatches).map(b => vecRows.filter(_._1 % nBatches == b).toSeq)) { in =>
+      Streams.gramMergeSink(
+        in.toDF("vec_id", "embedding").withColumn("corpus", lit("all")),
+        s"$work/gram/state", s"$work/gram/cp", Seq("corpus"),
+        "embedding", trig = Streams.trigger(1),
+        onLoad = record("gram")).start()
     }
     val pc1Streamed = Streams.pc1State(spark, s"$work/gram/state",
       Seq("corpus"), Seq("all")).collect().toSeq
@@ -413,19 +341,11 @@ object StreamStress {
           .otherwise(lit("base")).as("status"))
         .collect().map(r => (r.getLong(0), r.getString(1)))
     }
-    locally {
-      val input = MemoryStream[(Long, String)]
-      val q = Streams.snapshotDiffSink(
-          input.toDF().toDF("id", "status"),
-          s"$work/snap/state", s"$work/snap/changelog", s"$work/snap/cp",
-          Seq("id"), trig = Streams.trigger(1),
-          onLoad = record("snap")).start()
-      try {
-        snapRows.foreach { v =>
-          input.addData(v.toSeq: _*); q.processAllAvailable()
-        }
-        require(q.exception.isEmpty, q.exception.toString)
-      } finally q.stop()
+    drive(MemoryStream[(Long, String)], snapRows.map(_.toSeq)) { in =>
+      Streams.snapshotDiffSink(in.toDF("id", "status"),
+        s"$work/snap/state", s"$work/snap/changelog", s"$work/snap/cp",
+        Seq("id"), trig = Streams.trigger(1),
+        onLoad = record("snap")).start()
     }
     val snapChanges = (1 until nBatches).map { b =>
       spark.read.parquet(s"$work/snap/changelog/batch=$b").count()
@@ -438,23 +358,21 @@ object StreamStress {
     val (sftB, sftF) = dirSize(s"$work/sft/index")
     val (phB, phF) = dirSize(s"$work/phash/index")
     val (flB, flF) = dirSize(s"$work/flag/state")
-    println(
-      f"""{"metric":"stream_stress","docs":$nDocs,"batches":$nBatches,""" +
-      f""""sft_batch_secs":${jsonSecs("sft")},"sft_kept":$sftKept,""" +
-      f""""sft_index_bytes":$sftB,"sft_index_files":$sftF,""" +
-      f""""phash_batch_secs":${jsonSecs("phash")},"phash_kept":${phashKeptIds.size},""" +
-      f""""phash_index_bytes":$phB,"phash_index_files":$phF,""" +
-      f""""flagship_batch_secs":${jsonSecs("flagship")},""" +
-      f""""flagship_sampled":${stages("sampled")},"flagship_packs":${stages("batches")},""" +
-      f""""flagship_state_bytes":$flB,"flagship_state_files":$flF,""" +
-      f""""ml_batch_secs":${jsonSecs("ml")},"ml_kept":$mlKept,""" +
-      f""""pref_batch_secs":${jsonSecs("pref")},"pref_pairs":$prefN,""" +
-      f""""kmv_batch_secs":${jsonSecs("kmv")},"kmv_keys":${kmvStreamed.size},""" +
-      f""""er_batch_secs":${jsonSecs("er")},"er_entities":$erEntities,""" +
-      f""""gram_batch_secs":${jsonSecs("gram")},""" +
-      f""""snap_batch_secs":${jsonSecs("snap")},""" +
-      f""""snap_changelog_rows":${snapChanges.mkString("[", ",", "]")},""" +
-      f""""peak_heap_mb":${peakHeapMb()}}""")
+    Stress.report("stream_stress", "docs" -> nDocs, "batches" -> nBatches,
+      "sft_batch_secs" -> jsonSecs("sft"), "sft_kept" -> sftKept,
+      "sft_index_bytes" -> sftB, "sft_index_files" -> sftF,
+      "phash_batch_secs" -> jsonSecs("phash"), "phash_kept" -> phashKeptIds.size,
+      "phash_index_bytes" -> phB, "phash_index_files" -> phF,
+      "flagship_batch_secs" -> jsonSecs("flagship"),
+      "flagship_sampled" -> stages("sampled"), "flagship_packs" -> stages("batches"),
+      "flagship_state_bytes" -> flB, "flagship_state_files" -> flF,
+      "ml_batch_secs" -> jsonSecs("ml"), "ml_kept" -> mlKept,
+      "pref_batch_secs" -> jsonSecs("pref"), "pref_pairs" -> prefN,
+      "kmv_batch_secs" -> jsonSecs("kmv"), "kmv_keys" -> kmvStreamed.size,
+      "er_batch_secs" -> jsonSecs("er"), "er_entities" -> erEntities,
+      "gram_batch_secs" -> jsonSecs("gram"),
+      "snap_batch_secs" -> jsonSecs("snap"),
+      "snap_changelog_rows" -> snapChanges.mkString("[", ",", "]"))
     graft.core.AtomicSwap.deleteRecursively(new java.io.File(work))
     spark.stop()
   }

@@ -1,7 +1,8 @@
-package graft
+package graft.stress
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import Stress.timed
 
 /** sf1.0-scale stress harness for the heavy text operators (dev/bench
   * main, the [[SkewStress]] pattern): the driver testdata stops at
@@ -29,47 +30,9 @@ import org.apache.spark.sql.functions._
 object TextStress {
   def main(args: Array[String]): Unit = {
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_STRESS_TEXT_DOCS", "50000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Stress.session()
 
-    def peakHeapMb(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(_.getType == java.lang.management.MemoryType.HEAP)
-        .map(p => Option(p.getPeakUsage).map(_.getUsed).getOrElse(0L))
-        .sum / (1024 * 1024)
-    }
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-
-    // deterministic 100-token word salad per doc (stopwords included so
-    // the Gopher gate has real positives), a unique end marker per doc,
-    // and a shared 60-token boilerplate prefix on every 7th doc
-    val words = Seq("the", "be", "to", "of", "and", "that", "have",
-      "with", "table", "scan", "row", "filter", "vector", "sort",
-      "query", "fast", "group", "agg", "hash", "merge", "batch",
-      "value", "part", "spark", "line", "window", "key", "slow",
-      "plan", "join", "shuffle", "stage")
-    val vocab = array(words.map(lit): _*)
-    val boiler = Seq.tabulate(60)(k => words(k % words.size)).mkString(" ")
-    val body = concat_ws(" ",
-      transform(sequence(lit(0), lit(98)),
-        i => element_at(vocab,
-          pmod(hash(col("doc_id") * 101 + i), lit(words.size)) + 1)))
-    val docs = spark.range(0, nDocs).select(col("id").as("doc_id"))
-      .select(col("doc_id"),
-        concat(
-          when(col("doc_id") % 7 === 0, lit(boiler + " ")).otherwise(lit("")),
-          body, lit(" endmark"), col("doc_id").cast("string")).as("text"))
-      .localCheckpoint() // synthesis must not re-run per downstream pass
+    val (docs, boiler) = Stress.textCorpus(spark, nDocs)
 
     // ——— 1. variable-length exact-substring dedup at a 7k-doc hot span ———
     val (runAgg, runSec) = timed {
@@ -200,7 +163,10 @@ object TextStress {
     // base alphabet: a l p h b e t u x + 10 digits = 19; + </w> + 10 merges
     require(bpeVocab.length == 30, s"vocab size ${bpeVocab.length} != 30")
 
-    println(f"""{"metric":"text_stress","docs":$nDocs,"dup_runs_sec":$runSec%.1f,"funnel_model_sec":$funnelSec%.1f,"pretrain_pipeline_sec":$pipeSec%.1f,"sft_sec":$sftSec%.1f,"bpe_vocab":${nVocab + 2},"bpe_train_sec":$bpeSec%.1f,"bpe_rounds":${bpeRes.rounds},"peak_heap_mb":${peakHeapMb()}}""")
+    Stress.report("text_stress", "docs" -> nDocs, "dup_runs_sec" -> runSec,
+      "funnel_model_sec" -> funnelSec, "pretrain_pipeline_sec" -> pipeSec,
+      "sft_sec" -> sftSec, "bpe_vocab" -> (nVocab + 2),
+      "bpe_train_sec" -> bpeSec, "bpe_rounds" -> bpeRes.rounds)
     spark.stop()
   }
 }
