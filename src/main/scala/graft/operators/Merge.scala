@@ -49,23 +49,36 @@ object Merge {
 
   /** The 100 TB merge path: upsert `delta` into a parquet table
     * PARTITIONED by `partitionCol`, rewriting ONLY the partitions the
-    * delta touches.
+    * delta touches. Returns the delta's row count.
     *
-    *  1. the delta's distinct partition values (small — one row per
-    *     touched partition) drive both the base-side read (partition
-    *     pruning: untouched partitions are never scanned) and
+    *  1. ONE aggregate over the delta — its row count per partition
+    *     value (small — one row per touched partition) — gives both the
+    *     row count and the touched partitions, which drive the base-side
+    *     read (partition pruning: untouched partitions are never
+    *     scanned) and
     *  2. the write, under dynamic partition-overwrite mode, replaces
     *     only partitions present in the written data — untouched
     *     partition directories keep their files byte-for-byte.
+    *
+    * An empty delta is a no-op: the table is neither read nor written,
+    * so a table that does not exist yet is not created empty (a
+    * schema-less directory the next merge could not read).
+    *
+    * The delta is read by the aggregate and again by the write; a caller
+    * whose delta is expensive to re-derive (a streaming micro-batch)
+    * persists it first, as [[graft.streaming.Streams.partitionedMergeSink]]
+    * does.
     *
     * Cost is proportional to |delta ∪ touched-partition data|, not to
     * the table. This is the engine's answer to the reference's declared
     * `incremental_strategy: merge` without a transactional format. */
   def mergeIntoPartitioned(spark: SparkSession, basePath: String,
       delta: DataFrame, keys: Seq[String], version: Column,
-      partitionCol: String): Unit = {
-    val touched = delta.select(col(partitionCol)).distinct().collect()
-      .map(_.get(0)).toSeq
+      partitionCol: String): Long = {
+    val perPartition = delta.groupBy(col(partitionCol)).count().collect()
+    val rows = perPartition.map(_.getLong(1)).sum
+    if (rows == 0L) return 0L
+    val touched = perPartition.map(_.get(0)).toSeq
     val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try {
@@ -82,6 +95,7 @@ object Merge {
       val merged = latestWins(base, delta, keys, version)
       merged.write.mode(SaveMode.Overwrite)
         .partitionBy(partitionCol).parquet(basePath)
+      rows
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)

@@ -977,8 +977,9 @@ object Streams {
       if (fs.exists(target)) spark.read.parquet(path)
       else batch.limit(0)
     // one extra micro-batch-sized count for the LoadResult row tally
-    // (reference base.py:62-69) — batch is cached by the stream runner,
-    // never the 100 TB base table
+    // (reference base.py:62-69), never the 100 TB base table. The count
+    // and the write each run the batch's plan: [[mergeSink]] persists
+    // the micro-batch first so its source and state run once
     val incoming = batch.count()
     val merged = Merge.latestWins(base, batch, keys, col(versionCol))
     val tmp = new Path(path + "__new")
@@ -1822,7 +1823,11 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .trigger(trig)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        onLoad(mergeBatch(batch.sparkSession, batch, path, keys, versionCol))
+        // persist once: foreachBatch hands over an uncached frame, and
+        // the count and the write would each re-run its source and state
+        val cached = batch.persist()
+        try onLoad(mergeBatch(batch.sparkSession, cached, path, keys, versionCol))
+        finally cached.unpersist()
       }
 
   /** EXACTLY-ONCE streaming warehouse load over JDBC (the S8 streaming
@@ -1850,7 +1855,11 @@ object Streams {
   /** Streaming twin of [[graft.operators.Merge.mergeIntoPartitioned]]:
     * each micro-batch rewrites only the partitions it touches. This is
     * the sink a 100 TB fact table actually runs — per-batch cost scales
-    * with the delta, not the table. */
+    * with the delta, not the table. The batch is persisted once, so its
+    * source scan and any stateful step upstream (dedup state store) run
+    * once per trigger: the merge's planning aggregate materializes it,
+    * the write reads it back, and the aggregate's row count is the
+    * [[graft.core.LoadResult]] tally. */
   def partitionedMergeSink(stream: DataFrame, path: String,
       checkpoint: String, keys: Seq[String], versionCol: String,
       partitionCol: String,
@@ -1861,11 +1870,13 @@ object Streams {
       .trigger(trig)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val t0 = System.nanoTime()
-        val incoming = batch.count()
-        graft.operators.Merge.mergeIntoPartitioned(
-          batch.sparkSession, path, batch, keys, col(versionCol), partitionCol)
-        onLoad(LoadResult(success = true, rowsLoaded = incoming,
-          tableName = path, durationSeconds = (System.nanoTime() - t0) / 1e9))
+        val cached = batch.persist()
+        try {
+          val incoming = graft.operators.Merge.mergeIntoPartitioned(
+            batch.sparkSession, path, cached, keys, col(versionCol), partitionCol)
+          onLoad(LoadResult(success = true, rowsLoaded = incoming,
+            tableName = path, durationSeconds = (System.nanoTime() - t0) / 1e9))
+        } finally cached.unpersist()
       }
 
   /** Validated sink (Q7 at stream time): each micro-batch splits into

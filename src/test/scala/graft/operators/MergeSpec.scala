@@ -85,9 +85,26 @@ class MergeSpec extends AnyFunSuite with SparkSpec {
 
   test("mergeIntoPartitioned bootstraps an empty table") {
     val dir = Files.createTempDirectory("graft-merge0").toString + "/fact"
-    val delta = Seq((1L, "2024-01-01", "a", 1)).toDF("id", "dt", "v", "ver")
-    Merge.mergeIntoPartitioned(spark, dir, delta, Seq("id"), col("ver"), "dt")
-    assert(spark.read.parquet(dir).count() == 1)
+    def merge(rows: (Long, String, String, Int)*): Long =
+      Merge.mergeIntoPartitioned(spark, dir, rows.toDF("id", "dt", "v", "ver"),
+        Seq("id"), col("ver"), "dt")
+    // an empty delta into a table that does not exist yet creates nothing:
+    // an empty directory would have no schema for the next merge to read
+    assert(merge() == 0L)
+    assert(!Files.exists(Paths.get(dir)))
+    assert(merge((1L, "2024-01-01", "a", 1), (2L, "2024-01-02", "b", 1)) == 2L)
+    assert(spark.read.parquet(dir).count() == 2)
+
+    // an empty delta into an existing table touches no file
+    def files(): Map[String, java.nio.file.attribute.FileTime] =
+      Files.walk(Paths.get(dir)).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => f.toString -> Files.getLastModifiedTime(f)).toMap
+    val before = files()
+    assert(merge() == 0L)
+    assert(files() == before)
+    assert(merge((1L, "2024-01-01", "A", 2)) == 1L)
+    assert(spark.read.parquet(dir).select("id", "v").as[(Long, String)].collect()
+      .toMap == Map(1L -> "A", 2L -> "b"))
   }
 
   test("forgetKeys: deletes only listed keys, rewrites only touched partitions") {

@@ -86,8 +86,12 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
 
     val dir = Files.createTempDirectory("graft-stream").toString
     val input = MemoryStream[Sale]
+    // counts every evaluation of the micro-batch's plan, row by row
+    val evaluated = spark.sparkContext.longAccumulator("stream-rows")
+    val seen = udf { (id: Long) => evaluated.add(1); id }.asNondeterministic()
     val loads = scala.collection.mutable.ArrayBuffer.empty[graft.core.LoadResult]
-    val q = Streams.mergeSink(input.toDF(), s"$dir/fact", s"$dir/ckpt",
+    val q = Streams.mergeSink(
+      input.toDF().withColumn("orderId", seen(col("orderId"))), s"$dir/fact", s"$dir/ckpt",
       Seq("orderId"), "ts", Streams.trigger(1),
       onLoad = r => loads.synchronized { loads += r }).start()
     try {
@@ -112,6 +116,8 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
       assert(nonEmpty.map(_.rowsLoaded).sum == 5L, nonEmpty)
       assert(nonEmpty.forall(r => r.success && r.tableName == s"$dir/fact"))
       assert(nonEmpty.forall(_.durationSeconds > 0))
+      // the count and the write share one evaluation of each micro-batch
+      assert(evaluated.value == 5L)
     } finally q.stop()
   }
 
@@ -832,9 +838,15 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
 
     val dir = Files.createTempDirectory("graft-pstream").toString
     val input = MemoryStream[(Long, String, Double, Timestamp)]
+    // counts every evaluation of the micro-batch's plan, row by row
+    val evaluated = spark.sparkContext.longAccumulator("pstream-rows")
+    val seen = udf { (id: Long) => evaluated.add(1); id }.asNondeterministic()
     val stream = input.toDF().toDF("orderId", "dt", "amount", "ts")
+      .withColumn("orderId", seen(col("orderId")))
+    val loads = scala.collection.mutable.ArrayBuffer.empty[graft.core.LoadResult]
     val q = Streams.partitionedMergeSink(stream, s"$dir/fact", s"$dir/ckpt",
-      Seq("orderId"), "ts", "dt", Streams.trigger(1)).start()
+      Seq("orderId"), "ts", "dt", Streams.trigger(1),
+      onLoad = r => loads.synchronized { loads += r }).start()
     try {
       input.addData(
         (1L, "2024-01-01", 10.0, ts("2024-01-01 10:00:00")),
@@ -848,6 +860,9 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
         .select("orderId", "amount")
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
       assert(fact == Set((1L, 99.0), (2L, 20.0)))
+      // each micro-batch is evaluated once, not once per sink action
+      assert(evaluated.value == 3L)
+      assert(loads.map(_.rowsLoaded) == Seq(2L, 1L), loads)
     } finally q.stop()
   }
 

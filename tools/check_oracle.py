@@ -7,6 +7,9 @@ Reads each <verifyOutDir>/<name>/ parquet (written by graft.Verify), runs the
 matching SQL from oracle_sql.json in DuckDB with views over <sfDir>/*.parquet,
 and compares: row count, column names, and values (columns sorted by name,
 rows sorted by all columns, exact match + abs/rel tolerance report for floats).
+Each query listed in failed.json (graft.Verify's {name: message} of the
+queries that threw) fails with the first line of its message, whatever
+parquet its directory holds.
 
 Dev tool only — not part of the engine (driver-side python is allowed for
 tooling, not for the library).
@@ -37,9 +40,14 @@ def main(sf_dir, out_dir):
         name = os.path.basename(t).replace('.parquet', '')
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{t}')")
     oracle = json.load(open(os.path.join(out_dir, 'oracle_sql.json')))
+    failed_json = os.path.join(out_dir, 'failed.json')
+    failed = json.load(open(failed_json)) if os.path.exists(failed_json) else {}
     results = sorted(d for d in os.listdir(out_dir)
-                     if os.path.isdir(os.path.join(out_dir, d)))
+                     if os.path.isdir(os.path.join(out_dir, d)) and d not in failed)
     n_pass = n_fail = n_noracle = 0
+    for name in sorted(failed):
+        msg = (failed[name].splitlines() or [''])[0]
+        print(f"FAIL  {name}: {msg}"); n_fail += 1
     for name in results:
         got = load_result(os.path.join(out_dir, name))
         if got is None:
@@ -73,7 +81,7 @@ def main(sf_dir, out_dir):
             print(f"FAIL  {name}: " + "; ".join(bad)); n_fail += 1
         else:
             print(f"PASS  {name} ({len(g)} rows)"); n_pass += 1
-    missing = set(oracle) - set(results)
+    missing = set(oracle) - set(results) - set(failed)
     for m in sorted(missing):
         print(f"FAIL  {m}: oracle declared but no result dir"); n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_noracle} rows-only")
