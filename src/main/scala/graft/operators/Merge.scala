@@ -58,7 +58,12 @@ object Merge {
     *     scanned) and
     *  2. the write, under dynamic partition-overwrite mode, replaces
     *     only partitions present in the written data — untouched
-    *     partition directories keep their files byte-for-byte.
+    *     partition directories keep their files byte-for-byte. The
+    *     mode is a WRITER option, never the session setting: pipeline
+    *     tasks share one session concurrently, and a merge that
+    *     restored a session-wide setting mid-flight would flip another
+    *     merge's write to static mode, which deletes every partition
+    *     that write does not carry.
     *
     * An empty delta is a no-op: the table is neither read nor written,
     * so a table that does not exist yet is not created empty (a
@@ -79,29 +84,20 @@ object Merge {
     val rows = perPartition.map(_.getLong(1)).sum
     if (rows == 0L) return 0L
     val touched = perPartition.map(_.get(0)).toSeq
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // resolve by the path's own scheme — FileSystem.get(conf) returns
-      // the defaultFS client and throws on e.g. an s3a:// base path
-      val basePathP = new org.apache.hadoop.fs.Path(basePath)
-      val fs = basePathP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val exists = fs.exists(basePathP)
-      val base =
-        if (exists)
-          spark.read.parquet(basePath)
-            .filter(col(partitionCol).isin(touched: _*))
-        else delta.limit(0)
-      val merged = latestWins(base, delta, keys, version)
-      merged.write.mode(SaveMode.Overwrite)
-        .partitionBy(partitionCol).parquet(basePath)
-      rows
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
+    // resolve by the path's own scheme — FileSystem.get(conf) returns
+    // the defaultFS client and throws on e.g. an s3a:// base path
+    val basePathP = new org.apache.hadoop.fs.Path(basePath)
+    val fs = basePathP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val base =
+      if (fs.exists(basePathP))
+        spark.read.parquet(basePath)
+          .filter(col(partitionCol).isin(touched: _*))
+      else delta.limit(0)
+    latestWins(base, delta, keys, version)
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCol).parquet(basePath)
+    rows
   }
 
   /** Targeted key deletion from a partitioned parquet table — the
@@ -131,28 +127,20 @@ object Merge {
       .localCheckpoint()
     val touched = audit.select(col(partitionCol)).collect().map(_.get(0)).toSeq
     if (touched.nonEmpty) {
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        val kept = base.filter(col(partitionCol).isin(touched: _*))
-          .join(broadcast(keys), Seq(keyCol), "left_anti")
-          // materialize before the overwrite replaces the files it reads
-          .localCheckpoint()
-        kept.write.mode(SaveMode.Overwrite)
-          .partitionBy(partitionCol).parquet(basePath)
-        val keptParts = kept.select(col(partitionCol)).distinct()
-          .collect().map(_.get(0)).toSet
-        val basePathP = new org.apache.hadoop.fs.Path(basePath)
-        val fs = basePathP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        touched.filterNot(keptParts).foreach { p =>
-          fs.delete(new org.apache.hadoop.fs.Path(basePathP,
-            s"$partitionCol=$p"), true)
-        }
-      } finally {
-        prev match {
-          case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
+      val kept = base.filter(col(partitionCol).isin(touched: _*))
+        .join(broadcast(keys), Seq(keyCol), "left_anti")
+        // materialize before the overwrite replaces the files it reads
+        .localCheckpoint()
+      kept.write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partitionCol).parquet(basePath)
+      val keptParts = kept.select(col(partitionCol)).distinct()
+        .collect().map(_.get(0)).toSet
+      val basePathP = new org.apache.hadoop.fs.Path(basePath)
+      val fs = basePathP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      touched.filterNot(keptParts).foreach { p =>
+        fs.delete(new org.apache.hadoop.fs.Path(basePathP,
+          s"$partitionCol=$p"), true)
       }
     }
     audit
@@ -213,8 +201,9 @@ object Merge {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val target = new org.apache.hadoop.fs.Path(root, s"version=$upTo")
-    val tmp = new org.apache.hadoop.fs.Path(root, s"_compact_$upTo" + "__new")
-    val backup = new org.apache.hadoop.fs.Path(root, s"_compact_$upTo" + "__old")
+    val scratch = new org.apache.hadoop.fs.Path(root, s"_compact_$upTo")
+    val tmp = graft.core.AtomicSwap.sidePath(scratch)
+    val backup = graft.core.AtomicSwap.backupPath(scratch)
     graft.core.AtomicSwap.heal(fs, target, backup)
     // a stale tmp from a crashed run is fully replaced (Overwrite), and
     // was invisible to the readAsOf above (underscore prefix).

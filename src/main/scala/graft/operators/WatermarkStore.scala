@@ -24,7 +24,6 @@ class WatermarkStore(spark: SparkSession, path: String) {
   import org.apache.hadoop.fs.Path
 
   private val target = new Path(path)
-  private val backup = new Path(path + "__old")
   private def fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def readAll(): DataFrame = {
@@ -32,7 +31,7 @@ class WatermarkStore(spark: SparkSession, path: String) {
       .toDF("source_id", "table_name", "last_processed_timestamp")
     // heal OUTSIDE the read's defensive catch: a failed heal rename is
     // an FS error that must surface, not be masked as "no watermarks"
-    graft.core.AtomicSwap.heal(fs, target, backup)
+    graft.core.AtomicSwap.heal(fs, target)
     // probe BEFORE reading: a first-run store legitimately doesn't
     // exist, and an expected PATH_NOT_FOUND analysis failure would be
     // cached on the QueryExecution and rethrown later by Spark's own
@@ -67,9 +66,9 @@ class WatermarkStore(spark: SparkSession, path: String) {
     // live path deletes it before writing, so a crash mid-write would
     // drop the whole store (readAll's catch would mask it as "no
     // watermarks")
-    val tmp = new Path(path + "__new")
-    merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    graft.core.AtomicSwap.publish(fs, target, tmp, backup)
+    graft.core.AtomicSwap.replace(fs, target) { side =>
+      merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(side.toString)
+    }
   }
 
   /** Earliest watermark across a source's tables — the consistent

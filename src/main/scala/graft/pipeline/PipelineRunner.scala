@@ -273,26 +273,35 @@ class PipelineRunner(
     }
   }
 
-  /** dbt-style model tests (SURVEY §2.6 T4–T6), each ONE aggregate or
-    * left-anti join — never a row fetch. */
-  private def runModelTests(t: TransformationSpec, df: DataFrame): Seq[String] =
+  /** dbt-style model tests (SURVEY §2.6 T4–T6), never a row fetch: a
+    * model's `unique` and `not_null` tests are counted by ONE fused
+    * validator aggregate ([[graft.validation.Validator.countsFrame]]);
+    * `relationships` is a left-anti join. */
+  private def runModelTests(t: TransformationSpec, df: DataFrame): Seq[String] = {
+    def colsOf(kind: String) =
+      t.tests.filter(_.kind == kind).flatMap(_.columns).distinct
+    val schema = graft.core.TableSchema(table = t.modelName,
+      columns = Seq.empty, requiredColumns = colsOf("not_null"),
+      uniqueColumns = colsOf("unique"))
+    // the validator skips absent columns; a test naming one fails the task
+    val absent = (schema.requiredColumns ++ schema.uniqueColumns).distinct
+      .filterNot(df.columns.contains)
+    require(absent.isEmpty,
+      s"model ${t.modelName} has no column ${absent.mkString(", ")}")
+    lazy val counts =
+      graft.validation.Validator.countsFrame(df, schema, Seq.empty).head()
+    // a sum over zero rows is NULL: no rows, no violations
+    def violations(field: String): Long =
+      if (counts.isNullAt(counts.fieldIndex(field))) 0L
+      else counts.getAs[Long](field)
     t.tests.flatMap {
       case ModelTest("unique", cols, _, _) =>
-        // fused: count - countDistinct per column in one job
-        val aggs = cols.map(c =>
-          (count(col(c)) - countDistinct(col(c))).as(c))
-        val row = df.agg(aggs.head, aggs.tail: _*).head()
-        cols.zipWithIndex.collect {
-          case (c, i) if row.getLong(i) > 0 =>
-            s"unique($c): ${row.getLong(i)} duplicates"
+        cols.map(c => c -> violations(s"duplicate_values__$c")).collect {
+          case (c, n) if n > 0 => s"unique($c): $n duplicates"
         }
       case ModelTest("not_null", cols, _, _) =>
-        val aggs = cols.map(c =>
-          (count(lit(1)) - count(col(c))).as(c))
-        val row = df.agg(aggs.head, aggs.tail: _*).head()
-        cols.zipWithIndex.collect {
-          case (c, i) if row.getLong(i) > 0 =>
-            s"not_null($c): ${row.getLong(i)} nulls"
+        cols.map(c => c -> violations(s"null_violations__$c")).collect {
+          case (c, n) if n > 0 => s"not_null($c): $n nulls"
         }
       case ModelTest("relationships", _, Some(to), Some(field)) =>
         // ref('staging_customers') → the built model; orphans via
@@ -306,21 +315,25 @@ class PipelineRunner(
         else Nil
       case other => Seq(s"unknown test kind: ${other.kind}")
     }
+  }
 
   /** Target validations (SURVEY §2.7 Q1–Q4) against built tables. */
   private def runTargetChecks(tg: TargetSpec): Seq[String] = {
     val df = built.getOrElse(tg.tableName, spark.table(tg.tableName))
+    val tsCol = tg.maxAgeHours.flatMap(_ => df.schema.fields.find(f =>
+      f.dataType == org.apache.spark.sql.types.TimestampType)).map(_.name)
+    // one aggregate for the row-count floor and the freshness max
+    val aggs = tg.minRowCount.map(_ => count(lit(1)).as("n")).toSeq ++
+      tsCol.map(c => max(col(c)).as("newest"))
+    lazy val stats = df.agg(aggs.head, aggs.tail: _*).head()
     val minRow = tg.minRowCount.flatMap { n =>
-      val c = df.count()
+      val c = stats.getAs[Long]("n")
       if (c < n) Some(s"min_row_count: $c < $n") else None
     }
-    val freshness = tg.maxAgeHours.flatMap { h =>
-      df.schema.fields.find(f =>
-        f.dataType == org.apache.spark.sql.types.TimestampType).flatMap { f =>
-        val newest = df.agg(max(col(f.name))).head().getTimestamp(0)
-        val ageH = (asOf.getTime - newest.getTime) / 3600000.0
-        if (ageH > h) Some(f"max_age_hours: ${ageH}%.1f h > $h h") else None
-      }
+    val freshness = tg.maxAgeHours.zip(tsCol).flatMap { case (h, _) =>
+      val newest = stats.getAs[java.sql.Timestamp]("newest")
+      val ageH = (asOf.getTime - newest.getTime) / 3600000.0
+      if (ageH > h) Some(f"max_age_hours: ${ageH}%.1f h > $h h") else None
     }
     val customs = tg.customChecks.flatMap { c =>
       val res = spark.sql(c.query)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.LoadResult
+import graft.core.{AtomicSwap, LoadResult}
 import graft.operators.Merge
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryListener, Trigger}
@@ -15,6 +15,23 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * foreachBatch`, with checkpoints replacing `MetadataStore` and triggers
   * replacing poll intervals. These builders keep every step declarative
   * so the same transformations run batch or streaming.
+  *
+  * Sink state contract. A checkpointed stream may re-run a micro-batch
+  * after a crash (its writes landed, its checkpoint commit did not), so
+  * every sink's write for a batch id is idempotent: a replay changes
+  * nothing. The accumulate-by-batch sinks keep their state as one
+  * `batch=<id>` directory per micro-batch ([[BatchDirs]]):
+  *  - committed probe: a batch directory counts as state once its write
+  *    published `_SUCCESS`; `_temporary` debris does not;
+  *  - restart guard: batch ids restart at 0 when the checkpoint is lost,
+  *    so batch 0 fails loudly while a committed batch with a larger id
+  *    exists, instead of overwriting the oldest data;
+  *  - own-batch exclusion: state reads leave out the batch's own earlier
+  *    attempt, so a replay equals a fresh run;
+  *  - idempotent write: each batch overwrites its own `batch=<id>`.
+  * Whole-table state (the merge and fold sinks) is replaced through
+  * [[graft.core.AtomicSwap.replace]], with the last applied batch id as
+  * a marker inside the table, so a replayed fold is skipped.
   */
 object Streams {
 
@@ -99,54 +116,24 @@ object Streams {
       shingleSize: Int = 5, threshold: Double = 0.8, bands: Int = 16,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trig)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
         import graft.dedup.Dedup
         val t0 = System.nanoTime()
         val spark = batch.sparkSession
-        val conf = spark.sparkContext.hadoopConfiguration
-        // "index exists" = at least one COMMITTED batch directory — a
-        // crash that left only _temporary files must look like a fresh
-        // start so the overwrite below can heal it, not a readable
-        // index (schema inference over uncommitted dirs would fail
-        // every replay forever)
-        val indexFs = new Path(indexPath).getFileSystem(conf)
-        val committed = indexFs
-          .globStatus(new Path(indexPath, "batch=*/_SUCCESS"))
-        val hasIndex = committed != null && committed.nonEmpty
-        // batchIds restart at 0 when the CHECKPOINT is lost; blindly
-        // overwriting batch=0 would then destroy the oldest accumulated
-        // data and its dedup state. Fail loudly instead: the operator
-        // restores the checkpoint or points at a fresh corpus/index.
-        // (A genuine replay of batch 0 — crash during the very first
-        // batch — has no OTHER committed batches and passes.)
-        if (batchId == 0 && hasIndex &&
-            committed.exists(s => s.getPath.getParent.getName != "batch=0"))
-          throw new IllegalStateException(
-            s"nearDupDedupSink: batchId restarted at 0 but $indexPath " +
-            "already holds committed batches — the checkpoint was lost. " +
-            "Restore it, or start a fresh corpus/index path.")
+        BatchDirs.guardRestart(spark, "nearDupDedupSink", indexPath, batchId)
         val newSigs = Dedup
           .minhashSignatures(batch, idCol, textCol, shingleSize)
           .localCheckpoint()
-        // exclude this batch's OWN prior attempt so a crash-replay is
-        // equivalent to a fresh run (prior-attempt survivors must not
-        // masquerade as foreign indexed records — same rule as the
-        // sibling sinks; the signatures are deterministic so this only
-        // changes which greedy direction a replay takes, never the set)
-        val indexSigs =
-          if (hasIndex)
-            spark.read.parquet(indexPath)
-              .filter(col("batch") =!= batchId)
-              .select(col(idCol), col("sig"))
-          else newSigs.limit(0)
+        // the signatures are deterministic, so leaving out this batch's
+        // own prior attempt only changes which greedy direction a replay
+        // takes, never the set
+        val indexed = BatchDirs.read(spark, indexPath, batchId)
+        val indexSigs = indexed.map(_.select(col(idCol), col("sig")))
+          .getOrElse(newSigs.limit(0))
         val cands = Dedup.incrementalCandidatePairs(newSigs, indexSigs,
           idCol, bands).localCheckpoint()
-        val corpus =
-          if (!hasIndex) batch
-          else {
+        val oldCorpus = indexed.flatMap(_ => BatchDirs.read(spark, corpusPath, batchId))
+        val corpus = oldCorpus.fold(batch) { old =>
             // candidate ids are batch-bounded (LSH collisions of ONE
             // increment): push them into the corpus read as an In filter
             // so parquet row-group stats skip everything else —
@@ -158,14 +145,13 @@ object Streams {
               .select(col("id_a").as(idCol))
               .unionByName(cands.select(col("id_b").as(idCol)))
               .distinct().limit(100001).collect()
-            val old = spark.read.parquet(corpusPath)
-              .filter(col("batch") =!= batchId) // replay: own prior attempt is not "old"
-              .select(batch.columns.toIndexedSeq.map(col): _*)
+            val oldDocs = old.select(batch.columns.toIndexedSeq.map(col): _*)
             if (candIdProbe.isEmpty) batch
             else if (candIdProbe.length <= 100000)
               batch.unionByName(
-                old.filter(col(idCol).isInCollection(candIdProbe.map(_.get(0)).toSeq)))
-            else batch.unionByName(old)
+                oldDocs.filter(
+                  col(idCol).isInCollection(candIdProbe.map(_.get(0)).toSeq)))
+            else batch.unionByName(oldDocs)
           }
         val pairs = Dedup.verifyJaccard(corpus, cands, idCol, textCol,
           shingleSize, threshold)
@@ -185,14 +171,9 @@ object Streams {
           .localCheckpoint()
         val keptN = kept.count()
         val dropped = batch.count() - keptN
-        // idempotent replay: every batch owns a batch=<id> subdirectory
-        // written with overwrite — a post-crash re-run of the same
-        // batchId REPLACES its output instead of appending duplicates.
-        // (Readers see batch= as a partition column; the reads above
-        // project it away.)
-        kept.write.mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
-        newSigs.join(broadcast(drops), Seq(idCol), "left_anti")
-          .write.mode("overwrite").parquet(s"$indexPath/batch=$batchId")
+        BatchDirs.write(kept, corpusPath, batchId)
+        BatchDirs.write(newSigs.join(broadcast(drops), Seq(idCol), "left_anti"),
+          indexPath, batchId)
         onLoad(LoadResult(success = true, rowsLoaded = keptN,
           tableName = corpusPath,
           durationSeconds = (System.nanoTime() - t0) / 1e9,
@@ -210,31 +191,18 @@ object Streams {
     * batch (lowest id), then against the persisted key index. Kept
     * conversations (with their assistant-token counts) land
     * `corpusPath/batch=<id>`; their keys append `indexPath/batch=<id>`.
-    * Same idempotent overwrite, restart guard, and compaction contract
-    * as the sibling sinks; per-stage drops ride the LoadResult as
-    * `invalid=<n>;dup=<n>`. */
+    * Follows the sink state contract (see [[Streams]]) and is
+    * compactable by [[compactBatchOutput]]; per-stage drops ride the
+    * LoadResult as `invalid=<n>;dup=<n>`. */
   def sftPrepSink(stream: DataFrame, corpusPath: String,
       indexPath: String, checkpoint: String, idCol: String, convCol: String,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trig)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
         import graft.text.Sft
         val t0 = System.nanoTime()
         val spark = batch.sparkSession
-        val conf = spark.sparkContext.hadoopConfiguration
-        val indexFs = new Path(indexPath).getFileSystem(conf)
-        val committed = indexFs
-          .globStatus(new Path(indexPath, "batch=*/_SUCCESS"))
-        val hasIndex = committed != null && committed.nonEmpty
-        if (batchId == 0 && hasIndex &&
-            committed.exists(s => s.getPath.getParent.getName != "batch=0"))
-          throw new IllegalStateException(
-            s"sftPrepSink: batchId restarted at 0 but $indexPath " +
-            "already holds committed batches — the checkpoint was lost. " +
-            "Restore it, or start a fresh corpus/index path.")
+        BatchDirs.guardRestart(spark, "sftPrepSink", indexPath, batchId)
         val total = batch.count()
         if (total > 0) {
           val turns = Sft.parseTurns(batch.select(col(idCol), col(convCol)),
@@ -247,26 +215,19 @@ object Streams {
           val validTurns = turns.join(valid.select(col("doc_id")),
             Seq("doc_id"), "left_semi")
           // response keys of the batch's VALID transcripts; in-batch
-          // first-wins, then anti-join the persisted key index (its
-          // own prior attempt excluded — the replay rule the funnel
-          // sink documents)
+          // first-wins, then anti-join the persisted key index
           val keys = Sft.dedupByAssistant(validTurns)
             .select(col("doc_id"), col("assistant_md5"))
-          val indexed =
-            if (hasIndex)
-              spark.read.parquet(indexPath)
-                .filter(col("batch") =!= batchId)
-                .select(col("assistant_md5"))
-            else keys.select(col("assistant_md5")).limit(0)
+          val indexed = BatchDirs.read(spark, indexPath, batchId)
+            .getOrElse(keys.limit(0)).select(col("assistant_md5"))
           val kept = keys.join(indexed, Seq("assistant_md5"), "left_anti")
             .join(valid, Seq("doc_id"))
             .join(batch.withColumnRenamed(idCol, "doc_id"), Seq("doc_id"))
             .localCheckpoint()
           val keptN = kept.count()
-          kept.drop("assistant_md5")
-            .write.mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
-          kept.select(col("doc_id"), col("assistant_md5"))
-            .write.mode("overwrite").parquet(s"$indexPath/batch=$batchId")
+          BatchDirs.write(kept.drop("assistant_md5"), corpusPath, batchId)
+          BatchDirs.write(kept.select(col("doc_id"), col("assistant_md5")),
+            indexPath, batchId)
           onLoad(LoadResult(success = true, rowsLoaded = keptN,
             tableName = corpusPath,
             durationSeconds = (System.nanoTime() - t0) / 1e9,
@@ -293,35 +254,21 @@ object Streams {
     * table, never the media bytes, the same slim-index contract as the
     * text sink's signature index. Kept records land
     * `corpusPath/batch=<id>`, their hashes append
-    * `indexPath/batch=<id>`; idempotent overwrite per batch, the
-    * shared checkpoint-loss restart guard, compactable by
-    * [[compactBatchOutput]]. Record ids must be globally unique across
-    * the stream's lifetime (the sink contract shared with
-    * [[nearDupDedupSink]]). */
+    * `indexPath/batch=<id>` under the sink state contract (see
+    * [[Streams]]), compactable by [[compactBatchOutput]]. Record ids
+    * must be globally unique across the stream's lifetime (the sink
+    * contract shared with [[nearDupDedupSink]]). */
   def phashDedupSink(stream: DataFrame, corpusPath: String,
       indexPath: String, checkpoint: String, idCol: String,
       payloadCol: String, maxHamming: Int = 3,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trig)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
         import graft.multimodal.{MediaRecord, Multimodal}
         val t0 = System.nanoTime()
         val spark = batch.sparkSession
         import spark.implicits._
-        val conf = spark.sparkContext.hadoopConfiguration
-        val indexFs = new Path(indexPath).getFileSystem(conf)
-        val committed = indexFs
-          .globStatus(new Path(indexPath, "batch=*/_SUCCESS"))
-        val hasIndex = committed != null && committed.nonEmpty
-        if (batchId == 0 && hasIndex &&
-            committed.exists(s => s.getPath.getParent.getName != "batch=0"))
-          throw new IllegalStateException(
-            s"phashDedupSink: batchId restarted at 0 but $indexPath " +
-            "already holds committed batches — the checkpoint was lost. " +
-            "Restore it, or start a fresh corpus/index path.")
+        BatchDirs.guardRestart(spark, "phashDedupSink", indexPath, batchId)
         val media = batch.select(col(idCol).cast("long").as("doc_id"),
             col(payloadCol).as("payload"),
             lit("media").as("modality"), lit("bin").as("format"))
@@ -329,19 +276,14 @@ object Streams {
         val newHashes = Multimodal.perceptualHashes(media).toDF()
           .select(col("doc_id").as(idCol), col("dhash"))
           .localCheckpoint()
-        // exclude this batch's OWN prior attempt (crash-replay): unlike
-        // the text sink's minhash — a pure content hash — the perceptual
-        // hash can drift across JVM/ImageIO versions between attempts,
-        // and a prior-attempt hash treated as a FOREIGN indexed record
-        // would make the replay drop the wrong side of a pair. Filtering
-        // batch=<id> makes replay equivalent to a fresh run regardless
-        // of recomputation drift (same rule as sftPrepSink).
-        val indexHashes =
-          if (hasIndex)
-            spark.read.parquet(indexPath)
-              .filter(col("batch") =!= batchId)
-              .select(col(idCol), col("dhash"))
-          else newHashes.limit(0)
+        // own-attempt exclusion matters more here than for the text
+        // sink's minhash: the perceptual hash can drift across
+        // JVM/ImageIO versions between attempts, and a prior-attempt hash
+        // treated as a FOREIGN indexed record would make the replay drop
+        // the wrong side of a pair
+        val indexHashes = BatchDirs.read(spark, indexPath, batchId)
+          .map(_.select(col(idCol), col("dhash")))
+          .getOrElse(newHashes.limit(0))
         val pairs = Multimodal.imageNearDuplicates(
           newHashes.unionByName(indexHashes), idCol, "dhash", maxHamming)
         // canonical id_a < id_b, every pair involves ≥ 1 new record
@@ -367,9 +309,9 @@ object Streams {
           .localCheckpoint()
         val keptN = kept.count()
         val dropped = batch.count() - keptN
-        kept.write.mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
-        newHashes.join(broadcast(drops), Seq(idCol), "left_anti")
-          .write.mode("overwrite").parquet(s"$indexPath/batch=$batchId")
+        BatchDirs.write(kept, corpusPath, batchId)
+        BatchDirs.write(newHashes.join(broadcast(drops), Seq(idCol), "left_anti"),
+          indexPath, batchId)
         onLoad(LoadResult(success = true, rowsLoaded = keptN,
           tableName = corpusPath,
           durationSeconds = (System.nanoTime() - t0) / 1e9,
@@ -391,11 +333,9 @@ object Streams {
     *
     * Survivors land in `corpusPath/batch=<id>` with their cleaned
     * text; their fingerprints append to `indexPath/batch=<id>`. Both
-    * are written with overwrite so a replayed batchId REPLACES its
-    * output (idempotent), both are compactable by
-    * [[compactBatchOutput]], and checkpoint loss is detected — not
-    * silently destructive — by the same restart guard as the near-dup
-    * sink. Empty micro-batches skip the write (no directory mint).
+    * follow the sink state contract (see [[Streams]]) and are
+    * compactable by [[compactBatchOutput]]. Empty micro-batches skip
+    * the write (no directory mint).
     *
     * Per-stage drop counts ride the LoadResult errorMessage as
     * `gopher=<n>;c4=<n>;dup=<n>`; every count is one micro-batch-sized
@@ -408,27 +348,11 @@ object Streams {
       htmlExtract: Boolean = false,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trig)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
         import graft.text.Curation
         val t0 = System.nanoTime()
         val spark = batch.sparkSession
-        val conf = spark.sparkContext.hadoopConfiguration
-        val indexFs = new Path(indexPath).getFileSystem(conf)
-        val committed = indexFs
-          .globStatus(new Path(indexPath, "batch=*/_SUCCESS"))
-        val hasIndex = committed != null && committed.nonEmpty
-        // batchIds restart at 0 when the CHECKPOINT is lost; overwriting
-        // batch=0 would destroy the oldest survivors and their dedup
-        // state (same failure mode and guard as nearDupDedupSink)
-        if (batchId == 0 && hasIndex &&
-            committed.exists(s => s.getPath.getParent.getName != "batch=0"))
-          throw new IllegalStateException(
-            s"curationFunnelSink: batchId restarted at 0 but $indexPath " +
-            "already holds committed batches — the checkpoint was lost. " +
-            "Restore it, or start a fresh corpus/index path.")
+        BatchDirs.guardRestart(spark, "curationFunnelSink", indexPath, batchId)
         val total = batch.count()
         if (total > 0) {
           // optional stage 0 (raw-crawl inputs): HTML → text extraction
@@ -474,25 +398,15 @@ object Streams {
           // first-wins within the batch: lowest id per cleaned content
           val firsts = fp.groupBy(col("__fp")).agg(min(col(idCol)).as(idCol))
           val inBatch = fp.join(firsts, Seq("__fp", idCol), "left_semi")
-          val indexed =
-            if (hasIndex)
-              spark.read.parquet(indexPath)
-                // a REPLAYED batch (crash after the index write, before
-                // the checkpoint commit) must not dedup against its OWN
-                // committed fingerprints — that would empty the batch
-                // and the overwrite below would erase its survivors
-                // permanently. The batch=<id> partition column scopes
-                // the exclusion to exactly this batch's prior attempt.
-                .filter(col("batch") =!= batchId)
-                .select(col("fp").as("__fp"))
-            else fp.select(col("__fp")).limit(0)
+          val indexed = BatchDirs.read(spark, indexPath, batchId)
+            .map(_.select(col("fp").as("__fp")))
+            .getOrElse(fp.select(col("__fp")).limit(0))
           val kept = inBatch.join(indexed, Seq("__fp"), "left_anti")
             .localCheckpoint()
           val keptN = kept.count()
-          kept.drop("__fp")
-            .write.mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
-          kept.select(col(idCol), col("__fp").as("fp"))
-            .write.mode("overwrite").parquet(s"$indexPath/batch=$batchId")
+          BatchDirs.write(kept.drop("__fp"), corpusPath, batchId)
+          BatchDirs.write(kept.select(col(idCol), col("__fp").as("fp")),
+            indexPath, batchId)
           onLoad(LoadResult(success = true, rowsLoaded = keptN,
             tableName = corpusPath,
             durationSeconds = (System.nanoTime() - t0) / 1e9,
@@ -545,10 +459,9 @@ object Streams {
     *
     * State is ALL parquet under `workDir` (fingerprints, signatures,
     * survivor texts, per-source offsets, per-batch stage counts), one
-    * `batch=<id>` overwrite-partition per micro-batch — the idempotent
-    * replay, own-batch-exclusion, and checkpoint-loss-guard contracts
-    * of every sibling sink. Per-batch cost ∝ the increment (plus the
-    * candidate-pruned corpus read the near stage shares with
+    * `batch=<id>` overwrite-partition per micro-batch under the sink
+    * state contract (see [[Streams]]). Per-batch cost ∝ the increment
+    * (plus the candidate-pruned corpus read the near stage shares with
     * [[nearDupDedupSink]]); nothing history-sized is ever recomputed. */
   def pretrainPipelineSink(stream: DataFrame, workDir: String,
       checkpoint: String, idCol: String, sourceCol: String, textCol: String,
@@ -565,40 +478,22 @@ object Streams {
       htmlExtract: Boolean = false,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trig)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
         import graft.dedup.Dedup
         import graft.text.{Boilerplate, Curation, QualityClassifier, TextFunctions}
         val t0 = System.nanoTime()
         val spark = batch.sparkSession
-        val conf = spark.sparkContext.hadoopConfiguration
         val fpPath = s"$workDir/fpIndex"
         val sigPath = s"$workDir/sigIndex"
         val dcPath = s"$workDir/dedupCorpus"
         val offPath = s"$workDir/offsets"
-        val fpFs = new Path(fpPath).getFileSystem(conf)
-        val committed = fpFs.globStatus(new Path(fpPath, "batch=*/_SUCCESS"))
-        val hasState = committed != null && committed.nonEmpty
-        if (batchId == 0 && hasState &&
-            committed.exists(s => s.getPath.getParent.getName != "batch=0"))
-          throw new IllegalStateException(
-            s"pretrainPipelineSink: batchId restarted at 0 but $fpPath " +
-            "already holds committed batches — the checkpoint was lost. " +
-            "Restore it, or start a fresh workDir.")
+        BatchDirs.guardRestart(spark, "pretrainPipelineSink", fpPath, batchId)
         // one committed-batch probe per state directory: fpIndex commits
         // LAST in the write order below, so its presence implies every
         // earlier directory's batch committed too — but each read still
         // tolerates an absent sibling (first batch, or crash mid-write)
-        def stateRead(path: String, cols: Seq[String]): Option[DataFrame] = {
-          val fs = new Path(path).getFileSystem(conf)
-          val ok = fs.globStatus(new Path(path, "batch=*/_SUCCESS"))
-          if (ok == null || ok.isEmpty) None
-          else Some(spark.read.parquet(path)
-            .filter(col("batch") =!= batchId) // own prior attempt ≠ state
-            .select(cols.map(col): _*))
-        }
+        def stateRead(path: String, cols: Seq[String]): Option[DataFrame] =
+          BatchDirs.read(spark, path, batchId).map(_.select(cols.map(col): _*))
         val total = batch.count()
         if (total > 0) {
           // ——— map-side gates (stages 1–5), one scan computes all flags
@@ -727,14 +622,13 @@ object Streams {
               col("pack_batch"))
             .localCheckpoint()
           // ——— state + output writes; fpIndex LAST (the state probe key)
-          packed.write.mode("overwrite").parquet(s"$workDir/corpus/batch=$batchId")
-          packed.groupBy(col(sourceCol)).agg(sum(col("n_tokens")).as("tokens"))
-            .write.mode("overwrite").parquet(s"$offPath/batch=$batchId")
-          nearKept.select(col(idCol), col("clean"))
-            .write.mode("overwrite").parquet(s"$dcPath/batch=$batchId")
-          newSigs.join(broadcast(drops), Seq(idCol), "left_anti")
-            .select(col(idCol), col("sig"))
-            .write.mode("overwrite").parquet(s"$sigPath/batch=$batchId")
+          BatchDirs.write(packed, s"$workDir/corpus", batchId)
+          BatchDirs.write(
+            packed.groupBy(col(sourceCol)).agg(sum(col("n_tokens")).as("tokens")),
+            offPath, batchId)
+          BatchDirs.write(nearKept.select(col(idCol), col("clean")), dcPath, batchId)
+          BatchDirs.write(newSigs.join(broadcast(drops), Seq(idCol), "left_anti")
+            .select(col(idCol), col("sig")), sigPath, batchId)
           val stages = Seq(
             (0, "total", total), (1, "blocklist", head.getLong(0)),
             (2, "lang", head.getLong(1)), (3, "gopher", head.getLong(2)),
@@ -743,11 +637,9 @@ object Streams {
             (8, "decontaminated", dN), (9, "decon_near", dnN),
             (10, "sampled", sN))
           import spark.implicits._
-          stages.toDF("stage_idx", "stage", "n_docs")
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$workDir/stats/batch=$batchId")
-          exactKept.select(col("__fp").as("fp"))
-            .write.mode("overwrite").parquet(s"$fpPath/batch=$batchId")
+          BatchDirs.write(stages.toDF("stage_idx", "stage", "n_docs").coalesce(1),
+            s"$workDir/stats", batchId)
+          BatchDirs.write(exactKept.select(col("__fp").as("fp")), fpPath, batchId)
           onLoad(LoadResult(success = true, rowsLoaded = sN,
             tableName = s"$workDir/corpus",
             durationSeconds = (System.nanoTime() - t0) / 1e9,
@@ -795,11 +687,10 @@ object Streams {
     * ([[graft.text.Curation.routedCurationFlags]] — one codegen'd CASE
     * chain, map-side), and the gate survivors exact-dedup on content:
     * first-wins (lowest id) within the batch, then an anti-join
-    * against the persisted fingerprint index — the
-    * [[curationFunnelSink]] state contract (idempotent batch=<id>
-    * overwrite, own-batch replay exclusion, checkpoint-loss guard,
-    * compactable). Survivors land `corpusPath/batch=<id>` with their
-    * `route_lang`; fingerprints append `indexPath/batch=<id>`.
+    * against the persisted fingerprint index, under the sink state
+    * contract (see [[Streams]]; compactable). Survivors land
+    * `corpusPath/batch=<id>` with their `route_lang`; fingerprints
+    * append `indexPath/batch=<id>`.
     * Per-stage drops ride the LoadResult as
     * `unrouted=<n>;gated=<n>;dup=<n>`. Docs whose detected language
     * has no committed route drop at routing (a production deployment
@@ -809,24 +700,11 @@ object Streams {
       routes: Seq[graft.text.Curation.LangRoute],
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trig)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
         import graft.text.Curation
         val t0 = System.nanoTime()
         val spark = batch.sparkSession
-        val conf = spark.sparkContext.hadoopConfiguration
-        val indexFs = new Path(indexPath).getFileSystem(conf)
-        val committed = indexFs
-          .globStatus(new Path(indexPath, "batch=*/_SUCCESS"))
-        val hasIndex = committed != null && committed.nonEmpty
-        if (batchId == 0 && hasIndex &&
-            committed.exists(s => s.getPath.getParent.getName != "batch=0"))
-          throw new IllegalStateException(
-            s"multilingualCurationSink: batchId restarted at 0 but $indexPath " +
-            "already holds committed batches — the checkpoint was lost. " +
-            "Restore it, or start a fresh corpus/index path.")
+        BatchDirs.guardRestart(spark, "multilingualCurationSink", indexPath, batchId)
         val total = batch.count()
         if (total > 0) {
           val detected = batch.withColumn("__lang",
@@ -846,19 +724,15 @@ object Streams {
           val fp = gated.withColumn("__fp", md5(col(textCol)))
           val firsts = fp.groupBy(col("__fp")).agg(min(col(idCol)).as(idCol))
           val inBatch = fp.join(firsts, Seq("__fp", idCol), "left_semi")
-          val indexed =
-            if (hasIndex)
-              spark.read.parquet(indexPath)
-                .filter(col("batch") =!= batchId) // own prior attempt
-                .select(col("fp").as("__fp"))
-            else fp.select(col("__fp")).limit(0)
+          val indexed = BatchDirs.read(spark, indexPath, batchId)
+            .map(_.select(col("fp").as("__fp")))
+            .getOrElse(fp.select(col("__fp")).limit(0))
           val kept = inBatch.join(indexed, Seq("__fp"), "left_anti")
             .localCheckpoint()
           val keptN = kept.count()
-          kept.drop("__fp")
-            .write.mode("overwrite").parquet(s"$corpusPath/batch=$batchId")
-          kept.select(col(idCol), col("__fp").as("fp"))
-            .write.mode("overwrite").parquet(s"$indexPath/batch=$batchId")
+          BatchDirs.write(kept.drop("__fp"), corpusPath, batchId)
+          BatchDirs.write(kept.select(col(idCol), col("__fp").as("fp")),
+            indexPath, batchId)
           onLoad(LoadResult(success = true, rowsLoaded = keptN,
             tableName = corpusPath,
             durationSeconds = (System.nanoTime() - t0) / 1e9,
@@ -900,21 +774,10 @@ object Streams {
       checkpoint: String, promptCol: String, responseCol: String,
       scoreCol: String, trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trig)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
         val t0 = System.nanoTime()
-        val conf = batch.sparkSession.sparkContext.hadoopConfiguration
-        val fs = new Path(statePath).getFileSystem(conf)
-        val committed = fs.globStatus(new Path(statePath, "batch=*/_SUCCESS"))
-        val hasState = committed != null && committed.nonEmpty
-        if (batchId == 0 && hasState &&
-            committed.exists(s => s.getPath.getParent.getName != "batch=0"))
-          throw new IllegalStateException(
-            s"preferencePairSink: batchId restarted at 0 but $statePath " +
-            "already holds committed batches — the checkpoint was lost. " +
-            "Restore it, or start a fresh state path.")
+        BatchDirs.guardRestart(batch.sparkSession, "preferencePairSink",
+          statePath, batchId)
         // ONE scan of the micro-batch source: the extremes pass reads
         // the cached frame, and the empty gate falls out of its count
         val cand = batch.select(col(promptCol), col(responseCol),
@@ -925,7 +788,7 @@ object Streams {
         // write even when EMPTY: the first committed directory is what
         // lets preferencePairsOf infer a schema before any data arrives
         // (the trendingTopKSink convention)
-        ext.write.mode("overwrite").parquet(s"$statePath/batch=$batchId")
+        BatchDirs.write(ext, statePath, batchId)
         onLoad(LoadResult(success = true, rowsLoaded = n,
           tableName = statePath,
           durationSeconds = (System.nanoTime() - t0) / 1e9))
@@ -966,25 +829,23 @@ object Streams {
     // resolve by the path's own scheme — FileSystem.get(conf) returns
     // the defaultFS client and throws on e.g. an s3a:// target
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val backup = new Path(path + "__old")
-    // checked rename-rename swap ([[graft.core.AtomicSwap]]), not
-    // delete-then-rename: a crash between a delete and the rename would
-    // vaporize the accumulated base table; a crash between the two
-    // renames leaves the backup, healed here on the next batch (replays
-    // are safe: latest-wins re-merging the same delta is a no-op)
-    graft.core.AtomicSwap.heal(fs, target, backup)
-    val base =
-      if (fs.exists(target)) spark.read.parquet(path)
-      else batch.limit(0)
     // one extra micro-batch-sized count for the LoadResult row tally
     // (reference base.py:62-69), never the 100 TB base table. The count
     // and the write each run the batch's plan: [[mergeSink]] persists
     // the micro-batch first so its source and state run once
     val incoming = batch.count()
-    val merged = Merge.latestWins(base, batch, keys, col(versionCol))
-    val tmp = new Path(path + "__new")
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    graft.core.AtomicSwap.publish(fs, target, tmp, backup)
+    // checked rename-rename swap, not delete-then-rename: a crash
+    // between a delete and the rename would vaporize the accumulated
+    // base table; a crash between the two renames leaves the backup,
+    // healed on the next batch (replays are safe: latest-wins
+    // re-merging the same delta is a no-op)
+    AtomicSwap.replace(fs, target) { side =>
+      val base =
+        if (fs.exists(target)) spark.read.parquet(path)
+        else batch.limit(0)
+      Merge.latestWins(base, batch, keys, col(versionCol))
+        .write.mode("overwrite").parquet(side.toString)
+    }
     LoadResult(success = true, rowsLoaded = incoming, tableName = path,
       durationSeconds = (System.nanoTime() - t0) / 1e9)
   }
@@ -1105,9 +966,9 @@ object Streams {
       checkpoint: String, shardCol: String, cols: Seq[String],
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    foldSink(stream, checkpoint, trig, onLoad) { (batch, batchId) =>
-      manifestMergeBatch(batch.sparkSession, batch, path, shardCol, cols,
-        batchId)
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
+      onLoad(manifestMergeBatch(batch.sparkSession, batch, path, shardCol, cols,
+        batchId))
     }
 
   /** One [[exportManifestSink]] micro-batch: idempotent data write +
@@ -1302,9 +1163,9 @@ object Streams {
       keyCols: Seq[String], vecCol: String,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    foldSink(stream, checkpoint, trig, onLoad) { (batch, batchId) =>
-      gramMergeBatch(batch.sparkSession, batch, path, keyCols, vecCol,
-        batchId)
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
+      onLoad(gramMergeBatch(batch.sparkSession, batch, path, keyCols, vecCol,
+        batchId))
     }
 
   /** First principal component of ONE key's accumulated Gram state —
@@ -1349,30 +1210,16 @@ object Streams {
       compareCols: Seq[String] = Nil, batchId: Long = -1L): LoadResult = {
     val t0 = System.nanoTime()
     val target = new Path(statePath)
-    val backup = new Path(statePath + "__old")
-    val tmp = new Path(statePath + "__new")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.AtomicSwap.heal(fs, target, backup)
-    def lastApplied: Long = {
-      val m = new Path(target, AggBatchMarker)
-      if (!fs.exists(m)) -1L
-      else {
-        val in = fs.open(m)
-        try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-        finally in.close()
-      }
-    }
-    if (batchId >= 0 && fs.exists(target) && batchId <= lastApplied)
+    val lastApplied = AtomicSwap.marker(fs, target, AggBatchMarker)
+    if (batchId >= 0 && lastApplied.exists(batchId <= _))
       return LoadResult(success = true, rowsLoaded = 0L,
         tableName = changelogPath,
         durationSeconds = (System.nanoTime() - t0) / 1e9)
     // batch-mode diffs (batchId < 0) must not REGRESS the marker — a
     // later streaming replay would re-diff against the advanced
     // snapshot and overwrite its changelog entry with an empty diff
-    val markerValue =
-      if (batchId >= 0) batchId
-      else if (fs.exists(target)) lastApplied
-      else -1L
+    val markerValue = if (batchId >= 0) batchId else lastApplied.getOrElse(-1L)
     val prev =
       if (fs.exists(target))
         spark.read.parquet(statePath).select(batch.columns.map(col): _*)
@@ -1381,11 +1228,10 @@ object Streams {
       .snapshotDiff(prev, batch, pk, compareCols)
       .localCheckpoint() // materialize before the swap replaces prev's files
     val changes = diff.count()
-    diff.write.mode("overwrite").parquet(s"$changelogPath/batch=$batchId")
-    batch.write.mode("overwrite").parquet(tmp.toString)
-    val out = fs.create(new Path(tmp, AggBatchMarker), true)
-    try out.write(markerValue.toString.getBytes("UTF-8")) finally out.close()
-    graft.core.AtomicSwap.publish(fs, target, tmp, backup)
+    BatchDirs.write(diff, changelogPath, batchId)
+    AtomicSwap.replace(fs, target, Seq(AggBatchMarker -> markerValue)) { side =>
+      batch.write.mode("overwrite").parquet(side.toString)
+    }
     LoadResult(success = true, rowsLoaded = changes,
       tableName = changelogPath,
       durationSeconds = (System.nanoTime() - t0) / 1e9)
@@ -1397,9 +1243,9 @@ object Streams {
       compareCols: Seq[String] = Nil,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    foldSink(stream, checkpoint, trig, onLoad) { (batch, batchId) =>
-      snapshotDiffBatch(batch.sparkSession, batch, statePath,
-        changelogPath, pk, compareCols, batchId)
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
+      onLoad(snapshotDiffBatch(batch.sparkSession, batch, statePath,
+        changelogPath, pk, compareCols, batchId))
     }
 
   /** writeStream wiring for [[kmvMergeBatch]] (checkpointed). */
@@ -1407,9 +1253,9 @@ object Streams {
       keyCols: Seq[String], hashCol: String, k: Int,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    foldSink(stream, checkpoint, trig, onLoad) { (batch, batchId) =>
-      kmvMergeBatch(batch.sparkSession, batch, path, keyCols, hashCol, k,
-        batchId)
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
+      onLoad(kmvMergeBatch(batch.sparkSession, batch, path, keyCols, hashCol, k,
+        batchId))
     }
 
   /** Streaming GRID-FREE quantile state: fold each micro-batch's
@@ -1447,9 +1293,9 @@ object Streams {
       keyCols: Seq[String], valueCol: String, k: Int,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    foldSink(stream, checkpoint, trig, onLoad) { (batch, batchId) =>
-      kllMergeBatch(batch.sparkSession, batch, path, keyCols, valueCol, k,
-        batchId)
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
+      onLoad(kllMergeBatch(batch.sparkSession, batch, path, keyCols, valueCol, k,
+        batchId))
     }
 
   /** Grid-free drift SCORE over the [[kllMergeBatch]] state: two-sample
@@ -1496,10 +1342,7 @@ object Streams {
       auditPath: String, checkpoint: String, keyCol: String,
       partitionCol: String,
       trig: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] =
-    requests.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trig)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldSink(requests, checkpoint, trig) { (batch, batchId) =>
         val audit = graft.operators.Merge.forgetKeys(batch.sparkSession,
           tablePath, batch, keyCol, partitionCol)
         audit.withColumn("batch", lit(batchId))
@@ -1542,47 +1385,31 @@ object Streams {
       "sum overflow yields NULL and would silently corrupt stored totals")
     val t0 = System.nanoTime()
     val target = new Path(path)
-    val backup = new Path(path + "__old")
-    val tmp = new Path(path + "__new")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // heal a crash that landed between rename(target→backup) and
-    // rename(tmp→target): the backup IS the last committed state
-    graft.core.AtomicSwap.heal(fs, target, backup)
-    def lastApplied: Long = {
-      val m = new Path(target, AggBatchMarker)
-      if (!fs.exists(m)) -1L
-      else {
-        val in = fs.open(m)
-        try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-        finally in.close()
-      }
-    }
-    if (batchId >= 0 && fs.exists(target) && batchId <= lastApplied)
+    val lastApplied = AtomicSwap.marker(fs, target, AggBatchMarker)
+    if (batchId >= 0 && lastApplied.exists(batchId <= _))
       return LoadResult(success = true, rowsLoaded = 0L, tableName = path,
         durationSeconds = (System.nanoTime() - t0) / 1e9)
     // batch-mode folds (batchId < 0) must not REGRESS the marker: a
     // later streaming replay would otherwise re-fold and corrupt totals
-    val markerValue =
-      if (batchId >= 0) batchId
-      else if (fs.exists(target)) lastApplied
-      else -1L
-    val base =
-      if (fs.exists(target)) spark.read.parquet(path)
-      else partial.limit(0)
+    val markerValue = if (batchId >= 0) batchId else lastApplied.getOrElse(-1L)
     val sumCols = partial.columns.filterNot(keyCols.contains)
-    // by-name union: if a caller reuses an existing table path with a
-    // different column order (or a renamed measure), a positional union
-    // would silently sum values into the wrong columns — unionByName
-    // instead aligns matching names and FAILS on a schema mismatch
-    val merged = mergeAgg(base.unionByName(partial), sumCols.toIndexedSeq)
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    // count the WRITTEN files (footer metadata) before the swap — the
-    // merged plan still references the old base directory and cannot be
-    // re-executed once the rename replaces it
-    val outRows = spark.read.parquet(tmp.toString).count()
-    val out = fs.create(new Path(tmp, AggBatchMarker), true)
-    try out.write(markerValue.toString.getBytes("UTF-8")) finally out.close()
-    graft.core.AtomicSwap.publish(fs, target, tmp, backup)
+    val outRows = AtomicSwap.replace(fs, target,
+        Seq(AggBatchMarker -> markerValue)) { side =>
+      val base =
+        if (fs.exists(target)) spark.read.parquet(path)
+        else partial.limit(0)
+      // by-name union: if a caller reuses an existing table path with a
+      // different column order (or a renamed measure), a positional union
+      // would silently sum values into the wrong columns — unionByName
+      // instead aligns matching names and FAILS on a schema mismatch
+      mergeAgg(base.unionByName(partial), sumCols.toIndexedSeq)
+        .write.mode("overwrite").parquet(side.toString)
+      // count the WRITTEN files (footer metadata) before the swap — the
+      // merged plan still references the old base directory and cannot
+      // be re-executed once the rename replaces it
+      spark.read.parquet(side.toString).count()
+    }
     LoadResult(success = true, rowsLoaded = outRows, tableName = path,
       durationSeconds = (System.nanoTime() - t0) / 1e9)
   }
@@ -1606,13 +1433,9 @@ object Streams {
       .withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), windowLen), col(itemCol))
       .agg(count(lit(1)).as("n_events"))
-    counts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trig)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-batch OVERWRITE into batch=<id> (the nearDupDedupSink
-        // pattern): a foreachBatch replay REPLACES its own output
+    foldSink(counts, checkpoint, trig) { (batch, batchId) =>
+        // per-batch OVERWRITE into batch=<id> (the sink state
+        // contract): a foreachBatch replay REPLACES its own output
         // instead of appending duplicate top-k rows. The ranked result
         // is persisted so the batch plan runs ONCE, then the emptiness
         // probe decides whether to write at all — watermark-only
@@ -1628,38 +1451,34 @@ object Streams {
               graft.plans.TopK.asc(itemCol)), k)
           .persist()
         try {
-          val fs = new Path(path).getFileSystem(
-            batch.sparkSession.sparkContext.hadoopConfiguration)
           // empty batches skip the write once a COMMITTED batch dir
-          // exists (same probe as the near-dup sink: a crash that left
-          // only _temporary debris must not count, or a replay would
-          // skip the schema-establishing write and leave the path
+          // exists (debris without _SUCCESS must not count, or a replay
+          // would skip the schema-establishing write and leave the path
           // unreadable); the first batch always writes (even empty) so
           // consumers can read the sink path with its schema instead
           // of hitting PATH_NOT_FOUND when no window has closed yet
-          val committed =
-            fs.globStatus(new Path(path, "batch=*/_SUCCESS"))
           if (ranked.limit(1).count() > 0 ||
-              committed == null || committed.isEmpty)
-            ranked.write.mode("overwrite").parquet(s"$path/batch=$batchId")
+              BatchDirs.committed(batch.sparkSession, path).isEmpty)
+            BatchDirs.write(ranked, path, batchId)
         } finally ranked.unpersist()
-      }
+      }.outputMode("append")
   }
 
   /** Compact a per-batch-directory sink output ([[trendingTopKSink]],
-    * [[nearDupDedupSink]]'s corpus/index): merge every closed
+    * [[nearDupDedupSink]]'s corpus/index): merge every committed
     * `batch=<id>` directory EXCEPT the newest into one directory
     * (named for the largest merged id), so a long-running continuously
     * triggered query does not accumulate unbounded small directories.
     * Merged dirs keep the `batch=<numeric id>` naming, so wholesale
-    * reads, the partition-column dtype, and the near-dup sink's
-    * checkpoint-loss guard all see the layout they expect.
+    * reads, the partition-column dtype, and the sinks' restart guard
+    * all see the layout they expect.
     *
     * Replay-safe by construction: Structured Streaming can only re-run
-    * the batch at/after the newest committed one, and the newest
-    * present directory is never touched — merged ids are strictly
-    * older, hence final. Crash-safe via a manifest + rename protocol:
-    * the consolidated data is written to a side directory, then a
+    * the batch at/after the newest committed one, and neither the
+    * newest committed directory nor an uncommitted one is ever
+    * touched — merged ids are strictly older, hence final. Crash-safe
+    * via a manifest + rename protocol: the consolidated data is
+    * written to a side directory, then a
     * `_compact_pending` manifest (target + source dir names) is
     * PUBLISHED into the root by atomic rename — only after that are any
     * source directories touched. Re-running compact() heals an
@@ -1716,11 +1535,7 @@ object Streams {
       // touched, the side copy is unaccounted — discard and restart
       checked(fs.delete(tmp, true), "discard unpublished side dir")
     }
-    if (!fs.exists(root)) return 0
-    val ids = fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .flatMap(n => scala.util.Try(n.stripPrefix("batch=").toLong).toOption)
-      .sorted
+    val ids = BatchDirs.committed(spark, path)
     val sources = ids.dropRight(1) // newest dir is never touched
     if (sources.size < 2) return 0
     val targetDir = s"batch=${sources.last}"
@@ -1743,15 +1558,15 @@ object Streams {
     sources.size
   }
 
-  /** Shared writeStream wiring for the fold sinks. */
-  private def foldSink(stream: DataFrame, checkpoint: String, trig: Trigger,
-      onLoad: LoadResult => Unit)(
-      batchFn: (DataFrame, Long) => LoadResult): DataStreamWriter[org.apache.spark.sql.Row] =
+  /** The one writeStream wiring of every sink here: the checkpoint, the
+    * trigger, and `batchFn` run on each micro-batch with its id. */
+  private def foldSink(stream: DataFrame, checkpoint: String, trig: Trigger)(
+      batchFn: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trig)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onLoad(batchFn(batch, batchId))
+        batchFn(batch, batchId)
       }
 
   /** Streaming EXACT-n GLOBAL SAMPLE: maintain, across every
@@ -1786,8 +1601,8 @@ object Streams {
       keyCol: String, n: Int,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    foldSink(stream, checkpoint, trig, onLoad) { (batch, batchId) =>
-      sampleMergeBatch(batch.sparkSession, batch, path, keyCol, n, batchId)
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
+      onLoad(sampleMergeBatch(batch.sparkSession, batch, path, keyCol, n, batchId))
     }
 
   /** writeStream wiring for [[aggMergeBatch]] (checkpointed). */
@@ -1795,8 +1610,9 @@ object Streams {
       keyCols: Seq[String], measureCol: String,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    foldSink(stream, checkpoint, trig, onLoad) { (batch, batchId) =>
-      aggMergeBatch(batch.sparkSession, batch, path, keyCols, measureCol, batchId)
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
+      onLoad(aggMergeBatch(batch.sparkSession, batch, path, keyCols, measureCol,
+        batchId))
     }
 
   /** writeStream wiring for [[statsMergeBatch]] (checkpointed). */
@@ -1804,8 +1620,9 @@ object Streams {
       keyCols: Seq[String], measureCol: String,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    foldSink(stream, checkpoint, trig, onLoad) { (batch, batchId) =>
-      statsMergeBatch(batch.sparkSession, batch, path, keyCols, measureCol, batchId)
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
+      onLoad(statsMergeBatch(batch.sparkSession, batch, path, keyCols, measureCol,
+        batchId))
     }
 
   /** writeStream wiring for the merge sink (checkpointed — C1). Each
@@ -1819,10 +1636,7 @@ object Streams {
       keys: Seq[String], versionCol: String,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trig)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    foldSink(stream, checkpoint, trig) { (batch, _) =>
         // persist once: foreachBatch hands over an uncached frame, and
         // the count and the write would each re-run its source and state
         val cached = batch.persist()
@@ -1848,8 +1662,9 @@ object Streams {
       trig: Trigger = Trigger.AvailableNow(),
       mergeKeys: Seq[String] = Nil,
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    foldSink(stream, checkpoint, trig, onLoad) { (batch, batchId) =>
-      graft.sources.JdbcSource.writeExactlyOnce(batch, cfg, batchId, mergeKeys)
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
+      onLoad(graft.sources.JdbcSource.writeExactlyOnce(batch, cfg, batchId,
+        mergeKeys))
     }
 
   /** Streaming twin of [[graft.operators.Merge.mergeIntoPartitioned]]:
@@ -1865,10 +1680,7 @@ object Streams {
       partitionCol: String,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trig)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    foldSink(stream, checkpoint, trig) { (batch, _) =>
         val t0 = System.nanoTime()
         val cached = batch.persist()
         try {
@@ -1889,10 +1701,7 @@ object Streams {
       rules: Seq[graft.validation.Rules.Rule],
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trig)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    foldSink(stream, checkpoint, trig) { (batch, _) =>
         val t0 = System.nanoTime()
         // persist once: the split + two writes + two accounting counts
         // would otherwise re-evaluate the batch (and every rule
@@ -1929,10 +1738,7 @@ object Streams {
       thresholds: graft.validation.QualityThresholds,
       trig: Trigger = Trigger.AvailableNow(),
       onGate: (Long, Seq[String]) => Unit = (_, _) => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trig)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
         // persist once: emptiness probe + fused validation + the write
         // are three consumers of the same micro-batch
         val cached = batch.persist()
@@ -2071,30 +1877,13 @@ object Streams {
           case r => math.max(1, r.getInt(0))
         }
       else 1
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trig)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
         val t0 = System.nanoTime()
-        // same checkpoint-loss guard as the other accumulate-by-batch
-        // sinks: batchIds restart at 0 when the checkpoint is lost, and
-        // blindly overwriting batch=0 would replace the oldest ingested
-        // vectors with unrelated data (the base build is batch=-1 and
-        // doesn't trip this)
-        val fs = new Path(indexPath).getFileSystem(
+        val corpus = s"$indexPath/corpus"
+        BatchDirs.guardRestart(batch.sparkSession, "ivfIngestSink", corpus, batchId)
+        val fs = new Path(corpus).getFileSystem(
           batch.sparkSession.sparkContext.hadoopConfiguration)
-        val committed = fs.globStatus(
-          new Path(indexPath, "corpus/batch=*/_SUCCESS"))
-        if (batchId == 0 && committed != null && committed.exists { s =>
-            val b = s.getPath.getParent.getName
-            b != "batch=0" && b != "batch=-1"
-          })
-          throw new IllegalStateException(
-            s"ivfIngestSink: batchId restarted at 0 but $indexPath " +
-            "already holds committed batches — the checkpoint was lost. " +
-            "Restore it, or compact the index and start a fresh checkpoint.")
-        sinkEpochCheck(fs, new Path(indexPath, "corpus"), checkpoint,
-          "ivfIngestSink")
+        sinkEpochCheck(fs, new Path(corpus), checkpoint, "ivfIngestSink")
         // ONE read of the micro-batch source: the assignment projection
         // and the reported row count both come off this checkpoint — a
         // trailing batch.count() would re-read the source and could
@@ -2111,12 +1900,10 @@ object Streams {
                   graft.similarity.Similarity.nearestCentroids(
                     col(vecCol), centroids, nAssign).as("cells"))
                 .withColumn("cluster", explode(col("cells")))
-          assigned.write.mode("overwrite").partitionBy("cluster")
-            .parquet(s"$indexPath/corpus/batch=$batchId")
-          sinkEpochCommit(fs, new Path(indexPath, "corpus"), checkpoint,
-            "ivfIngestSink")
+          BatchDirs.write(assigned, corpus, batchId, "cluster")
+          sinkEpochCommit(fs, new Path(corpus), checkpoint, "ivfIngestSink")
           onLoad(LoadResult(success = true,
-            rowsLoaded = b.count(), tableName = s"$indexPath/corpus",
+            rowsLoaded = b.count(), tableName = corpus,
             durationSeconds = (System.nanoTime() - t0) / 1e9))
         } finally org.apache.spark.sql.GraftShims.unpersistCheckpoint(b)
       }
@@ -2139,29 +1926,11 @@ object Streams {
       checkpoint: String, idCol: String, vecCol: String,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trig)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
         val t0 = System.nanoTime()
         val spark = batch.sparkSession
-        // checkpoint-loss guard (the accumulate-by-batch discipline):
-        // batchIds restart at 0 when the checkpoint is lost, and
-        // blindly overwriting batch=0 would replace the oldest ingested
-        // codes with unrelated data (batch=-1 is the generation build
-        // and doesn't trip this)
-        val fs = new Path(indexPath).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val committed = fs.globStatus(
-          new Path(indexPath, "corpus/batch=*/_SUCCESS"))
-        if (batchId == 0 && committed != null && committed.exists { s =>
-            val b = s.getPath.getParent.getName
-            b != "batch=0" && b != "batch=-1"
-          })
-          throw new IllegalStateException(
-            s"pqIndexIngestSink: batchId restarted at 0 but $indexPath " +
-            "already holds committed batches — the checkpoint was lost. " +
-            "Restore it, or rebuild the index and start a fresh checkpoint.")
+        val corpus = s"$indexPath/corpus"
+        BatchDirs.guardRestart(spark, "pqIndexIngestSink", corpus, batchId)
         // sink-epoch marker: closes the residual one-batch window the
         // batch-directory guard above cannot see (checkpoint lost after
         // exactly one ingested batch=0 → the restarted stream's batch 0
@@ -2169,17 +1938,17 @@ object Streams {
         // checkpoint feeds this corpus; retrain/compaction publish a
         // fresh generation without it, so a deliberate fresh checkpoint
         // after either is allowed.
-        sinkEpochCheck(fs, new Path(indexPath, "corpus"), checkpoint,
-          "pqIndexIngestSink")
+        val fs = new Path(corpus).getFileSystem(
+          spark.sparkContext.hadoopConfiguration)
+        sinkEpochCheck(fs, new Path(corpus), checkpoint, "pqIndexIngestSink")
         // append returns the count actually written (footer read-back):
         // a second batch.count() here would re-read the micro-batch
         // source and could disagree with what was encoded
         val n = graft.similarity.PqIndex.append(spark, indexPath, batch,
           idCol, vecCol, batchId)
-        sinkEpochCommit(fs, new Path(indexPath, "corpus"), checkpoint,
-          "pqIndexIngestSink")
+        sinkEpochCommit(fs, new Path(corpus), checkpoint, "pqIndexIngestSink")
         onLoad(LoadResult(success = true,
-          rowsLoaded = n, tableName = s"$indexPath/corpus",
+          rowsLoaded = n, tableName = corpus,
           durationSeconds = (System.nanoTime() - t0) / 1e9))
       }
 
@@ -2230,33 +1999,16 @@ object Streams {
       maxBlockSize: Int = 10000,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trig)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldSink(stream, checkpoint, trig) { (batch, batchId) =>
         import graft.er.EntityResolution
         val t0 = System.nanoTime()
         val spark = batch.sparkSession
         val slimCols = (Seq(idCol, nameCol, segCol, balCol) ++ hardBlock)
           .distinct
-        val fs = new Path(recordsPath).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val committed = fs
-          .globStatus(new Path(recordsPath, "batch=*/_SUCCESS"))
-        val hasStore = committed != null && committed.nonEmpty
-        if (batchId == 0 && hasStore &&
-            committed.exists(s => s.getPath.getParent.getName != "batch=0"))
-          throw new IllegalStateException(
-            s"erLinkSink: batchId restarted at 0 but $recordsPath " +
-            "already holds committed batches — the checkpoint was lost. " +
-            "Restore it, or start fresh records/links paths.")
+        BatchDirs.guardRestart(spark, "erLinkSink", recordsPath, batchId)
         val newSlim = batch.select(slimCols.map(col): _*).localCheckpoint()
-        val oldSlim =
-          if (hasStore)
-            spark.read.parquet(recordsPath)
-              .filter(col("batch") =!= batchId) // replay: own attempt ≠ old
-              .select(slimCols.map(col): _*)
-          else newSlim.limit(0)
+        val oldSlim = BatchDirs.read(spark, recordsPath, batchId)
+          .map(_.select(slimCols.map(col): _*)).getOrElse(newSlim.limit(0))
         val all = newSlim.unionByName(oldSlim)
         val cands = EntityResolution.incrementalCandidatePairs(
           all, newSlim, idCol, hardBlock, passes, maxBlockSize)
@@ -2267,8 +2019,8 @@ object Streams {
         // batches already sit in their own batch dirs and are excluded
         // from neither side here (pairs need >=1 new id) — emit-once
         // holds because old-old pairs are never generated
-        links.write.mode("overwrite").parquet(s"$linksPath/batch=$batchId")
-        newSlim.write.mode("overwrite").parquet(s"$recordsPath/batch=$batchId")
+        BatchDirs.write(links, linksPath, batchId)
+        BatchDirs.write(newSlim, recordsPath, batchId)
         onLoad(LoadResult(success = true, rowsLoaded = newSlim.count(),
           tableName = recordsPath,
           durationSeconds = (System.nanoTime() - t0) / 1e9))
@@ -2290,24 +2042,9 @@ object Streams {
       componentsPath: String, idCol: String): DataFrame = {
     import graft.dedup.Dedup
     val target = new Path(componentsPath)
-    val backup = new Path(componentsPath + "__old")
-    val tmp = new Path(componentsPath + "__new")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.AtomicSwap.heal(fs, target, backup)
-    val lastApplied: Long = {
-      val m = new Path(target, AggBatchMarker)
-      if (!fs.exists(m)) -1L
-      else {
-        val in = fs.open(m)
-        try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-        finally in.close()
-      }
-    }
-    val committed = fs.globStatus(new Path(linksPath, "batch=*/_SUCCESS"))
-    val batchIds =
-      if (committed == null) Array.empty[Long]
-      else committed.map(_.getPath.getParent.getName.stripPrefix("batch=").toLong)
-    val pending = batchIds.filter(_ > lastApplied)
+    val lastApplied = AtomicSwap.marker(fs, target, AggBatchMarker).getOrElse(-1L)
+    val pending = BatchDirs.committed(spark, linksPath).filter(_ > lastApplied)
     val hasState = fs.exists(target)
     if (pending.isEmpty) {
       // the _-prefixed marker file is invisible to the parquet reader
@@ -2326,26 +2063,20 @@ object Streams {
     val newLinks = spark.read.parquet(linksPath)
       .filter(col("batch").isin(pending.map(Long.box): _*))
       .select(col("id_a"), col("id_b"))
-    val merged =
-      if (hasState)
-        Dedup.mergeComponents(
-          spark.read.parquet(componentsPath), newLinks, idCol)
-      else Dedup.connectedComponents(newLinks, idCol)
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    val out = fs.create(new Path(tmp, AggBatchMarker), true)
-    try out.write(pending.max.toString.getBytes("UTF-8")) finally out.close()
     // carry the full-closure watermark ([[erComponentsCompact]]) across
     // the swap, or every incremental refresh would reset the
     // links-since-compaction clock to "never compacted"
-    val closureMark = new Path(target, ClosureLinksMarker)
-    if (fs.exists(closureMark)) {
-      val in = fs.open(closureMark)
-      val v = try scala.io.Source.fromInputStream(in).mkString
-        finally in.close()
-      val out2 = fs.create(new Path(tmp, ClosureLinksMarker), true)
-      try out2.write(v.getBytes("UTF-8")) finally out2.close()
+    val closureMark = AtomicSwap.marker(fs, target, ClosureLinksMarker)
+      .map(ClosureLinksMarker -> _)
+    AtomicSwap.replace(fs, target,
+        (AggBatchMarker -> pending.max) +: closureMark.toSeq) { side =>
+      val merged =
+        if (hasState)
+          Dedup.mergeComponents(
+            spark.read.parquet(componentsPath), newLinks, idCol)
+        else Dedup.connectedComponents(newLinks, idCol)
+      merged.write.mode("overwrite").parquet(side.toString)
     }
-    graft.core.AtomicSwap.publish(fs, target, tmp, backup)
     spark.read.parquet(componentsPath)
   }
 
@@ -2383,39 +2114,24 @@ object Streams {
       minNewLinks: Long = 10000000L): Boolean = {
     import graft.dedup.Dedup
     val target = new Path(componentsPath)
-    val backup = new Path(componentsPath + "__old")
-    val tmp = new Path(componentsPath + "__new")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.core.AtomicSwap.heal(fs, target, backup)
-    val committed = fs.globStatus(new Path(linksPath, "batch=*/_SUCCESS"))
-    val batchIds =
-      if (committed == null) Array.empty[Long]
-      else committed.map(_.getPath.getParent.getName.stripPrefix("batch=").toLong)
+    val batchIds = BatchDirs.committed(spark, linksPath)
     if (batchIds.isEmpty) return false
     val allLinks = spark.read.parquet(linksPath)
-      .filter(col("batch").isin(batchIds.map(Long.box).toSeq: _*))
+      .filter(col("batch").isin(batchIds.map(Long.box): _*))
       .select(col("id_a"), col("id_b"))
     // count over the committed partitions only — row-group-metadata
     // cheap, and the same frame feeds the closure below if we proceed
     val totalLinks = allLinks.count()
-    val lastClosure: Long = {
-      val m = new Path(target, ClosureLinksMarker)
-      if (!fs.exists(m)) 0L
-      else {
-        val in = fs.open(m)
-        try scala.io.Source.fromInputStream(in).mkString.trim.toLong
-        finally in.close()
-      }
-    }
+    val lastClosure = AtomicSwap.marker(fs, target, ClosureLinksMarker)
+      .getOrElse(0L)
     if (fs.exists(target) && totalLinks - lastClosure < minNewLinks)
       return false
-    val full = Dedup.connectedComponents(allLinks, idCol)
-    full.write.mode("overwrite").parquet(tmp.toString)
-    val out = fs.create(new Path(tmp, AggBatchMarker), true)
-    try out.write(batchIds.max.toString.getBytes("UTF-8")) finally out.close()
-    val out2 = fs.create(new Path(tmp, ClosureLinksMarker), true)
-    try out2.write(totalLinks.toString.getBytes("UTF-8")) finally out2.close()
-    graft.core.AtomicSwap.publish(fs, target, tmp, backup)
+    AtomicSwap.replace(fs, target, Seq(AggBatchMarker -> batchIds.max,
+        ClosureLinksMarker -> totalLinks)) { side =>
+      Dedup.connectedComponents(allLinks, idCol)
+        .write.mode("overwrite").parquet(side.toString)
+    }
     // directory hygiene AFTER the closure is live: every link batch is
     // now at/below the marker, so merging them can never be re-read
     compactBatchOutput(spark, linksPath)
@@ -2439,10 +2155,7 @@ object Streams {
       balCol: String, componentsPath: Option[String] = None): DataFrame = {
     import graft.er.EntityResolution
     val records = spark.read.parquet(recordsPath).drop("batch")
-    val fs = new Path(linksPath).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val anyLinks = fs.globStatus(new Path(linksPath, "batch=*/_SUCCESS"))
-    val hasLinks = anyLinks != null && anyLinks.nonEmpty
+    val hasLinks = BatchDirs.committed(spark, linksPath).nonEmpty
     val assigned = componentsPath match {
       case Some(cp) if hasLinks =>
         val comp = erComponentsRefresh(spark, linksPath, cp, idCol)

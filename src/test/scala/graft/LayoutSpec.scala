@@ -25,15 +25,40 @@ class LayoutSpec extends AnyFunSuite {
     }.toSeq
   }
 
-  test("src/main defines no main but graft.Bench and graft.Verify") {
-    val root = Paths.get("src/main/scala")
+  private val root = Paths.get("src/main/scala")
+
+  private def scalaFiles: Seq[Path] = {
     assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val found = Files.walk(root).iterator.asScala
+    Files.walk(root).iterator.asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-      .flatMap(f => mains(f).map(_ -> f))
+  }
+
+  test("src/main defines no main but graft.Bench and graft.Verify") {
+    val found = scalaFiles.flatMap(f => mains(f).map(_ -> f))
     val extra = found.filterNot(m => allowed(m._1))
     assert(extra.isEmpty, "mains besides graft.Bench and graft.Verify: " +
       extra.map { case (o, f) => s"$o ($f)" }.mkString(", "))
     assert(found.map(_._1).toSet == allowed, s"scan missed graft.Bench or graft.Verify: $found")
+  }
+
+  /** Occurrences of `needle` per file under src/main/scala, for the
+    * files that hold it. */
+  private def occurrences(needle: String): Map[String, Int] =
+    scalaFiles.map { f =>
+      root.relativize(f).toString ->
+        java.util.regex.Pattern.quote(needle).r
+          .findAllMatchIn(Files.readString(f)).size
+    }.filter(_._2 > 0).toMap
+
+  test("each streaming state decision is spelled in one place") {
+    // the committed-batch probe: the per-batch directory helper
+    val probe = occurrences("batch=*/_SUCCESS")
+    assert(probe == Map("graft/streaming/BatchDirs.scala" -> 1), probe)
+    // checkpoint + trigger + foreachBatch wiring: Streams.foldSink
+    val wiring = occurrences("option(\"checkpointLocation\"")
+    assert(wiring == Map("graft/streaming/Streams.scala" -> 1), wiring)
+    // the whole-table swap's backup naming: AtomicSwap
+    val backup = occurrences("\"__old\"")
+    assert(backup == Map("graft/core/AtomicSwap.scala" -> 1), backup)
   }
 }

@@ -107,6 +107,54 @@ class MergeSpec extends AnyFunSuite with SparkSpec {
       .toMap == Map(1L -> "A", 2L -> "b"))
   }
 
+  test("concurrent partitioned merges keep untouched partitions and the session mode") {
+    // pipeline tasks of one level run concurrently on one session: the
+    // dynamic overwrite mode must ride each write, never the session,
+    // whose static mode would delete every partition a delta skips
+    val s = spark.newSession()
+    import s.implicits._
+    val mode = "spark.sql.sources.partitionOverwriteMode"
+    s.conf.set(mode, "static")
+    val root = Files.createTempDirectory("graft-merge-conc").toString
+    val tables = Seq(s"$root/a", s"$root/b")
+    val days = (1 to 4).map(d => s"2024-01-0$d")
+    tables.foreach { t =>
+      Merge.mergeIntoPartitioned(s, t,
+        days.zipWithIndex.map { case (d, i) => (i.toLong, d, "v0", 0) }
+          .toDF("id", "dt", "v", "ver"), Seq("id"), col("ver"), "dt")
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      (1 to 6).foreach { round =>
+        // each round both tables get a delta touching ONE partition
+        val start = new java.util.concurrent.CountDownLatch(1)
+        val runs = tables.map { t =>
+          pool.submit(new java.util.concurrent.Callable[Long] {
+            override def call(): Long = {
+              start.await()
+              val i = round % days.size
+              Merge.mergeIntoPartitioned(s, t,
+                Seq((i.toLong, days(i), s"v$round", round))
+                  .toDF("id", "dt", "v", "ver"), Seq("id"), col("ver"), "dt")
+            }
+          })
+        }
+        start.countDown()
+        runs.foreach(r => assert(r.get() == 1L))
+      }
+    } finally pool.shutdown()
+    val expect = days.indices.map { i =>
+      val last = (1 to 6).filter(_ % days.size == i).lastOption
+      (i.toLong, days(i), last.fold("v0")(r => s"v$r"))
+    }.toSet
+    tables.foreach { t =>
+      val got = s.read.parquet(t).select($"id", $"dt".cast("string"), $"v")
+        .as[(Long, String, String)].collect().toSet
+      assert(got == expect, t)
+    }
+    assert(s.conf.get(mode) == "static")
+  }
+
   test("forgetKeys: deletes only listed keys, rewrites only touched partitions") {
     val dir = Files.createTempDirectory("graft-forget").toString + "/t"
     Seq(

@@ -184,6 +184,47 @@ class PipelineRunnerSpec extends AnyFunSuite with SparkSpec {
     assert(modelBuilds == 1) // built once, not retried
   }
 
+  test("unique and not_null tests report per column; an absent column fails the task") {
+    // order_id stays unique and non-null; customer_id is blanked on even
+    // orders and order_status repeats
+    def blanked(orders: org.apache.spark.sql.DataFrame) =
+      Models.stagingOrders(orders).withColumn("customer_id",
+        when(col("order_id") % 2 === 0, lit(null)).otherwise(col("customer_id")))
+    val withNulls = new PipelineRunner(
+      spark,
+      sources = Map("orders_src" -> (s => s.read.parquet(s"$sf/orders.parquet")),
+        "customer_src" -> (s => s.read.parquet(s"$sf/customer.parquet"))),
+      models = Map("staging_orders" -> (deps => blanked(deps("orders_src")))),
+      asOf = java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
+    withNulls.sleeper = _ => ()
+    val model = blanked(spark.read.parquet(s"$sf/orders.parquet"))
+    val nulls = model.filter(col("customer_id").isNull).count()
+    val dups = model.count() - model.select("order_status").distinct().count()
+    assert(nulls > 0 && dups > 0)
+    def run(tests: String) = withNulls.run(PipelineSpec.fromYaml(
+      s"""name: model_tests
+         |sources:
+         |  - source_id: orders_src
+         |    source_type: file
+         |transformations:
+         |  - model_name: staging_orders
+         |    model_type: staging
+         |    dependencies: [orders_src]
+         |    tests:
+         |$tests
+         |dependencies:
+         |  transform_staging_orders: [ingest_orders_src]
+         |""".stripMargin))("transform_staging_orders")
+    val r = run("""      - not_null: [order_id, customer_id]
+                  |      - unique: [order_id, order_status]""".stripMargin)
+    assert(r.status == TaskStatus.Failed)
+    assert(r.error.contains(s"tests: not_null(customer_id): $nulls nulls; " +
+      s"unique(order_status): $dups duplicates"), r.error)
+    val absent = run("      - not_null: [order_id, no_such_column]")
+    assert(absent.status == TaskStatus.Failed)
+    assert(absent.error.exists(_.contains("no_such_column")), absent.error)
+  }
+
   test("target validation failure with fail_on_validation_error=false warns") {
     val warnYaml = yaml
       .replace("min_row_count: 100", "min_row_count: 999999999")

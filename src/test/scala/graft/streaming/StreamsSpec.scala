@@ -1358,6 +1358,75 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
     } finally q2.stop()
   }
 
+  test("batch-directory sinks refuse to clobber history after checkpoint loss") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+    val dir = Files.createTempDirectory("graft-restart").toString
+    // one case per sink: run it on a checkpoint, feeding batches by id
+    type Run = String => (StreamingQuery, Long => Unit)
+    def textRun(cols: (String, String), mk: Long => String)(
+        sink: (DataFrame, String) => DataStreamWriter[Row]): Run = { ckpt =>
+      val input = MemoryStream[(Long, String)]
+      val q = sink(input.toDF().toDF(cols._1, cols._2), ckpt).start()
+      (q, i => input.addData((i, mk(i))))
+    }
+    val doc = textRun(("doc_id", "text"),
+      i => (0 until 80).map(t => s"w${i}x$t").mkString(" ")) _
+    val cases: Seq[(String, Run)] = Seq(
+      "sftPrepSink" -> textRun(("doc_id", "conv"), i =>
+          s"""[{"role":"user","content":"q$i"},{"role":"assistant","content":"a$i"}]""") {
+        (df, ckpt) => Streams.sftPrepSink(df, s"$dir/sft/corpus",
+          s"$dir/sft/index", ckpt, "doc_id", "conv", trig = Streams.trigger(1))
+      },
+      "phashDedupSink" -> { ckpt =>
+        val input = MemoryStream[(Long, Array[Byte])]
+        val q = Streams.phashDedupSink(input.toDF().toDF("doc_id", "payload"),
+          s"$dir/phash/corpus", s"$dir/phash/index", ckpt, "doc_id", "payload",
+          trig = Streams.trigger(1)).start()
+        (q, i => input.addData((i, pngGradient(vertical = i % 2 == 0))))
+      },
+      "curationFunnelSink" -> doc { (df, ckpt) =>
+        Streams.curationFunnelSink(df, s"$dir/funnel/corpus",
+          s"$dir/funnel/index", ckpt, "doc_id", "text", trig = Streams.trigger(1))
+      },
+      "multilingualCurationSink" -> doc { (df, ckpt) =>
+        Streams.multilingualCurationSink(df, s"$dir/ml/corpus", s"$dir/ml/index",
+          ckpt, "doc_id", "text",
+          Seq(graft.text.Curation.LangRoute("en", Seq("and"), Nil)),
+          trig = Streams.trigger(1))
+      },
+      "preferencePairSink" -> { ckpt =>
+        val input = MemoryStream[(String, String, Long)]
+        val q = Streams.preferencePairSink(
+          input.toDF().toDF("prompt", "response", "score"), s"$dir/pref/state",
+          ckpt, "prompt", "response", "score", trig = Streams.trigger(1)).start()
+        (q, i => input.addData((s"p$i", s"r$i", i)))
+      })
+    cases.foreach { case (sink, run) =>
+      val (q, feed) = run(s"$dir/$sink-ckpt1")
+      try {
+        feed(1); q.processAllAvailable()
+        feed(2); q.processAllAvailable()
+        assert(q.exception.isEmpty, s"$sink: ${q.exception}")
+      } finally q.stop()
+      // a fresh checkpoint restarts batch ids at 0 over committed state
+      val (q2, feed2) = run(s"$dir/$sink-ckpt2")
+      try {
+        feed2(3)
+        val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q2.processAllAvailable()
+        }
+        val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
+          .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toSeq
+        assert(msgs.exists(m => m.contains("checkpoint was lost") &&
+          m.contains(sink)), s"$sink: $msgs")
+      } finally q2.stop()
+    }
+  }
+
   test("S6 file source: streaming the events table equals the batch result") {
     import graft.streaming.Windows
     import org.apache.spark.sql.functions.{count => cnt, sum}
