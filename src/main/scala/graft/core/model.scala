@@ -41,6 +41,15 @@ case class LoadResult(
     durationSeconds: Double,
     errorMessage: Option[String] = None)
 
+object LoadResult {
+  /** A successful load of `rows` into `table`, timed from the
+    * `System.nanoTime` stamp `t0` to now. */
+  def since(t0: Long, table: String, rows: Long,
+      errorMessage: Option[String] = None): LoadResult =
+    LoadResult(success = true, rowsLoaded = rows, tableName = table,
+      durationSeconds = (System.nanoTime() - t0) / 1e9, errorMessage)
+}
+
 /** Severity levels for validation findings.
   * Reference: `src/ingestion/validators.py:17-21`. */
 object Severity {

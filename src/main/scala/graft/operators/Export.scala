@@ -96,7 +96,7 @@ object Export {
     * included via the full outer join); empty means intact. */
   def verifyManifest(spark: SparkSession, path: String,
       shardCol: String, cols: Seq[String]): DataFrame = {
-    val stored = spark.read.parquet(s"$path/_manifest")
+    val stored = readFlat(spark, s"$path/_manifest")
       .withColumnRenamed("n_rows", "stored_rows")
       .withColumnRenamed("fp_sum", "stored_sum")
       .withColumnRenamed("fp_xor", "stored_xor")
@@ -107,5 +107,16 @@ object Export {
           col("stored_rows") =!= col("n_rows") ||
           col("stored_sum") =!= col("fp_sum") ||
           col("stored_xor") =!= col("fp_xor"))
+  }
+
+  /** Read the flat parquet directory `dir` by its part files: Spark logs
+    * a false `All paths were ignored` for a root named `_…` (`_manifest`,
+    * its swap side path `_manifest__new`) though it reads it, and a glob
+    * would log a failed metadata probe instead. A missing `dir` fails. */
+  private[graft] def readFlat(spark: SparkSession, dir: String): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    spark.read.parquet(fs.listStatus(root).map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).map(_.toString).toIndexedSeq: _*)
   }
 }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.core.{AtomicSwap, LoadResult}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,11 +15,16 @@ import org.apache.spark.sql.functions._
   * (version, sourceRank) — a standard upsert pattern for non-transactional
   * lakes.
   *
-  * Scale: the union + window shuffles once on the unique key — the same
-  * shuffle a MERGE join would need. For 100 TB fact tables, partition the
-  * stored table by a coarse key (e.g. order date) and rewrite only the
-  * partitions the delta touches (see [[mergeIntoPartitioned]]-style usage
-  * in the streaming sink); the latest-wins core below is unchanged.
+  * One upsert core ([[upsert]]) keeps every stored layout equal to
+  * [[latestWins]] over the base and every delta: a whole table
+  * ([[graft.streaming.Streams.mergeBatch]]), a partitioned one
+  * ([[mergeIntoPartitioned]] — only touched partitions are read and
+  * rewritten) and the append-only versioned changelog ([[readAsOf]]
+  * runs the same winner selection at read time).
+  *
+  * Scale: the union + k=1 heap shuffles once on the unique key — the
+  * same shuffle a MERGE join would need. For 100 TB fact tables,
+  * partition the stored table by a coarse key (e.g. order date).
   */
 object Merge {
 
@@ -34,71 +41,89 @@ object Merge {
   def latestWins(base: DataFrame, delta: DataFrame, keys: Seq[String],
       version: Column, deleteMarker: Option[Column] = None,
       allowEvolution: Boolean = false): DataFrame = {
-    import graft.plans.TopK
     val tagged = base.withColumn("__src", lit(0))
       .unionByName(delta.withColumn("__src", lit(1)),
         allowMissingColumns = allowEvolution)
       .withColumn("__version", version)
-    // k=1 heap per key (no per-key sort): the winner is the highest
-    // (version, delta-over-base) row
-    val merged = TopK.perKey(tagged, keys,
-        Seq(TopK.desc("__version"), TopK.desc("__src")), k = 1)
-      .drop("rank", "__version", "__src")
-    deleteMarker.map(m => merged.filter(!coalesce(m, lit(false)))).getOrElse(merged)
+    winner(tagged, keys, Seq("__version", "__src"),
+      deleteMarker.map(m => !coalesce(m, lit(false))))
   }
+
+  /** The one winner selection: per key, the row highest by the `order`
+    * columns — a k=1 heap per key, no per-key sort — kept where `keep`
+    * holds; the `order` columns are dropped. */
+  private def winner(frame: DataFrame, keys: Seq[String], order: Seq[String],
+      keep: Option[Column]): DataFrame = {
+    import graft.plans.TopK
+    val top = TopK.perKey(frame, keys, order.map(TopK.desc), k = 1)
+    keep.fold(top)(k => top.filter(k)).drop("rank" +: order: _*)
+  }
+
+  /** The upsert core: merge `delta` into the parquet table at `path`,
+    * whole (`partitionCol = None`) or partitioned, reporting the
+    * delta's row count. ONE aggregate over the delta — its row count
+    * per partition value — gives both the count and the touched
+    * partitions. An empty delta is a no-op: the table is neither read
+    * nor written, so a missing table is not created empty (a schema-less
+    * directory the next merge could not read). The base is the table,
+    * pruned to the touched partitions, or the delta's empty frame when
+    * there is no table. A whole table commits through
+    * [[AtomicSwap.replace]] — never delete-then-rename, and a
+    * crash between its renames is healed before the next base read
+    * (a replay re-merges the same delta: a no-op); a partitioned one
+    * through [[rewritePartitions]]. The aggregate and the write each
+    * read the delta: a caller whose delta is expensive to re-derive (a
+    * streaming micro-batch) persists it first. */
+  private[graft] def upsert(spark: SparkSession, path: String,
+      delta: DataFrame, keys: Seq[String], version: Column,
+      partitionCol: Option[String]): LoadResult = {
+    val t0 = System.nanoTime()
+    val perPartition = delta.groupBy(partitionCol.map(col).toSeq: _*)
+      .count().collect()
+    val rows = perPartition.map(r => r.getLong(r.length - 1)).sum
+    // resolve by the path's own scheme — FileSystem.get(conf) returns
+    // the defaultFS client and throws on e.g. an s3a:// path
+    val target = new Path(path)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def merged: DataFrame = {
+      val table =
+        if (fs.exists(target)) spark.read.parquet(path) else delta.limit(0)
+      latestWins(partitionCol.fold(table)(p =>
+        table.filter(col(p).isin(perPartition.map(_.get(0)).toSeq: _*))),
+        delta, keys, version)
+    }
+    if (rows > 0L) partitionCol match {
+      case Some(p) => rewritePartitions(merged, path, p)
+      case None => AtomicSwap.replace(fs, target) { side =>
+        merged.write.mode(SaveMode.Overwrite).parquet(side.toString)
+      }
+    }
+    LoadResult.since(t0, path, rows)
+  }
+
+  /** The partition-rewrite commit: `frame` replaces exactly the
+    * partitions of `path` it carries; the others keep their files
+    * byte-for-byte. The dynamic mode is a WRITER option, never the
+    * session setting: pipeline tasks share one session concurrently,
+    * and a merge that restored a session-wide setting mid-flight would
+    * flip another merge's write to static mode, which deletes every
+    * partition that write does not carry. */
+  private def rewritePartitions(frame: DataFrame, path: String,
+      partitionCol: String): Unit =
+    frame.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCol).parquet(path)
 
   /** The 100 TB merge path: upsert `delta` into a parquet table
     * PARTITIONED by `partitionCol`, rewriting ONLY the partitions the
-    * delta touches. Returns the delta's row count.
-    *
-    *  1. ONE aggregate over the delta — its row count per partition
-    *     value (small — one row per touched partition) — gives both the
-    *     row count and the touched partitions, which drive the base-side
-    *     read (partition pruning: untouched partitions are never
-    *     scanned) and
-    *  2. the write, under dynamic partition-overwrite mode, replaces
-    *     only partitions present in the written data — untouched
-    *     partition directories keep their files byte-for-byte. The
-    *     mode is a WRITER option, never the session setting: pipeline
-    *     tasks share one session concurrently, and a merge that
-    *     restored a session-wide setting mid-flight would flip another
-    *     merge's write to static mode, which deletes every partition
-    *     that write does not carry.
-    *
-    * An empty delta is a no-op: the table is neither read nor written,
-    * so a table that does not exist yet is not created empty (a
-    * schema-less directory the next merge could not read).
-    *
-    * The delta is read by the aggregate and again by the write; a caller
-    * whose delta is expensive to re-derive (a streaming micro-batch)
-    * persists it first, as [[graft.streaming.Streams.partitionedMergeSink]]
-    * does.
-    *
+    * delta touches ([[upsert]]). Returns the delta's row count.
     * Cost is proportional to |delta ∪ touched-partition data|, not to
     * the table. This is the engine's answer to the reference's declared
     * `incremental_strategy: merge` without a transactional format. */
   def mergeIntoPartitioned(spark: SparkSession, basePath: String,
       delta: DataFrame, keys: Seq[String], version: Column,
-      partitionCol: String): Long = {
-    val perPartition = delta.groupBy(col(partitionCol)).count().collect()
-    val rows = perPartition.map(_.getLong(1)).sum
-    if (rows == 0L) return 0L
-    val touched = perPartition.map(_.get(0)).toSeq
-    // resolve by the path's own scheme — FileSystem.get(conf) returns
-    // the defaultFS client and throws on e.g. an s3a:// base path
-    val basePathP = new org.apache.hadoop.fs.Path(basePath)
-    val fs = basePathP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base =
-      if (fs.exists(basePathP))
-        spark.read.parquet(basePath)
-          .filter(col(partitionCol).isin(touched: _*))
-      else delta.limit(0)
-    latestWins(base, delta, keys, version)
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol).parquet(basePath)
-    rows
-  }
+      partitionCol: String): Long =
+    upsert(spark, basePath, delta, keys, version, Some(partitionCol)).rowsLoaded
 
   /** Targeted key deletion from a partitioned parquet table — the
     * right-to-be-forgotten / takedown-propagation primitive. Rewrites
@@ -107,9 +132,9 @@ object Merge {
     * never the table), anti-joining the deletion list (broadcast — a
     * deletion list is request-sized; a crawl-sized purge should go
     * through a full compaction instead). A partition whose EVERY row is
-    * forgotten produces no output files, and dynamic partition
-    * overwrite only replaces partitions present in the written frame —
-    * the stale directory is deleted explicitly, or the "deleted" rows
+    * forgotten produces no output files, and [[rewritePartitions]]
+    * only replaces partitions present in the written frame — the stale
+    * directory is deleted explicitly, or the "deleted" rows
     * would still be served. Returns the per-partition audit
     * (rows_before, rows_removed) a compliance process records; the
     * audit is materialized BEFORE the rewrite so it reflects the
@@ -131,16 +156,13 @@ object Merge {
         .join(broadcast(keys), Seq(keyCol), "left_anti")
         // materialize before the overwrite replaces the files it reads
         .localCheckpoint()
-      kept.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCol).parquet(basePath)
+      rewritePartitions(kept, basePath, partitionCol)
       val keptParts = kept.select(col(partitionCol)).distinct()
         .collect().map(_.get(0)).toSet
-      val basePathP = new org.apache.hadoop.fs.Path(basePath)
+      val basePathP = new Path(basePath)
       val fs = basePathP.getFileSystem(spark.sparkContext.hadoopConfiguration)
       touched.filterNot(keptParts).foreach { p =>
-        fs.delete(new org.apache.hadoop.fs.Path(basePathP,
-          s"$partitionCol=$p"), true)
+        fs.delete(new Path(basePathP, s"$partitionCol=$p"), true)
       }
     }
     audit
@@ -198,13 +220,13 @@ object Merge {
     val base = readAsOf(spark, path, upTo, keys)
       .withColumn("_deleted", lit(false))
       .localCheckpoint() // materialize before the rewrite deletes inputs
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new org.apache.hadoop.fs.Path(root, s"version=$upTo")
-    val scratch = new org.apache.hadoop.fs.Path(root, s"_compact_$upTo")
-    val tmp = graft.core.AtomicSwap.sidePath(scratch)
-    val backup = graft.core.AtomicSwap.backupPath(scratch)
-    graft.core.AtomicSwap.heal(fs, target, backup)
+    val target = new Path(root, s"version=$upTo")
+    val scratch = new Path(root, s"_compact_$upTo")
+    val tmp = AtomicSwap.sidePath(scratch)
+    val backup = AtomicSwap.backupPath(scratch)
+    AtomicSwap.heal(fs, target, backup)
     // a stale tmp from a crashed run is fully replaced (Overwrite), and
     // was invisible to the readAsOf above (underscore prefix).
     // Compaction rewrites every row anyway, so it is the free moment to
@@ -217,7 +239,7 @@ object Merge {
         zorderFiles)
     else
       base.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    graft.core.AtomicSwap.publish(fs, target, tmp, backup)
+    AtomicSwap.publish(fs, target, tmp, backup)
     val stat = fs.listStatus(root)
     stat.map(_.getPath).filter { p =>
       val n = p.getName
@@ -238,11 +260,8 @@ object Merge {
     * preserves the union schema (its base is this read). */
   def readAsOf(spark: SparkSession, path: String, asOf: Long,
       keys: Seq[String]): DataFrame = {
-    import graft.plans.TopK
     val log = spark.read.option("mergeSchema", "true").parquet(path)
       .filter(col("version") <= asOf)
-    TopK.perKey(log, keys, Seq(TopK.desc("version")), k = 1)
-      .filter(!col("_deleted"))
-      .drop("rank", "version", "_deleted")
+    winner(log, keys, Seq("version"), Some(!col("_deleted"))).drop("_deleted")
   }
 }

@@ -111,9 +111,7 @@ object JdbcSource {
         .option("batchsize", cfg.fetchSize)
         .mode(mode)
         .save()
-      graft.core.LoadResult(success = true, rowsLoaded = rows,
-        tableName = cfg.table,
-        durationSeconds = (System.nanoTime() - t0) / 1e9)
+      graft.core.LoadResult.since(t0, cfg.table, rows)
     } finally pinned.unpersist()
   }
 
@@ -223,9 +221,7 @@ object JdbcSource {
       } finally probe.close()
       hit match {
         case Some(_) =>
-          graft.core.LoadResult(success = true, rowsLoaded = 0L,
-            tableName = cfg.table,
-            durationSeconds = (System.nanoTime() - t0) / 1e9,
+          graft.core.LoadResult.since(t0, cfg.table, 0L,
             errorMessage = Some(s"batch $batchId already loaded; skipped"))
         case None =>
           // 1. parallel bulk write into the stage (overwrite replays fine)
@@ -266,9 +262,7 @@ object JdbcSource {
               try conn.rollback() catch { case _: Throwable => () }
               throw e
           } finally st2.close()
-          graft.core.LoadResult(success = true, rowsLoaded = staged.rowsLoaded,
-            tableName = cfg.table,
-            durationSeconds = (System.nanoTime() - t0) / 1e9)
+          graft.core.LoadResult.since(t0, cfg.table, staged.rowsLoaded)
       }
     } finally conn.close()
   }

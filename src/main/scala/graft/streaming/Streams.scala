@@ -174,9 +174,7 @@ object Streams {
         BatchDirs.write(kept, corpusPath, batchId)
         BatchDirs.write(newSigs.join(broadcast(drops), Seq(idCol), "left_anti"),
           indexPath, batchId)
-        onLoad(LoadResult(success = true, rowsLoaded = keptN,
-          tableName = corpusPath,
-          durationSeconds = (System.nanoTime() - t0) / 1e9,
+        onLoad(LoadResult.since(t0, corpusPath, keptN,
           errorMessage = if (dropped > 0) Some(s"deduped: $dropped") else None))
       }
 
@@ -228,17 +226,13 @@ object Streams {
           BatchDirs.write(kept.drop("assistant_md5"), corpusPath, batchId)
           BatchDirs.write(kept.select(col("doc_id"), col("assistant_md5")),
             indexPath, batchId)
-          onLoad(LoadResult(success = true, rowsLoaded = keptN,
-            tableName = corpusPath,
-            durationSeconds = (System.nanoTime() - t0) / 1e9,
+          onLoad(LoadResult.since(t0, corpusPath, keptN,
             errorMessage =
               if (keptN < total)
                 Some(s"invalid=${total - vN};dup=${vN - keptN}")
               else None))
         } else {
-          onLoad(LoadResult(success = true, rowsLoaded = 0L,
-            tableName = corpusPath,
-            durationSeconds = (System.nanoTime() - t0) / 1e9))
+          onLoad(LoadResult.since(t0, corpusPath, 0L))
         }
       }
 
@@ -312,9 +306,7 @@ object Streams {
         BatchDirs.write(kept, corpusPath, batchId)
         BatchDirs.write(newHashes.join(broadcast(drops), Seq(idCol), "left_anti"),
           indexPath, batchId)
-        onLoad(LoadResult(success = true, rowsLoaded = keptN,
-          tableName = corpusPath,
-          durationSeconds = (System.nanoTime() - t0) / 1e9,
+        onLoad(LoadResult.since(t0, corpusPath, keptN,
           errorMessage = if (dropped > 0) Some(s"deduped: $dropped") else None))
       }
 
@@ -407,9 +399,7 @@ object Streams {
           BatchDirs.write(kept.drop("__fp"), corpusPath, batchId)
           BatchDirs.write(kept.select(col(idCol), col("__fp").as("fp")),
             indexPath, batchId)
-          onLoad(LoadResult(success = true, rowsLoaded = keptN,
-            tableName = corpusPath,
-            durationSeconds = (System.nanoTime() - t0) / 1e9,
+          onLoad(LoadResult.since(t0, corpusPath, keptN,
             errorMessage =
               if (keptN < total)
                 Some((if (htmlExtract) s"html=${total - hN};" else "") +
@@ -418,9 +408,7 @@ object Streams {
                   s";dup=${mN - keptN}")
               else None))
         } else {
-          onLoad(LoadResult(success = true, rowsLoaded = 0L,
-            tableName = corpusPath,
-            durationSeconds = (System.nanoTime() - t0) / 1e9))
+          onLoad(LoadResult.since(t0, corpusPath, 0L))
         }
       }
 
@@ -640,9 +628,7 @@ object Streams {
           BatchDirs.write(stages.toDF("stage_idx", "stage", "n_docs").coalesce(1),
             s"$workDir/stats", batchId)
           BatchDirs.write(exactKept.select(col("__fp").as("fp")), fpPath, batchId)
-          onLoad(LoadResult(success = true, rowsLoaded = sN,
-            tableName = s"$workDir/corpus",
-            durationSeconds = (System.nanoTime() - t0) / 1e9,
+          onLoad(LoadResult.since(t0, s"$workDir/corpus", sN,
             errorMessage = if (sN < total)
               Some((if (htmlExtract) s"html=${total - hN};" else "") +
                 s"gates=${hN - mN};dup=${mN - nN};decon=${nN - dnN};" +
@@ -651,9 +637,7 @@ object Streams {
         } else {
           // no directory mint for empty micro-batches (the sibling-sink
           // convention) — sums and carried offsets are unaffected
-          onLoad(LoadResult(success = true, rowsLoaded = 0L,
-            tableName = s"$workDir/corpus",
-            durationSeconds = (System.nanoTime() - t0) / 1e9))
+          onLoad(LoadResult.since(t0, s"$workDir/corpus", 0L))
         }
       }
 
@@ -733,18 +717,14 @@ object Streams {
           BatchDirs.write(kept.drop("__fp"), corpusPath, batchId)
           BatchDirs.write(kept.select(col(idCol), col("__fp").as("fp")),
             indexPath, batchId)
-          onLoad(LoadResult(success = true, rowsLoaded = keptN,
-            tableName = corpusPath,
-            durationSeconds = (System.nanoTime() - t0) / 1e9,
+          onLoad(LoadResult.since(t0, corpusPath, keptN,
             errorMessage =
               if (keptN < total)
                 Some(s"unrouted=${total - routedN};gated=${routedN - gN};" +
                   s"dup=${gN - keptN}")
               else None))
         } else {
-          onLoad(LoadResult(success = true, rowsLoaded = 0L,
-            tableName = corpusPath,
-            durationSeconds = (System.nanoTime() - t0) / 1e9))
+          onLoad(LoadResult.since(t0, corpusPath, 0L))
         }
       }
 
@@ -789,9 +769,7 @@ object Streams {
         // lets preferencePairsOf infer a schema before any data arrives
         // (the trendingTopKSink convention)
         BatchDirs.write(ext, statePath, batchId)
-        onLoad(LoadResult(success = true, rowsLoaded = n,
-          tableName = statePath,
-          durationSeconds = (System.nanoTime() - t0) / 1e9))
+        onLoad(LoadResult.since(t0, statePath, n))
       }
 
   /** The current preference pairs of a [[preferencePairSink]] state
@@ -815,40 +793,15 @@ object Streams {
     * stop — the reference's requirement 1.5 early-exit. */
   def availableNow: Trigger = Trigger.AvailableNow()
 
-  /** T3/S8: incremental MERGE sink. Each micro-batch upserts into a
-    * parquet table via latest-wins, then atomically swaps directories.
-    * Plain parquet has no ACID MERGE (SURVEY §7.5 risk 1) — write-new +
-    * rename is the single-writer equivalent; a 100 TB deployment
-    * partitions the base table and rewrites only touched partitions.
-    * Batch sizes here are micro-batches: the base-read + window cost is
-    * proportional to base∪delta on the merge keys, one shuffle. */
+  /** T3/S8: incremental MERGE of one batch into a whole parquet table
+    * ([[graft.operators.Merge.upsert]]): latest-wins, then an atomic
+    * directory swap; an empty batch leaves the table untouched. Plain
+    * parquet has no ACID MERGE (SURVEY §7.5 risk 1) — write-new + rename
+    * is the single-writer equivalent; a 100 TB deployment partitions the
+    * base table and rewrites only touched partitions. */
   def mergeBatch(spark: SparkSession, batch: DataFrame, path: String,
-      keys: Seq[String], versionCol: String): LoadResult = {
-    val t0 = System.nanoTime()
-    val target = new Path(path)
-    // resolve by the path's own scheme — FileSystem.get(conf) returns
-    // the defaultFS client and throws on e.g. an s3a:// target
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // one extra micro-batch-sized count for the LoadResult row tally
-    // (reference base.py:62-69), never the 100 TB base table. The count
-    // and the write each run the batch's plan: [[mergeSink]] persists
-    // the micro-batch first so its source and state run once
-    val incoming = batch.count()
-    // checked rename-rename swap, not delete-then-rename: a crash
-    // between a delete and the rename would vaporize the accumulated
-    // base table; a crash between the two renames leaves the backup,
-    // healed on the next batch (replays are safe: latest-wins
-    // re-merging the same delta is a no-op)
-    AtomicSwap.replace(fs, target) { side =>
-      val base =
-        if (fs.exists(target)) spark.read.parquet(path)
-        else batch.limit(0)
-      Merge.latestWins(base, batch, keys, col(versionCol))
-        .write.mode("overwrite").parquet(side.toString)
-    }
-    LoadResult(success = true, rowsLoaded = incoming, tableName = path,
-      durationSeconds = (System.nanoTime() - t0) / 1e9)
-  }
+      keys: Seq[String], versionCol: String): LoadResult =
+    Merge.upsert(spark, path, batch, keys, col(versionCol), None)
 
   /** Incremental aggregate maintenance (materialized-view style): a
     * persistent per-key aggregate table — row count + exact decimal sum
@@ -1213,9 +1166,7 @@ object Streams {
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val lastApplied = AtomicSwap.marker(fs, target, AggBatchMarker)
     if (batchId >= 0 && lastApplied.exists(batchId <= _))
-      return LoadResult(success = true, rowsLoaded = 0L,
-        tableName = changelogPath,
-        durationSeconds = (System.nanoTime() - t0) / 1e9)
+      return LoadResult.since(t0, changelogPath, 0L)
     // batch-mode diffs (batchId < 0) must not REGRESS the marker — a
     // later streaming replay would re-diff against the advanced
     // snapshot and overwrite its changelog entry with an empty diff
@@ -1232,9 +1183,7 @@ object Streams {
     AtomicSwap.replace(fs, target, Seq(AggBatchMarker -> markerValue)) { side =>
       batch.write.mode("overwrite").parquet(side.toString)
     }
-    LoadResult(success = true, rowsLoaded = changes,
-      tableName = changelogPath,
-      durationSeconds = (System.nanoTime() - t0) / 1e9)
+    LoadResult.since(t0, changelogPath, changes)
   }
 
   /** writeStream wiring for [[snapshotDiffBatch]] (checkpointed). */
@@ -1388,16 +1337,16 @@ object Streams {
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val lastApplied = AtomicSwap.marker(fs, target, AggBatchMarker)
     if (batchId >= 0 && lastApplied.exists(batchId <= _))
-      return LoadResult(success = true, rowsLoaded = 0L, tableName = path,
-        durationSeconds = (System.nanoTime() - t0) / 1e9)
+      return LoadResult.since(t0, path, 0L)
     // batch-mode folds (batchId < 0) must not REGRESS the marker: a
     // later streaming replay would otherwise re-fold and corrupt totals
     val markerValue = if (batchId >= 0) batchId else lastApplied.getOrElse(-1L)
     val sumCols = partial.columns.filterNot(keyCols.contains)
     val outRows = AtomicSwap.replace(fs, target,
         Seq(AggBatchMarker -> markerValue)) { side =>
+      // by part files: the export manifest folds into `_manifest`
       val base =
-        if (fs.exists(target)) spark.read.parquet(path)
+        if (fs.exists(target)) graft.operators.Export.readFlat(spark, path)
         else partial.limit(0)
       // by-name union: if a caller reuses an existing table path with a
       // different column order (or a renamed measure), a positional union
@@ -1408,10 +1357,9 @@ object Streams {
       // count the WRITTEN files (footer metadata) before the swap — the
       // merged plan still references the old base directory and cannot
       // be re-executed once the rename replaces it
-      spark.read.parquet(side.toString).count()
+      graft.operators.Export.readFlat(spark, side.toString).count()
     }
-    LoadResult(success = true, rowsLoaded = outRows, tableName = path,
-      durationSeconds = (System.nanoTime() - t0) / 1e9)
+    LoadResult.since(t0, path, outRows)
   }
 
   /** Streaming trending top-k: tumbling-window counts per item with
@@ -1497,9 +1445,6 @@ object Streams {
     // a crashed pending swap awaiting heal (or vice versa)
     val tmp = new Path(path + "__compactbatches")
     val manifest = new Path(root, "_compact_pending")
-    def checked(ok: Boolean, what: String): Unit =
-      if (!ok) throw new java.io.IOException(
-        s"compactBatchOutput: $what failed on $path")
     // Swap the merged directory in. Ordering bounds what a reader racing
     // the maintenance window can observe: only the target-named source
     // is ever absent (one delete + one rename); the other sources stay
@@ -1511,14 +1456,14 @@ object Streams {
       val targetPath = new Path(root, target)
       if (fs.exists(tmp)) {
         if (fs.exists(targetPath))
-          checked(fs.delete(targetPath, true), s"delete source $target")
-        checked(fs.rename(tmp, targetPath), s"rename merged dir to $target")
+          AtomicSwap.checked(fs.delete(targetPath, true), "delete source", targetPath)
+        AtomicSwap.checked(fs.rename(tmp, targetPath), "rename merged dir", targetPath)
       }
       sources.filter(_ != target).foreach { d =>
         val p = new Path(root, d)
-        if (fs.exists(p)) checked(fs.delete(p, true), s"delete source $d")
+        if (fs.exists(p)) AtomicSwap.checked(fs.delete(p, true), "delete source", p)
       }
-      checked(fs.delete(manifest, false), "retire manifest")
+      AtomicSwap.checked(fs.delete(manifest, false), "retire manifest", manifest)
     }
     if (fs.exists(manifest)) {
       // interrupted swap — finish it (the manifest is only published
@@ -1533,7 +1478,7 @@ object Streams {
     } else if (fs.exists(tmp)) {
       // merged write that never published a manifest: no source was
       // touched, the side copy is unaccounted — discard and restart
-      checked(fs.delete(tmp, true), "discard unpublished side dir")
+      AtomicSwap.checked(fs.delete(tmp, true), "discard unpublished side dir", tmp)
     }
     val ids = BatchDirs.committed(spark, path)
     val sources = ids.dropRight(1) // newest dir is never touched
@@ -1553,7 +1498,7 @@ object Streams {
       (targetDir +: sources.map(i => s"batch=$i"))
         .mkString("\n").getBytes("UTF-8"))
     finally out.close()
-    checked(fs.rename(pending, manifest), "publish manifest")
+    AtomicSwap.checked(fs.rename(pending, manifest), "publish manifest", manifest)
     swapIn(targetDir, sources.map(i => s"batch=$i"))
     sources.size
   }
@@ -1636,13 +1581,7 @@ object Streams {
       keys: Seq[String], versionCol: String,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
-    foldSink(stream, checkpoint, trig) { (batch, _) =>
-        // persist once: foreachBatch hands over an uncached frame, and
-        // the count and the write would each re-run its source and state
-        val cached = batch.persist()
-        try onLoad(mergeBatch(batch.sparkSession, cached, path, keys, versionCol))
-        finally cached.unpersist()
-      }
+    upsertSink(stream, path, checkpoint, keys, versionCol, None, trig, onLoad)
 
   /** EXACTLY-ONCE streaming warehouse load over JDBC (the S8 streaming
     * half; reference `operators.py:336-378` loads fire-and-forget):
@@ -1670,26 +1609,30 @@ object Streams {
   /** Streaming twin of [[graft.operators.Merge.mergeIntoPartitioned]]:
     * each micro-batch rewrites only the partitions it touches. This is
     * the sink a 100 TB fact table actually runs — per-batch cost scales
-    * with the delta, not the table. The batch is persisted once, so its
-    * source scan and any stateful step upstream (dedup state store) run
-    * once per trigger: the merge's planning aggregate materializes it,
-    * the write reads it back, and the aggregate's row count is the
-    * [[graft.core.LoadResult]] tally. */
+    * with the delta, not the table. */
   def partitionedMergeSink(stream: DataFrame, path: String,
       checkpoint: String, keys: Seq[String], versionCol: String,
       partitionCol: String,
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
+    upsertSink(stream, path, checkpoint, keys, versionCol, Some(partitionCol),
+      trig, onLoad)
+
+  /** The one body of both merge sinks. The micro-batch is persisted
+    * once: foreachBatch hands over an uncached frame, and the core's
+    * planning aggregate and its write would each re-run the batch's
+    * source scan and any stateful step upstream (dedup state store).
+    * The aggregate materializes it, the write reads it back. */
+  private def upsertSink(stream: DataFrame, path: String, checkpoint: String,
+      keys: Seq[String], versionCol: String, partitionCol: Option[String],
+      trig: Trigger,
+      onLoad: LoadResult => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
     foldSink(stream, checkpoint, trig) { (batch, _) =>
-        val t0 = System.nanoTime()
-        val cached = batch.persist()
-        try {
-          val incoming = graft.operators.Merge.mergeIntoPartitioned(
-            batch.sparkSession, path, cached, keys, col(versionCol), partitionCol)
-          onLoad(LoadResult(success = true, rowsLoaded = incoming,
-            tableName = path, durationSeconds = (System.nanoTime() - t0) / 1e9))
-        } finally cached.unpersist()
-      }
+      val cached = batch.persist()
+      try onLoad(Merge.upsert(batch.sparkSession, path, cached, keys,
+        col(versionCol), partitionCol))
+      finally cached.unpersist()
+    }
 
   /** Validated sink (Q7 at stream time): each micro-batch splits into
     * valid rows → the target table and rejects (with reason tags) → the
@@ -1717,9 +1660,7 @@ object Streams {
           // reports the whole split (both counts are micro-batch-sized)
           val loaded = valid.count()
           val rejected = rejects.count()
-          onLoad(LoadResult(success = true, rowsLoaded = loaded,
-            tableName = targetPath,
-            durationSeconds = (System.nanoTime() - t0) / 1e9,
+          onLoad(LoadResult.since(t0, targetPath, loaded,
             errorMessage =
               if (rejected > 0) Some(s"quarantined: $rejected") else None))
         } finally cached.unpersist()
@@ -1902,9 +1843,7 @@ object Streams {
                 .withColumn("cluster", explode(col("cells")))
           BatchDirs.write(assigned, corpus, batchId, "cluster")
           sinkEpochCommit(fs, new Path(corpus), checkpoint, "ivfIngestSink")
-          onLoad(LoadResult(success = true,
-            rowsLoaded = b.count(), tableName = corpus,
-            durationSeconds = (System.nanoTime() - t0) / 1e9))
+          onLoad(LoadResult.since(t0, corpus, b.count()))
         } finally org.apache.spark.sql.GraftShims.unpersistCheckpoint(b)
       }
   }
@@ -1947,9 +1886,7 @@ object Streams {
         val n = graft.similarity.PqIndex.append(spark, indexPath, batch,
           idCol, vecCol, batchId)
         sinkEpochCommit(fs, new Path(corpus), checkpoint, "pqIndexIngestSink")
-        onLoad(LoadResult(success = true,
-          rowsLoaded = n, tableName = corpus,
-          durationSeconds = (System.nanoTime() - t0) / 1e9))
+        onLoad(LoadResult.since(t0, corpus, n))
       }
 
   /** Streaming entity resolution — incremental record linkage against
@@ -2021,9 +1958,7 @@ object Streams {
         // holds because old-old pairs are never generated
         BatchDirs.write(links, linksPath, batchId)
         BatchDirs.write(newSlim, recordsPath, batchId)
-        onLoad(LoadResult(success = true, rowsLoaded = newSlim.count(),
-          tableName = recordsPath,
-          durationSeconds = (System.nanoTime() - t0) / 1e9))
+        onLoad(LoadResult.since(t0, recordsPath, newSlim.count()))
       }
 
   /** Incrementally-maintained component assignment over

@@ -61,4 +61,22 @@ class LayoutSpec extends AnyFunSuite {
     val backup = occurrences("\"__old\"")
     assert(backup == Map("graft/core/AtomicSwap.scala" -> 1), backup)
   }
+
+  test("the latest-wins tables share one upsert core and one winner") {
+    val merge = "graft/operators/Merge.scala"
+    assert(!occurrences("latestWins(").contains("graft/streaming/Streams.scala"))
+    // every call of latestWins in Merge.scala sits inside the core, whose
+    // body ends at the first line that closes a member (two-space `}`)
+    val src = Files.readString(root.resolve(merge))
+    val core = src.indexOf("def upsert(")
+    val coreEnd = src.indexOf("\n  }\n", core)
+    val calls = """(?<!def )\blatestWins\(""".r.findAllMatchIn(src).map(_.start).toSeq
+    assert(core >= 0 && coreEnd > core, s"no upsert core in $merge")
+    assert(calls.nonEmpty && calls.forall(c => c > core && c < coreEnd),
+      s"latestWins( called outside the upsert core at offsets $calls")
+    // one winner selection (latestWins and readAsOf) and one
+    // partition-rewrite commit (the core and forgetKeys)
+    assert(occurrences("TopK.perKey(").get(merge).contains(1))
+    assert(occurrences(".option(\"partitionOverwriteMode\"").get(merge).contains(1))
+  }
 }

@@ -84,27 +84,35 @@ class MergeSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("mergeIntoPartitioned bootstraps an empty table") {
-    val dir = Files.createTempDirectory("graft-merge0").toString + "/fact"
-    def merge(rows: (Long, String, String, Int)*): Long =
-      Merge.mergeIntoPartitioned(spark, dir, rows.toDF("id", "dt", "v", "ver"),
-        Seq("id"), col("ver"), "dt")
-    // an empty delta into a table that does not exist yet creates nothing:
-    // an empty directory would have no schema for the next merge to read
-    assert(merge() == 0L)
-    assert(!Files.exists(Paths.get(dir)))
-    assert(merge((1L, "2024-01-01", "a", 1), (2L, "2024-01-02", "b", 1)) == 2L)
-    assert(spark.read.parquet(dir).count() == 2)
+    // the same empty-delta rule for both layouts of the upsert core: the
+    // partitioned table and the whole table (Streams.mergeBatch)
+    val layouts = Seq[(String, (String, org.apache.spark.sql.DataFrame) => Long)](
+      "partitioned" -> ((dir, delta) =>
+        Merge.mergeIntoPartitioned(spark, dir, delta, Seq("id"), col("ver"), "dt")),
+      "whole" -> ((dir, delta) => graft.streaming.Streams.mergeBatch(
+        spark, delta, dir, Seq("id"), "ver").rowsLoaded))
+    for ((layout, upsert) <- layouts) withClue(s"$layout table: ") {
+      val dir = Files.createTempDirectory("graft-merge0").toString + "/fact"
+      def merge(rows: (Long, String, String, Int)*): Long =
+        upsert(dir, rows.toDF("id", "dt", "v", "ver"))
+      // an empty delta into a table that does not exist yet creates nothing:
+      // an empty directory would have no schema for the next merge to read
+      assert(merge() == 0L)
+      assert(!Files.exists(Paths.get(dir)))
+      assert(merge((1L, "2024-01-01", "a", 1), (2L, "2024-01-02", "b", 1)) == 2L)
+      assert(spark.read.parquet(dir).count() == 2)
 
-    // an empty delta into an existing table touches no file
-    def files(): Map[String, java.nio.file.attribute.FileTime] =
-      Files.walk(Paths.get(dir)).iterator().asScala.filter(Files.isRegularFile(_))
-        .map(f => f.toString -> Files.getLastModifiedTime(f)).toMap
-    val before = files()
-    assert(merge() == 0L)
-    assert(files() == before)
-    assert(merge((1L, "2024-01-01", "A", 2)) == 1L)
-    assert(spark.read.parquet(dir).select("id", "v").as[(Long, String)].collect()
-      .toMap == Map(1L -> "A", 2L -> "b"))
+      // an empty delta into an existing table touches no file
+      def files(): Map[String, java.nio.file.attribute.FileTime] =
+        Files.walk(Paths.get(dir)).iterator().asScala.filter(Files.isRegularFile(_))
+          .map(f => f.toString -> Files.getLastModifiedTime(f)).toMap
+      val before = files()
+      assert(merge() == 0L)
+      assert(files() == before)
+      assert(merge((1L, "2024-01-01", "A", 2)) == 1L)
+      assert(spark.read.parquet(dir).select("id", "v").as[(Long, String)].collect()
+        .toMap == Map(1L -> "A", 2L -> "b"))
+    }
   }
 
   test("concurrent partitioned merges keep untouched partitions and the session mode") {

@@ -566,4 +566,99 @@ class PipelineRunnerSpec extends AnyFunSuite with SparkSpec {
     assert(res.status == TaskStatus.Failed)
     assert(res.error.exists(e => e.contains("null_pct(value)")), res.error)
   }
+
+  test("ELT canary: both MERGE paths equal a one-shot latest-wins over every batch") {
+    // dim_customers goes through the whole-table MERGE (Streams.mergeBatch)
+    // and fact_orders through the partitioned one (mergeIntoPartitioned);
+    // every key stays in its partition
+    val s = spark
+    import s.implicits._
+    val canaryYaml =
+      """name: elt_canary
+        |sources:
+        |  - source_id: customer
+        |    source_type: file
+        |  - source_id: orders
+        |    source_type: file
+        |transformations:
+        |  - model_name: dim_customers
+        |    model_type: mart
+        |    dependencies: [customer]
+        |    materialization: incremental
+        |    incremental_strategy: merge
+        |    unique_key: c_custkey
+        |    tests:
+        |      - unique: [c_custkey]
+        |    retries: 0
+        |  - model_name: fact_orders
+        |    model_type: mart
+        |    dependencies: [orders, dim_customers]
+        |    materialization: incremental
+        |    incremental_strategy: merge
+        |    unique_key: o_orderkey
+        |    tests:
+        |      - unique: [o_orderkey]
+        |      - relationships:
+        |          to: ref('dim_customers')
+        |          field: c_custkey
+        |    retries: 0
+        |dependencies:
+        |  transform_dim_customers: [ingest_customer]
+        |  transform_fact_orders: [ingest_orders, transform_dim_customers]
+        |""".stripMargin
+    // a full load, then two deltas: updates and inserts, a stale version
+    // that must lose, and an exact re-delivery of an applied row
+    val customers = Seq(
+      Seq((1L, "ann", 0L), (2L, "bob", 0L), (3L, "cy", 0L)),
+      Seq((2L, "bobby", 1L), (4L, "dee", 1L), (1L, "stale", -1L)),
+      Seq((2L, "bobby", 1L), (3L, "cyd", 2L)))
+      .map(_.toDF("c_custkey", "c_name", "version"))
+    val orders = Seq(
+      Seq((10L, 1L, 202401, 5.0, 0L), (11L, 2L, 202401, 7.0, 0L),
+        (12L, 3L, 202402, 9.0, 0L)),
+      Seq((11L, 2L, 202401, 8.0, 1L), (13L, 4L, 202402, 1.0, 1L),
+        (10L, 1L, 202401, -1.0, -1L)),
+      Seq((11L, 2L, 202401, 8.0, 1L), (12L, 3L, 202402, 9.5, 2L)))
+      .map(_.toDF("o_orderkey", "c_custkey", "o_month", "amount", "version"))
+    val root = java.nio.file.Files.createTempDirectory("graft-elt-canary").toString
+    val (dimPath, factPath) = (s"$root/dim_customers", s"$root/fact_orders")
+    val spec = PipelineSpec.fromYaml(canaryYaml)
+    customers.zip(orders).zipWithIndex.foreach { case ((c, o), batch) =>
+      val r = new PipelineRunner(spark,
+        sources = Map("customer" -> (_ => c), "orders" -> (_ => o)),
+        models = Map(
+          "dim_customers" -> { d =>
+            graft.streaming.Streams.mergeBatch(spark, d("customer"), dimPath,
+              Seq("c_custkey"), "version")
+            spark.read.parquet(dimPath)
+          },
+          "fact_orders" -> { d =>
+            graft.operators.Merge.mergeIntoPartitioned(spark, factPath,
+              d("orders"), Seq("o_orderkey"), col("version"), "o_month")
+            spark.read.parquet(factPath)
+          }),
+        asOf = java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
+      r.sleeper = _ => ()
+      val results = r.run(spec, parallelism = 1)
+      val failed = results.values.filter(_.status != TaskStatus.Success)
+      assert(failed.isEmpty, s"batch $batch: " +
+        failed.map(t => s"${t.taskId}: ${t.error}").mkString("; "))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame, cols: Seq[String]): Set[Seq[Any]] =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    def oneShot(batches: Seq[org.apache.spark.sql.DataFrame], key: String) = {
+      val all = batches.reduce(_ unionByName _)
+      graft.operators.Merge.latestWins(all.limit(0), all, Seq(key), col("version"))
+    }
+    val dimCols = Seq("c_custkey", "c_name", "version")
+    val dim = rows(spark.read.parquet(dimPath), dimCols)
+    assert(dim == rows(oneShot(customers, "c_custkey"), dimCols))
+    assert(dim.map(_.take(2)) == Set(Seq(1L, "ann"), Seq(2L, "bobby"),
+      Seq(3L, "cyd"), Seq(4L, "dee")))
+    val factCols = Seq("o_orderkey", "c_custkey", "o_month", "amount", "version")
+    val fact = rows(spark.read.parquet(factPath), factCols)
+    assert(fact == rows(oneShot(orders, "o_orderkey"), factCols))
+    assert(fact.map(r => r.head -> r(3)).toMap ==
+      Map(10L -> 5.0, 11L -> 8.0, 12L -> 9.5, 13L -> 1.0))
+  }
 }
