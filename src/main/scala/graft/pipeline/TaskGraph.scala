@@ -4,10 +4,11 @@ package graft.pipeline
   *
   * Re-expresses the reference's networkx-backed `TaskManager`
   * (`src/orchestration/task_manager.py:111-418`): topological levels,
-  * cycle detection, trigger rules, ready-set computation. Deliberately
-  * NOT a runtime scheduler — Spark's DAG scheduler handles intra-query
-  * parallelism; this orders whole tasks (ingest → transform → validate)
-  * and validates config (SURVEY §1.1 "keep a thin PipelineGraph only for
+  * cycle detection, trigger rules, ready-set computation. Not itself a
+  * scheduler — [[PipelineRunner.run]] starts whole tasks (ingest →
+  * transform → validate) from [[startable]] and Spark's DAG scheduler
+  * handles the parallelism inside each; this layer orders tasks and
+  * validates config (SURVEY §1.1 "keep a thin PipelineGraph only for
   * config validation").
   */
 object TaskStatus {
@@ -18,8 +19,13 @@ object TaskStatus {
   val Skipped = "skipped"
 }
 
+/** `startNanos`/`endNanos` are `System.nanoTime` stamps bounding the
+  * task's whole execution, retries included (0 for a task that never
+  * ran); `durationSeconds` is its last attempt. Compare stamps only
+  * within one JVM. */
 case class TaskResult(taskId: String, status: String,
-    durationSeconds: Double = 0.0, error: Option[String] = None)
+    durationSeconds: Double = 0.0, error: Option[String] = None,
+    startNanos: Long = 0L, endNanos: Long = 0L)
 
 /** Aggregate execution statistics for one task across a runner's
   * history (reference `task_manager.py:356-388`). */
@@ -129,6 +135,12 @@ case class TaskGraph(tasks: Set[String], deps: Map[String, Seq[String]],
     * deterministic (`task_manager.py:336-341`). */
   private def byPriority(ids: Seq[String]): Seq[String] =
     ids.sortBy(id => (-priorities.getOrElse(id, 1), id))
+
+  /** Of `waiting`, the tasks whose every upstream has a result in `ctx`,
+    * higher priority first: what a scheduler may start, or skip on its
+    * trigger rule, next. */
+  def startable(waiting: Set[String], ctx: Map[String, TaskResult]): Seq[String] =
+    byPriority(waiting.filter(upstream(_).forall(ctx.contains)).toSeq)
 
   /** Tasks ready to execute now, higher priority first
     * (`task_manager.py:327-341`). */

@@ -243,19 +243,26 @@ class PipelineRunnerSpec extends AnyFunSuite with SparkSpec {
 
   test("parallelism runs a level's independent ingests concurrently") {
     val active = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var highWater = 0
-    def tracked(path: String): org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame =
+    val highWater = new java.util.concurrent.atomic.AtomicInteger(0)
+    // `meet`: both ingests must be inside their source at once (parallel
+    // half only); the timeout turns a missing overlap into a failure
+    def tracked(path: String, meet: Option[java.util.concurrent.CountDownLatch])
+        : org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame =
       s => {
-        val n = active.incrementAndGet()
-        highWater = math.max(highWater, n)
-        try { Thread.sleep(150); s.read.parquet(path) }
-        finally active.decrementAndGet()
+        highWater.accumulateAndGet(active.incrementAndGet(), math.max)
+        try {
+          meet.foreach { l =>
+            l.countDown()
+            assert(l.await(30, java.util.concurrent.TimeUnit.SECONDS), "ingests never overlapped")
+          }
+          s.read.parquet(path)
+        } finally active.decrementAndGet()
       }
-    def make = new PipelineRunner(
+    def make(meet: Option[java.util.concurrent.CountDownLatch]) = new PipelineRunner(
       spark,
       sources = Map(
-        "orders_src" -> tracked(s"$sf/orders.parquet"),
-        "customer_src" -> tracked(s"$sf/customer.parquet")),
+        "orders_src" -> tracked(s"$sf/orders.parquet", meet),
+        "customer_src" -> tracked(s"$sf/customer.parquet", meet)),
       models = Map.empty,
       asOf = java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
     val yaml2 =
@@ -268,14 +275,242 @@ class PipelineRunnerSpec extends AnyFunSuite with SparkSpec {
         |""".stripMargin
     val spec = PipelineSpec.fromYaml(yaml2)
 
-    val seq = make.run(spec) // default: sequential
+    val seq = make(None).run(spec, parallelism = 1)
     assert(seq.values.forall(_.status == TaskStatus.Success))
-    assert(highWater == 1, s"sequential run overlapped: $highWater")
+    assert(highWater.get == 1, s"sequential run overlapped: ${highWater.get}")
 
-    highWater = 0
-    val par = make.run(spec, parallelism = 2)
-    assert(par.values.forall(_.status == TaskStatus.Success))
-    assert(highWater == 2, s"parallel run never overlapped: $highWater")
+    highWater.set(0)
+    val par = make(Some(new java.util.concurrent.CountDownLatch(2))).run(spec, parallelism = 2)
+    assert(par.values.forall(_.status == TaskStatus.Success), par)
+    assert(highWater.get == 2, s"parallel run never overlapped: ${highWater.get}")
+  }
+
+  /** `body` under a deadline, so a run that hangs fails the test. */
+  private def within[T](seconds: Int)(body: => T): T = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    Await.result(Future(body), scala.concurrent.duration.Duration(seconds, "s"))
+  }
+
+  private val twoIngests =
+    """name: pair
+      |sources:
+      |  - source_id: a
+      |    source_type: file
+      |    retries: 0
+      |  - source_id: b
+      |    source_type: file
+      |    retries: 0
+      |transformations:
+      |  - model_name: m
+      |    model_type: staging
+      |    dependencies: [a]
+      |    retries: 0
+      |dependencies:
+      |  transform_m: [ingest_a]
+      |""".stripMargin
+
+  test("an Error thrown by a task is a Failed result; downstream is skipped") {
+    val r = new PipelineRunner(spark,
+      sources = Map("a" -> (s => s.range(3).toDF()), "b" -> (s => s.range(3).toDF())),
+      // Predef's assert throws java.lang.AssertionError, an Error
+      models = Map("m" -> (d => { Predef.assert(d("a").isEmpty, "model invariant"); d("a") })),
+      asOf = java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
+    r.sleeper = _ => ()
+    val spec = PipelineSpec.fromYaml(twoIngests.replace(
+      "  transform_m: [ingest_a]\n",
+      "  transform_m: [ingest_a]\n  validate_t: [transform_m]\n") +
+      "targets:\n  - table_name: t\n")
+    val results = within(120)(r.run(spec))
+    assert(results("transform_m").status == TaskStatus.Failed)
+    assert(results("transform_m").error.exists(e =>
+      e.startsWith("java.lang.AssertionError") && e.contains("model invariant")),
+      results("transform_m").error)
+    assert(results("validate_t").status == TaskStatus.Skipped)
+    assert(Seq("ingest_a", "ingest_b").forall(results(_).status == TaskStatus.Success))
+    assert(r.executionHistory("transform_m").map(_.status) == Seq(TaskStatus.Failed))
+  }
+
+  test("a fatal error is rethrown only after the running tasks finish") {
+    val bStarted = new java.util.concurrent.CountDownLatch(1)
+    @volatile var bFinished = false
+    val r = new PipelineRunner(spark,
+      sources = Map(
+        "a" -> (_ => {
+          assert(bStarted.await(30, java.util.concurrent.TimeUnit.SECONDS))
+          throw new StackOverflowError("fatal in a")
+        }),
+        "b" -> (s => {
+          bStarted.countDown(); Thread.sleep(300); bFinished = true; s.range(1).toDF()
+        })),
+      models = Map.empty,
+      asOf = java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
+    // not under `within`: a Future never completes on a fatal error; the
+    // latch timeout bounds this run instead
+    val e = intercept[StackOverflowError](
+      r.run(PipelineSpec.fromYaml(twoIngests), parallelism = 2))
+    assert(e.getMessage == "fatal in a")
+    assert(bFinished, "run() rethrew while a sibling task was still running")
+    // the downstream of the failed ingest never started
+    assert(r.executionHistory("transform_m").isEmpty)
+  }
+
+  test("task intervals: disjoint at parallelism 1, independent ingests overlap by default") {
+    def make(meet: Option[java.util.concurrent.CountDownLatch]) = {
+      def src(s: org.apache.spark.sql.SparkSession) = {
+        meet.foreach { l =>
+          l.countDown(); assert(l.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        }
+        s.range(3).toDF()
+      }
+      new PipelineRunner(spark, sources = Map("a" -> src, "b" -> src),
+        models = Map("m" -> (d => d("a"))),
+        asOf = java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
+    }
+    val spec = PipelineSpec.fromYaml(twoIngests)
+    def intervals(rs: Map[String, TaskResult]) = {
+      assert(rs.values.forall(_.status == TaskStatus.Success), rs)
+      rs.values.foreach(t => assert(t.startNanos > 0 && t.startNanos <= t.endNanos, t))
+      rs.values.toSeq.sortBy(_.startNanos)
+    }
+    val seq = intervals(make(None).run(spec, parallelism = 1))
+    seq.zip(seq.tail).foreach { case (x, y) =>
+      assert(x.endNanos <= y.startNanos, s"$x overlaps $y")
+    }
+    // a task starts only after its upstream ended
+    val m = seq.find(_.taskId == "transform_m").get
+    assert(seq.find(_.taskId == "ingest_a").get.endNanos <= m.startNanos)
+
+    assert(spark.sparkContext.defaultParallelism > 1)
+    val par = intervals(within(120)(
+      make(Some(new java.util.concurrent.CountDownLatch(2))).run(spec)))
+    val Seq(a, b) = Seq("ingest_a", "ingest_b").map(id => par.find(_.taskId == id).get)
+    assert(a.startNanos < b.endNanos && b.startNanos < a.endNanos, s"$a and $b never overlapped")
+  }
+
+  // ---- check messages: model tests and target checks share one aggregate ----
+
+  private val checkYaml =
+    """name: checks
+      |sources:
+      |  - source_id: dim_src
+      |    source_type: file
+      |  - source_id: fact_src
+      |    source_type: file
+      |transformations:
+      |  - model_name: dim
+      |    model_type: mart
+      |    dependencies: [dim_src]
+      |    tests:
+      |      - unique: [c_custkey]
+      |  - model_name: fact
+      |    model_type: mart
+      |    dependencies: [fact_src, dim]
+      |    tests:
+      |      - unique: [o_orderkey]
+      |$TESTS
+      |targets:
+      |  - table_name: fact
+      |    validation_rules:
+      |$RULES
+      |    fail_on_validation_error: true
+      |dependencies:
+      |  transform_dim: [ingest_dim_src]
+      |  transform_fact: [ingest_fact_src, transform_dim]
+      |  validate_fact: [transform_fact]
+      |""".stripMargin
+
+  /** dim keys 1–3; fact customers 1, 2, 3, 3, 9, 9, null; two negative
+    * amounts; the newest `updated_at` is 24 h before `asOf`. */
+  private def runChecks(tests: String = "", rules: String): Map[String, TaskResult] = {
+    val s = spark
+    import s.implicits._
+    val ts = java.sql.Timestamp.valueOf("2024-01-31 00:00:00")
+    val dim = Seq(1L, 2L, 3L).toDF("c_custkey")
+    val fact = Seq[(Long, Option[Long], Double)]((1, Some(1), 5.0), (2, Some(2), -1.0),
+      (3, Some(3), 2.0), (4, Some(3), -2.0), (5, Some(9), 1.0), (6, Some(9), 1.0),
+      (7, None, 1.0)).toDF("o_orderkey", "c_custkey", "amount")
+      .withColumn("updated_at", lit(ts))
+    val r = new PipelineRunner(spark,
+      sources = Map("dim_src" -> (_ => dim), "fact_src" -> (_ => fact)),
+      models = Map("dim" -> (d => d("dim_src")), "fact" -> (d => d("fact_src"))),
+      asOf = java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
+    r.sleeper = _ => ()
+    r.run(PipelineSpec.fromYaml(
+      checkYaml.replace("$TESTS\n", tests).replace("$RULES\n", rules)))
+  }
+
+  test("check message: relationships orphans") {
+    val rs = runChecks(
+      """      - relationships:
+        |          to: ref('dim')
+        |          field: c_custkey
+        |""".stripMargin, "      min_row_count: 1\n")
+    assert(rs("transform_fact").status == TaskStatus.Failed)
+    assert(rs("transform_fact").error.contains("tests: relationships(c_custkey→dim): 2 orphans"),
+      rs("transform_fact").error)
+    assert(rs("validate_fact").status == TaskStatus.Skipped)
+  }
+
+  test("check messages: min_row_count and max_age_hours") {
+    val v = runChecks(rules = "      min_row_count: 8\n      max_age_hours: 1\n")("validate_fact")
+    assert(v.status == TaskStatus.Failed)
+    assert(v.error.contains("min_row_count: 7 < 8; max_age_hours: 24.0 h > 1 h"), v.error)
+  }
+
+  test("check message: a COUNT-shaped custom check") {
+    val v = runChecks(rules =
+      """      custom_checks:
+        |        - name: no_negative_amounts
+        |          query: "SELECT COUNT(*) FROM fact WHERE amount < 0"
+        |          expected_result: 0
+        |        - name: two_unknown_customers
+        |          query: "SELECT COUNT(*) FROM fact WHERE c_custkey > 3"
+        |          expected_result: 2
+        |""".stripMargin)("validate_fact")
+    assert(v.status == TaskStatus.Failed)
+    assert(v.error.contains("no_negative_amounts: got 2, expected 0"), v.error)
+  }
+
+  test("check message: GROUP BY ... HAVING with expected_row_count still runs as SQL") {
+    val v = runChecks(rules =
+      """      custom_checks:
+        |        - name: one_order_per_customer
+        |          query: "SELECT c_custkey, COUNT(*) FROM fact GROUP BY c_custkey HAVING COUNT(*) > 1"
+        |          expected_row_count: 0
+        |""".stripMargin)("validate_fact")
+    assert(v.status == TaskStatus.Failed)
+    assert(v.error.contains("one_order_per_customer: got 2 rows, expected 0"), v.error)
+  }
+
+  test("a custom predicate naming a missing column fails the validate task, not the transform") {
+    val rs = runChecks(rules =
+      """      max_age_hours: 48
+        |      custom_checks:
+        |        - name: ok
+        |          query: "SELECT COUNT(*) FROM fact WHERE amount < -5"
+        |          expected_result: 0
+        |        - name: typo
+        |          query: "SELECT COUNT(*) FROM fact WHERE no_such_column < 0"
+        |          expected_result: 0
+        |""".stripMargin)
+    assert(rs("transform_fact").status == TaskStatus.Success, rs("transform_fact").error)
+    assert(rs("validate_fact").status == TaskStatus.Failed)
+    assert(rs("validate_fact").error.exists(_.contains("no_such_column")), rs("validate_fact").error)
+  }
+
+  test("a folded predicate that fails at run time fails the validate task, not the transform") {
+    // ANSI division by zero: analyzes, then throws once rows are read
+    val rs = runChecks(rules =
+      """      min_row_count: 1
+        |      custom_checks:
+        |        - name: boom
+        |          query: "SELECT COUNT(*) FROM fact WHERE 1 / (o_orderkey - o_orderkey) > 0"
+        |          expected_result: 0
+        |""".stripMargin)
+    assert(rs("transform_fact").status == TaskStatus.Success, rs("transform_fact").error)
+    assert(rs("validate_fact").status == TaskStatus.Failed)
+    assert(rs("validate_fact").error.exists(_.contains("DIVIDE_BY_ZERO")), rs("validate_fact").error)
   }
 
   // ---- ingest-time quality gate (reference validators.py:80-84) ----
@@ -495,6 +730,8 @@ class PipelineRunnerSpec extends AnyFunSuite with SparkSpec {
     assert(on.size == 1)
     assert(on.head.contains("\"tasks_total\":\"1\"") &&
       on.head.contains("\"tasks_success\":\"1\""))
+    // duration_sec sums the task times; wall_sec is the run's wall time
+    assert(on.head.contains("\"duration_sec\":") && on.head.contains("\"wall_sec\":"), on.head)
     assert(runCapturing("false").isEmpty)
   }
 
@@ -567,7 +804,12 @@ class PipelineRunnerSpec extends AnyFunSuite with SparkSpec {
     assert(res.error.exists(e => e.contains("null_pct(value)")), res.error)
   }
 
-  test("ELT canary: both MERGE paths equal a one-shot latest-wins over every batch") {
+  // parallelism 1 runs one task at a time; the default lets the two
+  // ingests, and dim_customers' MERGE and the orders ingest, overlap
+  for ((name, parallelism) <- Seq(
+      "ELT canary: both MERGE paths equal a one-shot latest-wins over every batch" -> Some(1),
+      "ELT canary at the default parallelism: both MERGE paths equal a one-shot latest-wins" -> None))
+  test(name) {
     // dim_customers goes through the whole-table MERGE (Streams.mergeBatch)
     // and fact_orders through the partitioned one (mergeIntoPartitioned);
     // every key stays in its partition
@@ -639,7 +881,7 @@ class PipelineRunnerSpec extends AnyFunSuite with SparkSpec {
           }),
         asOf = java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
       r.sleeper = _ => ()
-      val results = r.run(spec, parallelism = 1)
+      val results = parallelism.fold(r.run(spec))(p => r.run(spec, parallelism = p))
       val failed = results.values.filter(_.status != TaskStatus.Success)
       assert(failed.isEmpty, s"batch $batch: " +
         failed.map(t => s"${t.taskId}: ${t.error}").mkString("; "))

@@ -213,6 +213,16 @@ class PipelineSpecSpec extends AnyFunSuite {
     assert(g.readyTasks(after) == Seq("b"))
   }
 
+  test("startable: a task waits for every upstream's result, higher priority first") {
+    val g = TaskGraph(Set("a", "b", "c", "d"), Map("c" -> Seq("a", "b")),
+      triggerRules = Map("c" -> "one_success"), priorities = Map("d" -> 5))
+    assert(g.startable(g.tasks, Map.empty) == Seq("d", "a", "b"))
+    val aDone = Map("a" -> TaskResult("a", TaskStatus.Success))
+    // one_success could already fire, but b has no result yet
+    assert(g.startable(Set("b", "c"), aDone) == Seq("b"))
+    assert(g.startable(Set("c"), aDone + ("b" -> TaskResult("b", TaskStatus.Failed))) == Seq("c"))
+  }
+
   test("ready set orders by priority desc, id within a tie (task_manager.py:336-341)") {
     val g = TaskGraph(Set("a", "b", "c", "d"), Map.empty,
       priorities = Map("c" -> 9, "d" -> 9, "a" -> 2)) // b defaults to 1
@@ -237,8 +247,8 @@ class PipelineSpecSpec extends AnyFunSuite {
       "ingest_hot" -> 5, "ingest_cold" -> 1, "validate_t" -> 3))
     assert(TaskGraph.fromSpec(spec).readyTasks(Map.empty) ==
       Seq("ingest_hot", "validate_t", "ingest_cold"))
-    // the runner executes executionLevels in order, so the priority
-    // must order tasks WITHIN each level too (else it is test-only)
+    // the runner starts ready tasks in this order (TaskGraph.startable),
+    // and the levels order tasks by priority within each level too
     assert(TaskGraph.fromSpec(spec).executionLevels ==
       Seq(Seq("ingest_hot", "validate_t", "ingest_cold")))
   }
