@@ -487,8 +487,6 @@ object TextQueries extends QueryPack {
     * the parts. Every stage is a filter/map over the previous (filters
     * first — cheapest volume reduction ahead of the dedup shuffle). */
   def txCurationFunnel(s: SparkSession, dir: String): DataFrame = {
-    import graft.text.Curation
-    import graft.operators.Sampling
     // stage-survival FLAGS, map-side, instead of one filtered frame per
     // stage: a per-stage `df.agg(count)` union re-scans the source once
     // per stage (5× read amplification at corpus scale). Here the
@@ -496,37 +494,27 @@ object TextQueries extends QueryPack {
     // single scan; the dedup branch filters to c4 survivors FIRST (its
     // shuffle sees minimum volume) and yields dedup+sample counts in
     // one aggregate. The five rows explode from the joined 1×1 results.
-    val docs = table(s, dir, "documents")
-    val flagged = docs
-      .withColumn("__s1", Curation.gopherGate(col("text"),
-        minTokens = 50, minStopWords = 1))
-      .withColumn("__t2", segmentLines(col("text")))
-      .withColumn("clean", Curation.c4CleanedText(col("__t2"), minWords = 3))
-      .withColumn("__s2",
-        col("__s1") && !Curation.c4DocDrop(col("__t2")) && col("clean") =!= "")
-    val head = flagged.agg(
-      count(lit(1)).as("total"),
-      sum(col("__s1").cast("long")).as("gopher"),
-      sum(col("__s2").cast("long")).as("c4"))
-    // the window partitions by md5(clean) over s2 survivors only — the
-    // failed-rows empty-clean hub never reaches the exchange
-    val deduped = graft.dedup.Dedup.exactByContent(
-      flagged.filter(col("__s2")), "doc_id", "clean")
-    val tail = deduped.agg(
-      count(lit(1)).as("exact_dedup"),
-      // same predicate as Sampling.deterministicSample(_, "doc_id", 0.5)
-      sum((Sampling.hashBucket(col("doc_id")) <
-        (0.5 * Sampling.Buckets).toLong).cast("long")).as("sampled"))
-    def stageRow(i: Int, name: String) =
-      struct(lit(i).cast("int").as("stage_idx"), lit(name).as("stage"),
-        col(name).as("n_docs"))
-    head.crossJoin(tail)
-      .select(explode(array(stageRow(0, "total"), stageRow(1, "gopher"),
-        stageRow(2, "c4"), stageRow(3, "exact_dedup"),
-        stageRow(4, "sampled"))).as("s"))
-      .select(col("s.stage_idx").as("stage_idx"), col("s.stage").as("stage"),
-        col("s.n_docs").as("n_docs"))
-      .orderBy(col("stage_idx"))
+    val flagged = Curation.gateFlags(table(s, dir, "documents"), "text",
+      minTokens = 50, minStopWords = 1, segment = segmentLines)
+    Curation.stageTable(Curation.gateCounts(flagged)
+        .crossJoin(dedupSampleCounts(flagged)),
+      Seq("total", "gopher", "c4", "exact_dedup", "sampled"))
+  }
+
+  /** The funnels' shared tail over the c4 survivors of a
+    * [[graft.text.Curation.gateFlags]] frame: exact dedup on the cleaned
+    * text, then the deterministic 50% sample, counted in one aggregate.
+    * The dedup window partitions by md5(clean) over survivors only, so
+    * the failed rows' empty-clean hub never reaches the exchange. */
+  private def dedupSampleCounts(flagged: DataFrame): DataFrame = {
+    import graft.operators.Sampling
+    graft.dedup.Dedup.exactByContent(
+        flagged.filter(col(Curation.gateFlag("c4"))),
+        "doc_id", "clean")
+      .agg(count(lit(1)).as("exact_dedup"),
+        // same predicate as Sampling.deterministicSample(_, "doc_id", 0.5)
+        sum((Sampling.hashBucket(col("doc_id")) <
+          (0.5 * Sampling.Buckets).toLong).cast("long")).as("sampled"))
   }
 
   /** Model-gated curation funnel: the DCLM-style composition — Gopher
@@ -539,39 +527,17 @@ object TextQueries extends QueryPack {
     * tokens have no features and fail the gate (absent from scoring —
     * the shared convention, replayed by the oracle). */
   def txFunnelModel(s: SparkSession, dir: String): DataFrame = {
-    import graft.text.Curation
-    val flagged = table(s, dir, "documents")
-      .withColumn("__s1", Curation.gopherGate(col("text"),
-        minTokens = 50, minStopWords = 1))
-      .withColumn("__t2", segmentLines(col("text")))
-      .withColumn("clean", Curation.c4CleanedText(col("__t2"), minWords = 3))
-      .withColumn("__s2",
-        col("__s1") && !Curation.c4DocDrop(col("__t2")) && col("clean") =!= "")
-    val head = flagged.agg(
-      count(lit(1)).as("total"),
-      sum(col("__s1").cast("long")).as("gopher"),
-      sum(col("__s2").cast("long")).as("c4"))
-    val survivors = flagged.filter(col("__s2"))
-      .select(col("doc_id"), col("clean"))
-    val kept = survivors.join(
-      QualityClassifier.scoreQuantized(survivors, "doc_id", "clean",
-          QualityModelFixture.weightsQ, QualityModelFixture.biasQ,
-          QualityModelFixture.buckets)
-        .filter(col("clf_pass") === 1).select(col("doc_id")),
-      Seq("doc_id"))
-    val modelCount = kept.agg(count(lit(1)).as("model"))
-    val tail = graft.dedup.Dedup.exactByContent(kept, "doc_id", "clean")
-      .agg(count(lit(1)).as("exact_dedup"))
-    def stageRow(i: Int, name: String) =
-      struct(lit(i).cast("int").as("stage_idx"), lit(name).as("stage"),
-        col(name).as("n_docs"))
-    head.crossJoin(modelCount).crossJoin(tail)
-      .select(explode(array(stageRow(0, "total"), stageRow(1, "gopher"),
-        stageRow(2, "c4"), stageRow(3, "model"),
-        stageRow(4, "exact_dedup"))).as("s"))
-      .select(col("s.stage_idx").as("stage_idx"), col("s.stage").as("stage"),
-        col("s.n_docs").as("n_docs"))
-      .orderBy(col("stage_idx"))
+    val flagged = Curation.gateFlags(table(s, dir, "documents"), "text",
+      minTokens = 50, minStopWords = 1, segment = segmentLines)
+    val kept = Curation.modelGate(
+      flagged.filter(col(Curation.gateFlag("c4")))
+        .select(col("doc_id"), col("clean")),
+      "doc_id", "clean", QualityModelFixture.weightsQ,
+      QualityModelFixture.biasQ, QualityModelFixture.buckets)
+    val exact = graft.dedup.Dedup.exactByContent(kept, "doc_id", "clean")
+    Curation.stageTable(Curation.gateCounts(flagged).crossJoin(
+        Curation.survivorCounts(Seq("model" -> kept, "exact_dedup" -> exact))),
+      Seq("total", "gopher", "c4", "model", "exact_dedup"))
   }
 
   /** Deterministic HTML synthesis over `documents` (both engines build
@@ -618,35 +584,14 @@ object TextQueries extends QueryPack {
     * one-scan flag discipline as [[txCurationFunnel]]; the oracle
     * recomputes every stage including the extraction itself. */
   def txHtmlFunnel(s: SparkSession, dir: String): DataFrame = {
-    import graft.text.{Curation, Html}
-    import graft.operators.Sampling
-    val flagged = table(s, dir, "documents")
-      .withColumn("__x", Html.extractText(synthHtmlCol))
-      .withColumn("__s1", Curation.gopherGate(col("__x"),
-        minTokens = 20, minStopWords = 1))
-      .withColumn("clean", Curation.c4CleanedText(col("__x"), minWords = 3))
-      .withColumn("__s2",
-        col("__s1") && !Curation.c4DocDrop(col("__x")) && col("clean") =!= "")
-    val head = flagged.agg(
-      count(lit(1)).as("total"),
-      sum(col("__s1").cast("long")).as("gopher"),
-      sum(col("__s2").cast("long")).as("c4"))
-    val deduped = graft.dedup.Dedup.exactByContent(
-      flagged.filter(col("__s2")), "doc_id", "clean")
-    val tail = deduped.agg(
-      count(lit(1)).as("exact_dedup"),
-      sum((Sampling.hashBucket(col("doc_id")) <
-        (0.5 * Sampling.Buckets).toLong).cast("long")).as("sampled"))
-    def stageRow(i: Int, name: String) =
-      struct(lit(i).cast("int").as("stage_idx"), lit(name).as("stage"),
-        col(name).as("n_docs"))
-    head.crossJoin(tail)
-      .select(explode(array(stageRow(0, "total"), stageRow(1, "gopher"),
-        stageRow(2, "c4"), stageRow(3, "exact_dedup"),
-        stageRow(4, "sampled"))).as("s"))
-      .select(col("s.stage_idx").as("stage_idx"), col("s.stage").as("stage"),
-        col("s.n_docs").as("n_docs"))
-      .orderBy(col("stage_idx"))
+    // the html flag is not a stage here: a page extracting to nothing
+    // fails the Gopher gate anyway, so `gopher` counts the same docs
+    val flagged = Curation.gateFlags(
+      table(s, dir, "documents").withColumn("html", synthHtmlCol), "html",
+      minTokens = 20, minStopWords = 1, html = true)
+    Curation.stageTable(Curation.gateCounts(flagged)
+        .crossJoin(dedupSampleCounts(flagged)),
+      Seq("total", "gopher", "c4", "exact_dedup", "sampled"))
   }
 
   /** The COMPLETE pretraining-data pipeline, end to end, with
@@ -688,7 +633,6 @@ object TextQueries extends QueryPack {
     * itself read again by both query tails, so checkpointing below it
     * (survivors only) re-ran the gates scan once per query. */
   private def pretrainChain(s: SparkSession, dir: String): PretrainChain = {
-    import graft.text.{Curation, QualityClassifier, QualityModelFixture, TextFunctions}
     val docs = table(s, dir, "documents")
     // frequency-threshold spelling of the gate (maxHits = 2 over a
     // multi-term list) so the blocklist stage actually gates the
@@ -710,29 +654,17 @@ object TextQueries extends QueryPack {
     // dropped docs (never read for them — the only consumers of clean
     // are survivor frames), so the extra cost over the old checkpoint
     // is four booleans per corpus row (guide §1.2 step 1 / §2.4).
-    val flagged = docs
-      .withColumn("__s1",
-        Curation.blocklistPassed(col("text"), terms, maxHits = 2L))
-      .withColumn("__sL",
-        col("__s1") && (TextFunctions.langId(col("text")) === "en"))
-      .withColumn("__s2", col("__sL") && Curation.gopherGate(
-        col("text"), minTokens = 50, minStopWords = 1))
-      .withColumn("__t2", segmentLines(col("text")))
-      .withColumn("clean", Curation.c4CleanedText(col("__t2"), minWords = 3))
-      .withColumn("__s3",
-        col("__s2") && !Curation.c4DocDrop(col("__t2")) && col("clean") =!= "")
-      .select(col("doc_id"), col("source"),
-        col("__s1"), col("__sL"), col("__s2"), col("__s3"),
-        when(col("__s3"), col("clean")).as("clean"))
+    val gated = Curation.gateFlags(docs, "text", minTokens = 50,
+      minStopWords = 1, blocklist = Some((terms, 2L)), lang = Some("en"),
+      segment = segmentLines)
+    val flagged = gated.select((Seq("doc_id", "source") ++
+        Curation.gatesOf(gated).map(Curation.gateFlag) :+ "clean").map(col): _*)
       .localCheckpoint()
-    val survivors = flagged.filter(col("__s3"))
-      .select(col("doc_id"), col("source"), col("clean"))
-    val modelKept = survivors.join(
-      QualityClassifier.scoreQuantized(survivors, "doc_id", "clean",
-          QualityModelFixture.weightsQ, QualityModelFixture.biasQ,
-          QualityModelFixture.buckets)
-        .filter(col("clf_pass") === 1).select(col("doc_id")),
-      Seq("doc_id"))
+    val modelKept = Curation.modelGate(
+      flagged.filter(col(Curation.gateFlag("c4")))
+        .select(col("doc_id"), col("source"), col("clean")),
+      "doc_id", "clean", QualityModelFixture.weightsQ,
+      QualityModelFixture.biasQ, QualityModelFixture.buckets)
     val exact = graft.dedup.Dedup.exactByContent(modelKept, "doc_id", "clean")
       .localCheckpoint()
     val pairs = graft.dedup.Dedup.minhashNearDuplicates(exact, "doc_id",
@@ -759,50 +691,21 @@ object TextQueries extends QueryPack {
   }
 
   def txPretrainPipeline(s: SparkSession, dir: String): DataFrame = {
-    import graft.text.TextFunctions
-    import graft.operators.Sampling
     val c = pretrainChain(s, dir)
-    val head = c.flagged.agg(
-      count(lit(1)).as("total"),
-      sum(col("__s1").cast("long")).as("blocklist"),
-      sum(col("__sL").cast("long")).as("lang"),
-      sum(col("__s2").cast("long")).as("gopher"),
-      sum(col("__s3").cast("long")).as("c4"))
-    // The six post-gate survivor counts fold into ONE aggregate over a
-    // union of stage-tagged rows (the ledger's round-15 reach pattern,
-    // guide §2.4): count(frame_i) ≡ sum(__st = i) over the union, so
-    // the six separate count subtrees — each with its own final-agg
-    // exchange and crossJoin arm — collapse to a single partial-agg
-    // pass. coalesce guards the all-frames-empty edge (sum over zero
-    // rows is NULL where count() was 0).
-    val stageTags = Seq(c.modelKept, c.exact, c.near, c.decon,
-        c.deconNear, c.sampled)
-      .zipWithIndex.map { case (df, i) => df.select(lit(i + 1).as("__st")) }
-      .reduce(_.union(_))
-    def tagCount(i: Int, name: String) =
-      coalesce(sum((col("__st") === i).cast("long")), lit(0L)).as(name)
-    val tail = stageTags.agg(
-      tagCount(1, "model"), tagCount(2, "exact_dedup"),
-      tagCount(3, "near_dedup"), tagCount(4, "decontaminated"),
-      tagCount(5, "decon_near"), tagCount(6, "sampled"))
-    val bCount = Sampling.packSequences(c.sampled, "source", "doc_id",
-        TextFunctions.bpeTokenCount(col("clean")), 2048L)
+    // the six post-gate survivor counts are ONE aggregate over a union
+    // of stage-tagged rows (the ledger's round-15 reach pattern, guide
+    // §2.4), not six count subtrees with a crossJoin arm each
+    val tail = Curation.survivorCounts(Seq("model" -> c.modelKept,
+      "exact_dedup" -> c.exact, "near_dedup" -> c.near,
+      "decontaminated" -> c.decon, "decon_near" -> c.deconNear,
+      "sampled" -> c.sampled))
+    val bCount = graft.operators.Sampling.packSequences(c.sampled, "source",
+        "doc_id", TextFunctions.bpeTokenCount(col("clean")), 2048L)
       .select(col("source"), col("batch_id")).distinct()
       .agg(count(lit(1)).as("batches"))
-    def stageRow(i: Int, name: String) =
-      struct(lit(i).cast("int").as("stage_idx"), lit(name).as("stage"),
-        col(name).as("n_docs"))
-    head.crossJoin(tail).crossJoin(bCount)
-      .select(explode(array(
-        stageRow(0, "total"), stageRow(1, "blocklist"),
-        stageRow(2, "lang"), stageRow(3, "gopher"), stageRow(4, "c4"),
-        stageRow(5, "model"), stageRow(6, "exact_dedup"),
-        stageRow(7, "near_dedup"), stageRow(8, "decontaminated"),
-        stageRow(9, "decon_near"),
-        stageRow(10, "sampled"), stageRow(11, "batches"))).as("s"))
-      .select(col("s.stage_idx").as("stage_idx"), col("s.stage").as("stage"),
-        col("s.n_docs").as("n_docs"))
-      .orderBy(col("stage_idx"))
+    Curation.stageTable(
+      Curation.gateCounts(c.flagged).crossJoin(tail).crossJoin(bCount),
+      graft.streaming.Streams.PretrainStages)
   }
 
   /** Per-document curation PROVENANCE — the "why was this document
@@ -831,14 +734,14 @@ object TextQueries extends QueryPack {
         df.select(col("doc_id"), lit(i + 1).as("__st"))
       }.reduce(_.union(_))
       .groupBy(col("doc_id")).agg(max(col("__st")).as("__reach"))
-    c.flagged
-      .select(col("doc_id"), col("__s1"), col("__sL"), col("__s2"), col("__s3"))
+    def failed(gate: String) = !col(Curation.gateFlag(gate))
+    c.flagged.drop("source", "clean")
       .join(reached, Seq("doc_id"), "left")
       .select(col("doc_id"),
-        when(!col("__s1"), "blocklist")
-          .when(!col("__sL"), "lang")
-          .when(!col("__s2"), "gopher")
-          .when(!col("__s3"), "c4")
+        when(failed("blocklist"), "blocklist")
+          .when(failed("lang"), "lang")
+          .when(failed("gopher"), "gopher")
+          .when(failed("c4"), "c4")
           .when(col("__reach").isNull, "model")
           .when(col("__reach") === 1, "exact_dedup")
           .when(col("__reach") === 2, "near_dedup")
@@ -890,27 +793,18 @@ object TextQueries extends QueryPack {
         segment = segmentLines,
         trig = org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
       .start()
-    // materialize the 12 stage rows, then DELETE the temp state — this
-    // query runs repeatedly (bench attempts + oracle gate) and leaking
-    // a corpus+checkpoint per invocation would accumulate in /tmp. The
+    // materialize the 12 stage rows (a local checkpoint outlives the
+    // files it was read from), then DELETE the temp state — this query
+    // runs repeatedly (bench attempts + oracle gate) and leaking a
+    // corpus+checkpoint per invocation would accumulate in /tmp. The
     // cleanup sits in `finally` blocks so a failed streaming run or
     // stats read cannot leak the tree either.
-    val stageRows =
-      try {
-        try splits.foreach { b => input.addData(b: _*); q.processAllAvailable() }
-        finally q.stop()
-        graft.streaming.Streams
-          .pretrainPipelineStages(s, s"$work/state").collect().toSeq
-      } finally graft.core.AtomicSwap.deleteRecursively(new java.io.File(work))
-    s.createDataFrame(s.sparkContext.parallelize(stageRows, 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("stage_idx",
-            org.apache.spark.sql.types.IntegerType, nullable = false),
-          org.apache.spark.sql.types.StructField("stage",
-            org.apache.spark.sql.types.StringType, nullable = true),
-          org.apache.spark.sql.types.StructField("n_docs",
-            org.apache.spark.sql.types.LongType, nullable = true))))
-      .orderBy(col("stage_idx"))
+    try {
+      try splits.foreach { b => input.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+      graft.streaming.Streams
+        .pretrainPipelineStages(s, s"$work/state").localCheckpoint()
+    } finally graft.core.AtomicSwap.deleteRecursively(new java.io.File(work))
   }
 
   /** Preference-pair construction ([[graft.text.Sft.preferencePairs]],
@@ -1069,15 +963,8 @@ object TextQueries extends QueryPack {
     val dCount = survivors.agg(count(lit(1)).as("response_dedup"))
     val bCount = packed.select(col("source"), col("batch_id")).distinct()
       .agg(count(lit(1)).as("batches"))
-    def stageRow(i: Int, name: String) =
-      struct(lit(i).cast("int").as("stage_idx"), lit(name).as("stage"),
-        col(name).as("n_docs"))
-    head.crossJoin(vCount).crossJoin(dCount).crossJoin(bCount)
-      .select(explode(array(stageRow(0, "total"), stageRow(1, "valid"),
-        stageRow(2, "response_dedup"), stageRow(3, "batches"))).as("s"))
-      .select(col("s.stage_idx").as("stage_idx"), col("s.stage").as("stage"),
-        col("s.n_docs").as("n_docs"))
-      .orderBy(col("stage_idx"))
+    Curation.stageTable(head.crossJoin(vCount).crossJoin(dCount).crossJoin(bCount),
+      Seq("total", "valid", "response_dedup", "batches"))
   }
 
   /** Response-level conversation dedup ([[graft.text.Sft

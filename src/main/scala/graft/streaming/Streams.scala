@@ -1,7 +1,9 @@
 package graft.streaming
 
 import graft.core.{AtomicSwap, LoadResult}
+import graft.dedup.Dedup
 import graft.operators.Merge
+import graft.text.Curation
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.functions._
@@ -32,6 +34,33 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * Whole-table state (the merge and fold sinks) is replaced through
   * [[graft.core.AtomicSwap.replace]], with the last applied batch id as
   * a marker inside the table, so a replayed fold is skipped.
+  *
+  * Curation rules. A micro-batch is the incrementalised batch plan, so
+  * the curation sinks ([[nearDupDedupSink]], [[phashDedupSink]],
+  * [[curationFunnelSink]], [[multilingualCurationSink]],
+  * [[sftPrepSink]], [[pretrainPipelineSink]]) share each decision's one
+  * spelling with the batch funnels:
+  *  - one read: a sink materializes its micro-batch once (a local
+  *    checkpoint of the batch, or of its gate flags). foreachBatch hands
+  *    over an uncached frame, so every further action would re-run the
+  *    source and any stateful step upstream;
+  *  - gates: [[graft.text.Curation.gateFlags]] (optional HTML
+  *    extraction, blocklist and language, then Gopher, then C4) as
+  *    cumulative pass flags, all counted in one aggregate; the model
+  *    gate is [[graft.text.Curation.modelGate]];
+  *  - stage counts: the post-gate survivor counts are one aggregate over
+  *    the stage frames ([[graft.text.Curation.survivorCounts]]);
+  *  - exact dedup: first-wins (lowest id) within the batch on the md5 of
+  *    the text, then an anti-join against the persisted fingerprint
+  *    index;
+  *  - near dedup: greedy and old-wins. Within the batch the lowest id
+  *    survives, and an indexed doc always survives, so ids must be
+  *    unique over the stream's lifetime;
+  *  - a verification read of the accumulated corpus pushes the
+  *    candidate ids into the scan as an In filter (capped at 100,000
+  *    ids, beyond which it scans), so its I/O tracks the candidates.
+  * Each sink reports its drops in its LoadResult's errorMessage, in the
+  * format its own doc gives.
   */
 object Streams {
 
@@ -86,11 +115,11 @@ object Streams {
 
   /** Streaming corpus curation: each micro-batch of documents is
     * near-dup-checked against the ACCUMULATED corpus
-    * ([[graft.dedup.Dedup.incrementalNearDuplicates]]' streaming form).
-    * Survivors append to `corpusPath`, their signatures to `indexPath`;
-    * a doc near-duplicating anything already indexed is dropped, and
-    * in-batch duplicates collapse greedily (lowest id survives — same
-    * rule as the batch d5 query).
+    * ([[graft.dedup.Dedup.incrementalNearDuplicates]]' streaming form)
+    * under the curation rules (see [[Streams]]). Survivors append to
+    * `corpusPath`, their signatures to `indexPath`; a doc
+    * near-duplicating anything already indexed is dropped, and in-batch
+    * duplicates collapse greedily (the batch d5 query's rule).
     *
     * The dedup state is the PARQUET signature index, not the state
     * store: k longs per doc, readable by any engine, rebuildable. The
@@ -99,11 +128,10 @@ object Streams {
     * the sink detects the batchId collision and fails loudly rather
     * than silently overwriting the oldest batch. Per-batch cost: the increment's
     * signatures (map-only), one band join against the index, and a
-    * verification read of the corpus PRUNED to candidate ids (pushed as
-    * a scan filter, so row-group stats skip non-candidate data — I/O
-    * tracks the candidate set, not the accumulated corpus). Docs too
-    * short to sign (< shingle tokens) pass through unchecked, by
-    * construction of minhash.
+    * verification read of the corpus pruned to the candidate ids. Docs
+    * too short to sign (< shingle tokens) pass through unchecked, by
+    * construction of minhash. Drops ride the LoadResult as
+    * `deduped: <n>`.
     * At 100 TB, write the index bucketed on the id
     * ([[graft.sources.Warehouse.writeBucketed]]) so the
     * old-side membership joins below are co-located.
@@ -117,65 +145,20 @@ object Streams {
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
     foldSink(stream, checkpoint, trig) { (batch, batchId) =>
-        import graft.dedup.Dedup
         val t0 = System.nanoTime()
-        val spark = batch.sparkSession
-        BatchDirs.guardRestart(spark, "nearDupDedupSink", indexPath, batchId)
-        val newSigs = Dedup
-          .minhashSignatures(batch, idCol, textCol, shingleSize)
-          .localCheckpoint()
-        // the signatures are deterministic, so leaving out this batch's
-        // own prior attempt only changes which greedy direction a replay
-        // takes, never the set
-        val indexed = BatchDirs.read(spark, indexPath, batchId)
-        val indexSigs = indexed.map(_.select(col(idCol), col("sig")))
-          .getOrElse(newSigs.limit(0))
-        val cands = Dedup.incrementalCandidatePairs(newSigs, indexSigs,
-          idCol, bands).localCheckpoint()
-        val oldCorpus = indexed.flatMap(_ => BatchDirs.read(spark, corpusPath, batchId))
-        val corpus = oldCorpus.fold(batch) { old =>
-            // candidate ids are batch-bounded (LSH collisions of ONE
-            // increment): push them into the corpus read as an In filter
-            // so parquet row-group stats skip everything else —
-            // verification I/O tracks the candidate set, not the
-            // accumulated corpus. The literal list is capped; a
-            // collision storm falls back to the plain scan (verifyJaccard
-            // still semi-join-narrows the shingling CPU either way).
-            val candIdProbe = cands
-              .select(col("id_a").as(idCol))
-              .unionByName(cands.select(col("id_b").as(idCol)))
-              .distinct().limit(100001).collect()
-            val oldDocs = old.select(batch.columns.toIndexedSeq.map(col): _*)
-            if (candIdProbe.isEmpty) batch
-            else if (candIdProbe.length <= 100000)
-              batch.unionByName(
-                oldDocs.filter(
-                  col(idCol).isInCollection(candIdProbe.map(_.get(0)).toSeq)))
-            else batch.unionByName(oldDocs)
-          }
-        val pairs = Dedup.verifyJaccard(corpus, cands, idCol, textCol,
-          shingleSize, threshold)
-        // pairs are canonical (id_a < id_b) and always involve ≥1 new
-        // doc. If id_b is indexed, id_a must be the new one → drop id_a;
-        // otherwise id_b is new (new-new greedy, or new-old with the old
-        // doc as id_a) → drop id_b.
-        val oldIds = indexSigs.select(col(idCol))
-        val dropA = pairs
-          .join(oldIds.withColumnRenamed(idCol, "id_b"), Seq("id_b"), "left_semi")
-          .select(col("id_a").as(idCol))
-        val dropB = pairs
-          .join(oldIds.withColumnRenamed(idCol, "id_b"), Seq("id_b"), "left_anti")
-          .select(col("id_b").as(idCol))
-        val drops = dropA.unionByName(dropB).distinct().localCheckpoint()
-        val kept = batch.join(broadcast(drops), Seq(idCol), "left_anti")
-          .localCheckpoint()
-        val keptN = kept.count()
-        val dropped = batch.count() - keptN
+        BatchDirs.guardRestart(batch.sparkSession, "nearDupDedupSink",
+          indexPath, batchId)
+        val src = batch.localCheckpoint() // the one read of the micro-batch
+        val (newSigs, drops) = nearDupDrops(src, idCol, textCol, indexPath,
+          corpusPath, batchId, shingleSize, threshold, bands)
+        val kept = src.join(broadcast(drops), Seq(idCol), "left_anti")
+        val n = Curation.survivorCounts(Seq("total" -> src, "kept" -> kept)).head()
+        val (total, keptN) = (n.getLong(0), n.getLong(1))
         BatchDirs.write(kept, corpusPath, batchId)
         BatchDirs.write(newSigs.join(broadcast(drops), Seq(idCol), "left_anti"),
           indexPath, batchId)
-        onLoad(LoadResult.since(t0, corpusPath, keptN,
-          errorMessage = if (dropped > 0) Some(s"deduped: $dropped") else None))
+        onLoad(LoadResult.since(t0, corpusPath, keptN, errorMessage =
+          if (keptN < total) Some(s"deduped: ${total - keptN}") else None))
       }
 
   /** Streaming SFT preparation — the streaming twin of the batch
@@ -189,9 +172,9 @@ object Streams {
     * batch (lowest id), then against the persisted key index. Kept
     * conversations (with their assistant-token counts) land
     * `corpusPath/batch=<id>`; their keys append `indexPath/batch=<id>`.
-    * Follows the sink state contract (see [[Streams]]) and is
-    * compactable by [[compactBatchOutput]]; per-stage drops ride the
-    * LoadResult as `invalid=<n>;dup=<n>`. */
+    * Follows the sink state contract and the curation rules (see
+    * [[Streams]]) and is compactable by [[compactBatchOutput]];
+    * per-stage drops ride the LoadResult as `invalid=<n>;dup=<n>`. */
   def sftPrepSink(stream: DataFrame, corpusPath: String,
       indexPath: String, checkpoint: String, idCol: String, convCol: String,
       trig: Trigger = Trigger.AvailableNow(),
@@ -201,15 +184,15 @@ object Streams {
         val t0 = System.nanoTime()
         val spark = batch.sparkSession
         BatchDirs.guardRestart(spark, "sftPrepSink", indexPath, batchId)
-        val total = batch.count()
+        val src = batch.localCheckpoint() // the one read of the micro-batch
+        val total = src.count()
         if (total > 0) {
-          val turns = Sft.parseTurns(batch.select(col(idCol), col(convCol)),
+          val turns = Sft.parseTurns(src.select(col(idCol), col(convCol)),
             idCol, convCol).localCheckpoint()
           val stats = Sft.conversationStats(turns)
           val valid = stats.filter(col("valid") === 1)
             .select(col("doc_id"), col("assistant_tokens"))
             .localCheckpoint()
-          val vN = valid.count()
           val validTurns = turns.join(valid.select(col("doc_id")),
             Seq("doc_id"), "left_semi")
           // response keys of the batch's VALID transcripts; in-batch
@@ -220,9 +203,11 @@ object Streams {
             .getOrElse(keys.limit(0)).select(col("assistant_md5"))
           val kept = keys.join(indexed, Seq("assistant_md5"), "left_anti")
             .join(valid, Seq("doc_id"))
-            .join(batch.withColumnRenamed(idCol, "doc_id"), Seq("doc_id"))
+            .join(src.withColumnRenamed(idCol, "doc_id"), Seq("doc_id"))
             .localCheckpoint()
-          val keptN = kept.count()
+          val n = Curation.survivorCounts(Seq("valid" -> valid, "kept" -> kept))
+            .head()
+          val (vN, keptN) = (n.getLong(0), n.getLong(1))
           BatchDirs.write(kept.drop("assistant_md5"), corpusPath, batchId)
           BatchDirs.write(kept.select(col("doc_id"), col("assistant_md5")),
             indexPath, batchId)
@@ -241,17 +226,16 @@ object Streams {
     * dHash ([[graft.multimodal.DecodeStub.perceptualHash]] — real
     * rasters through ImageIO, other payloads the deterministic
     * byte-tap fallback), then near-duplicates at hamming ≤ `maxHamming`
-    * drop, both within the batch (lowest id survives, the text sink's
-    * greedy rule) and against the PERSISTED hash index. Pair
+    * drop, both within the batch and against the PERSISTED hash index,
+    * by the curation rules' greedy old-wins rule (see [[Streams]]). Pair
     * generation is the 4×16-bit pigeonhole chunk join over new ∪
     * indexed hashes — the indexed side is the 16-byte-per-record hash
     * table, never the media bytes, the same slim-index contract as the
     * text sink's signature index. Kept records land
     * `corpusPath/batch=<id>`, their hashes append
     * `indexPath/batch=<id>` under the sink state contract (see
-    * [[Streams]]), compactable by [[compactBatchOutput]]. Record ids
-    * must be globally unique across the stream's lifetime (the sink
-    * contract shared with [[nearDupDedupSink]]). */
+    * [[Streams]]), compactable by [[compactBatchOutput]]. Drops ride the
+    * LoadResult as `deduped: <n>`. */
   def phashDedupSink(stream: DataFrame, corpusPath: String,
       indexPath: String, checkpoint: String, idCol: String,
       payloadCol: String, maxHamming: Int = 3,
@@ -263,7 +247,8 @@ object Streams {
         val spark = batch.sparkSession
         import spark.implicits._
         BatchDirs.guardRestart(spark, "phashDedupSink", indexPath, batchId)
-        val media = batch.select(col(idCol).cast("long").as("doc_id"),
+        val src = batch.localCheckpoint() // the one read of the micro-batch
+        val media = src.select(col(idCol).cast("long").as("doc_id"),
             col(payloadCol).as("payload"),
             lit("media").as("modality"), lit("bin").as("format"))
           .as[MediaRecord]
@@ -278,50 +263,33 @@ object Streams {
         val indexHashes = BatchDirs.read(spark, indexPath, batchId)
           .map(_.select(col(idCol), col("dhash")))
           .getOrElse(newHashes.limit(0))
+        // pairs over new ∪ indexed hashes also pair two indexed records
+        // (survivors of different clusters can sit within maxHamming of
+        // each other); the drop rule then names an indexed id, which is
+        // no row of this batch, so those pairs drop nothing
         val pairs = Multimodal.imageNearDuplicates(
           newHashes.unionByName(indexHashes), idCol, "dhash", maxHamming)
-        // canonical id_a < id_b, every pair involves ≥ 1 new record
-        // (indexed-indexed pairs were resolved when those batches
-        // landed — both survivors of DIFFERENT clusters can still sit
-        // within maxHamming of each other, so filter indexed-indexed
-        // pairs out rather than assuming they can't occur)
-        val oldIds = indexHashes.select(col(idCol))
-        val newPairs = pairs.join(
-          oldIds.withColumnRenamed(idCol, "id_a"), Seq("id_a"), "left_anti")
-          .unionByName(pairs
-            .join(oldIds.withColumnRenamed(idCol, "id_a"), Seq("id_a"), "left_semi")
-            .join(oldIds.withColumnRenamed(idCol, "id_b"), Seq("id_b"), "left_anti"))
-          .distinct()
-        val dropA = newPairs
-          .join(oldIds.withColumnRenamed(idCol, "id_b"), Seq("id_b"), "left_semi")
-          .select(col("id_a").as(idCol))
-        val dropB = newPairs
-          .join(oldIds.withColumnRenamed(idCol, "id_b"), Seq("id_b"), "left_anti")
-          .select(col("id_b").as(idCol))
-        val drops = dropA.unionByName(dropB).distinct().localCheckpoint()
-        val kept = batch.join(broadcast(drops), Seq(idCol), "left_anti")
+        val drops = greedyDrops(pairs, indexHashes.select(col(idCol)), idCol)
           .localCheckpoint()
-        val keptN = kept.count()
-        val dropped = batch.count() - keptN
+        val kept = src.join(broadcast(drops), Seq(idCol), "left_anti")
+        val n = Curation.survivorCounts(Seq("total" -> src, "kept" -> kept)).head()
+        val (total, keptN) = (n.getLong(0), n.getLong(1))
         BatchDirs.write(kept, corpusPath, batchId)
         BatchDirs.write(newHashes.join(broadcast(drops), Seq(idCol), "left_anti"),
           indexPath, batchId)
-        onLoad(LoadResult.since(t0, corpusPath, keptN,
-          errorMessage = if (dropped > 0) Some(s"deduped: $dropped") else None))
+        onLoad(LoadResult.since(t0, corpusPath, keptN, errorMessage =
+          if (keptN < total) Some(s"deduped: ${total - keptN}") else None))
       }
 
   /** Streaming curation funnel — the streaming twin of the batch
-    * `tx_curation_funnel` composition, same filters in the same order:
-    *
-    *  1. Gopher document-quality gate
-    *     ([[graft.text.Curation.gopherPassed]]);
-    *  2. C4 cleaning ([[graft.text.Curation.c4CleanedText]]): the
-    *     doc-drop rule, line-level cleaning, and empty-after-cleaning
-    *     drops;
-    *  3. exact dedup ON THE CLEANED TEXT — first-wins (lowest id)
-    *     within the batch, then an anti-join against the persisted
-    *     fingerprint index (one md5 per survivor — the incremental
-    *     state design of [[nearDupDedupSink]], minus signatures).
+    * `tx_curation_funnel` composition (and, with the options,
+    * `tx_html_funnel` and `tx_funnel_model`), under the curation rules
+    * (see [[Streams]]): optional HTML extraction, the Gopher and C4
+    * gates ([[graft.text.Curation.gateFlags]]), the optional model gate
+    * on the cleaned text, then exact dedup ON THE CLEANED TEXT against
+    * the persisted fingerprint index (one md5 per survivor — the
+    * incremental state design of [[nearDupDedupSink]], minus
+    * signatures).
     *
     * Survivors land in `corpusPath/batch=<id>` with their cleaned
     * text; their fingerprints append to `indexPath/batch=<id>`. Both
@@ -330,8 +298,8 @@ object Streams {
     * the write (no directory mint).
     *
     * Per-stage drop counts ride the LoadResult errorMessage as
-    * `gopher=<n>;c4=<n>;dup=<n>`; every count is one micro-batch-sized
-    * action, never history-sized. */
+    * `[html=<n>;]gopher=<n>;c4=<n>[;model=<n>];dup=<n>`: two
+    * micro-batch-sized aggregates, never history-sized. */
   def curationFunnelSink(stream: DataFrame, corpusPath: String,
       indexPath: String, checkpoint: String, idCol: String, textCol: String,
       minTokens: Long = 50L, maxTokens: Long = 100000L,
@@ -341,61 +309,34 @@ object Streams {
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
     foldSink(stream, checkpoint, trig) { (batch, batchId) =>
-        import graft.text.Curation
         val t0 = System.nanoTime()
-        val spark = batch.sparkSession
-        BatchDirs.guardRestart(spark, "curationFunnelSink", indexPath, batchId)
-        val total = batch.count()
+        BatchDirs.guardRestart(batch.sparkSession, "curationFunnelSink",
+          indexPath, batchId)
+        // the one read of the micro-batch: its columns, the gate flags,
+        // and the cleaned text of the c4 survivors in place of the text
+        val flagged = Curation.gateFlags(batch, textCol, minTokens,
+            minStopWords, maxTokens, html = htmlExtract, minWords = minWords)
+          .withColumn(textCol, col("clean")).drop("clean")
+          .localCheckpoint()
+        val gates = Curation.gateCounts(flagged).head()
+        val total = gates.getAs[Long]("total")
         if (total > 0) {
-          // optional stage 0 (raw-crawl inputs): HTML → text extraction
-          // ([[graft.text.Html.extractText]] — map-only) BEFORE any
-          // quality gate; pages whose markup extracts to nothing drop
-          // here, and every later stage sees plain newline-segmented
-          // text exactly like the batch tx_html_funnel composition
-          val src =
-            if (htmlExtract)
-              batch.withColumn(textCol,
-                  graft.text.Html.extractText(col(textCol)))
-                .filter(col(textCol) =!= "")
-                .localCheckpoint()
-            else batch
-          val hN = if (htmlExtract) src.count() else total
-          val gophered = src.filter(Curation.gopherGate(col(textCol),
-              minTokens, maxTokens, minStopWords))
-            .localCheckpoint()
-          val gN = gophered.count()
-          val cleaned = gophered
-            .filter(!Curation.c4DocDrop(col(textCol)))
-            .withColumn(textCol, Curation.c4CleanedText(col(textCol), minWords))
-            .filter(length(col(textCol)) > 0)
-            .localCheckpoint()
-          val cN = cleaned.count()
-          // optional model gate (the tx_funnel_model composition,
-          // streaming): quantized-classifier scoring of the CLEANED
-          // text — one bounded-broadcast pass over this micro-batch's
-          // c4 survivors; sub-2-token docs are absent from scoring and
-          // fail the gate (the shared convention)
-          val gated = modelGate match {
-            case Some((wq, biasQ, buckets)) =>
-              cleaned.join(
-                graft.text.QualityClassifier.scoreQuantized(
-                    cleaned.select(col(idCol), col(textCol)),
-                    idCol, textCol, wq, biasQ, buckets)
-                  .filter(col("clf_pass") === 1).select(col(idCol)),
-                Seq(idCol), "left_semi").localCheckpoint()
-            case None => cleaned
+          val cleaned = flagged.filter(col(Curation.gateFlag("c4")))
+            .select(batch.columns.toIndexedSeq.map(col): _*)
+          val gated = modelGate.fold(cleaned) { case (wq, biasQ, buckets) =>
+            Curation.modelGate(cleaned, idCol, textCol, wq, biasQ, buckets)
+              .localCheckpoint()
           }
-          val mN = gated.count()
-          val fp = gated.withColumn("__fp", md5(col(textCol)))
-          // first-wins within the batch: lowest id per cleaned content
-          val firsts = fp.groupBy(col("__fp")).agg(min(col(idCol)).as(idCol))
-          val inBatch = fp.join(firsts, Seq("__fp", idCol), "left_semi")
-          val indexed = BatchDirs.read(spark, indexPath, batchId)
-            .map(_.select(col("fp").as("__fp")))
-            .getOrElse(fp.select(col("__fp")).limit(0))
-          val kept = inBatch.join(indexed, Seq("__fp"), "left_anti")
+          val kept = exactDedupVsIndex(gated, idCol, textCol, indexPath, batchId)
             .localCheckpoint()
-          val keptN = kept.count()
+          val n = Curation.survivorCounts(
+            Seq("model" -> gated).filter(_ => modelGate.isDefined) :+
+              ("kept" -> kept)).head()
+          val keptN = n.getAs[Long]("kept")
+          val hN = if (htmlExtract) gates.getAs[Long]("html") else total
+          val gN = gates.getAs[Long]("gopher")
+          val cN = gates.getAs[Long]("c4")
+          val mN = if (modelGate.isDefined) n.getAs[Long]("model") else cN
           BatchDirs.write(kept.drop("__fp"), corpusPath, batchId)
           BatchDirs.write(kept.select(col(idCol), col("__fp").as("fp")),
             indexPath, batchId)
@@ -416,7 +357,8 @@ object Streams {
     * batch `tx_pretrain_pipeline` composition
     * ([[graft.queries.TextQueries.txPretrainPipeline]]), every stage
     * the same library operator with the same parameters, run
-    * incrementally per micro-batch under ONE checkpoint:
+    * incrementally per micro-batch under ONE checkpoint and the
+    * curation rules (see [[Streams]]):
     *
     *  1. optional HTML→text extraction ([[graft.text.Html.extractText]]);
     *  2. blocklist gate (frequency-threshold,
@@ -424,16 +366,15 @@ object Streams {
     *  3. language gate (stopword vote == `lang`);
     *  4. Gopher quality gate; 5. C4 segmentation + line cleaning;
     *  6. committed-model quality gate (quantized classifier);
-    *  7. EXACT dedup on cleaned text — first-wins in batch, then
-    *     anti-join the persisted fingerprint index (`fpIndex/`);
+    *  7. EXACT dedup on cleaned text against the persisted fingerprint
+    *     index (`fpIndex/`);
     *  8. MinHash NEAR-dedup — in-batch pairs plus incremental
     *     candidates against the persisted signature index (`sigIndex/`),
     *     Jaccard-verified against the near-stage survivor corpus
-    *     (`dedupCorpus/`), greedy lowest-id/old-wins drops (the
-    *     [[nearDupDedupSink]] rule — equal to the batch transitive
-    *     closure whenever pairs don't chain across survivors, and in
-    *     particular on any corpus where C4 cleaning collapses near-dups
-    *     into exact dups first);
+    *     (`dedupCorpus/`), greedy old-wins drops (equal to the batch
+    *     transitive closure whenever pairs don't chain across
+    *     survivors, and in particular on any corpus where C4 cleaning
+    *     collapses near-dups into exact dups first);
     *  9. decontamination against the static `evalDocs` set — exact
     *     whole-doc fingerprints, then near-match shared-`deconN`-grams
     *     ([[graft.text.Boilerplate.ngramDecontaminate]]);
@@ -450,7 +391,9 @@ object Streams {
     * `batch=<id>` overwrite-partition per micro-batch under the sink
     * state contract (see [[Streams]]). Per-batch cost ∝ the increment
     * (plus the candidate-pruned corpus read the near stage shares with
-    * [[nearDupDedupSink]]); nothing history-sized is ever recomputed. */
+    * [[nearDupDedupSink]]); nothing history-sized is ever recomputed.
+    * Drops ride the LoadResult as
+    * `[html=<n>;]gates=<n>;dup=<n>;decon=<n>;sample=<n>`. */
   def pretrainPipelineSink(stream: DataFrame, workDir: String,
       checkpoint: String, idCol: String, sourceCol: String, textCol: String,
       evalDocs: DataFrame, evalTextCol: String,
@@ -467,8 +410,7 @@ object Streams {
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
     foldSink(stream, checkpoint, trig) { (batch, batchId) =>
-        import graft.dedup.Dedup
-        import graft.text.{Boilerplate, Curation, QualityClassifier, TextFunctions}
+        import graft.text.{Boilerplate, TextFunctions}
         val t0 = System.nanoTime()
         val spark = batch.sparkSession
         val fpPath = s"$workDir/fpIndex"
@@ -476,102 +418,32 @@ object Streams {
         val dcPath = s"$workDir/dedupCorpus"
         val offPath = s"$workDir/offsets"
         BatchDirs.guardRestart(spark, "pretrainPipelineSink", fpPath, batchId)
-        // one committed-batch probe per state directory: fpIndex commits
-        // LAST in the write order below, so its presence implies every
-        // earlier directory's batch committed too — but each read still
-        // tolerates an absent sibling (first batch, or crash mid-write)
-        def stateRead(path: String, cols: Seq[String]): Option[DataFrame] =
-          BatchDirs.read(spark, path, batchId).map(_.select(cols.map(col): _*))
-        val total = batch.count()
+        // ——— map-side gates (stages 1–5): the one read of the micro-batch
+        val gatedAll = Curation.gateFlags(batch, textCol, minTokens,
+          minStopWords, html = htmlExtract,
+          blocklist = Some((blocklistTerms, maxHits)), lang = Some(lang),
+          segment = segment, minWords = minWords)
+        val flagged = gatedAll.select((Seq(idCol, sourceCol) ++
+            Curation.gatesOf(gatedAll).map(Curation.gateFlag) :+ "clean")
+            .map(col): _*)
+          .localCheckpoint()
+        val gates = Curation.gateCounts(flagged).head()
+        val total = gates.getAs[Long]("total")
         if (total > 0) {
-          // ——— map-side gates (stages 1–5), one scan computes all flags
-          val src =
-            if (htmlExtract)
-              batch.withColumn(textCol, graft.text.Html.extractText(col(textCol)))
-                .filter(col(textCol) =!= "").localCheckpoint()
-            else batch
-          val hN = if (htmlExtract) src.count() else total
-          val flagged = src
-            .withColumn("__s1",
-              Curation.blocklistPassed(col(textCol), blocklistTerms, maxHits))
-            .withColumn("__sL",
-              col("__s1") && (TextFunctions.langId(col(textCol)) === lang))
-            .withColumn("__s2", col("__sL") && Curation.gopherGate(
-              col(textCol),
-              minTokens = minTokens, minStopWords = minStopWords))
-            .withColumn("__t2", segment(col(textCol)))
-            .withColumn("clean", Curation.c4CleanedText(col("__t2"), minWords))
-            .withColumn("__s3",
-              col("__s2") && !Curation.c4DocDrop(col("__t2")) && col("clean") =!= "")
-          // coalesce: an all-rows-extracted-to-empty HTML batch leaves
-          // `flagged` with 0 rows while total > 0 — NULL sums here would
-          // NPE deterministically on every checkpoint replay and wedge
-          // the stream forever
-          val head = flagged.agg(
-            coalesce(sum(col("__s1").cast("long")), lit(0L)).as("bl"),
-            coalesce(sum(col("__sL").cast("long")), lit(0L)).as("lng"),
-            coalesce(sum(col("__s2").cast("long")), lit(0L)).as("gph"),
-            coalesce(sum(col("__s3").cast("long")), lit(0L)).as("c4")).head()
-          val survivors = flagged.filter(col("__s3"))
-            .select(col(idCol), col(sourceCol), col("clean"))
-            .localCheckpoint()
           // ——— 6. model gate
-          val modelKept = survivors.join(
-            QualityClassifier.scoreQuantized(
-                survivors.select(col(idCol), col("clean")), idCol, "clean",
-                modelWeights, modelBias, modelBuckets)
-              .filter(col("clf_pass") === 1).select(col(idCol)),
-            Seq(idCol), "left_semi").localCheckpoint()
-          val mN = modelKept.count()
-          // ——— 7. exact dedup: in-batch first-wins, then the fp index
-          val fp = modelKept.withColumn("__fp", md5(col("clean")))
-          val firsts = fp.groupBy(col("__fp")).agg(min(col(idCol)).as(idCol))
-          val inBatch = fp.join(firsts, Seq("__fp", idCol), "left_semi")
-          val fpIndexed = stateRead(fpPath, Seq("fp"))
-            .map(_.withColumnRenamed("fp", "__fp"))
-            .getOrElse(fp.select(col("__fp")).limit(0))
-          val exactKept = inBatch.join(fpIndexed, Seq("__fp"), "left_anti")
+          val modelKept = Curation.modelGate(
+              flagged.filter(col(Curation.gateFlag("c4")))
+                .select(col(idCol), col(sourceCol), col("clean")),
+              idCol, "clean", modelWeights, modelBias, modelBuckets)
             .localCheckpoint()
-          val eN = exactKept.count()
+          // ——— 7. exact dedup: in-batch first-wins, then the fp index
+          val exactKept = exactDedupVsIndex(modelKept, idCol, "clean", fpPath,
+            batchId).localCheckpoint()
           // ——— 8. near-dedup vs the persisted signature index
-          val newSigs = Dedup.minhashSignatures(
-            exactKept.select(col(idCol), col("clean")), idCol, "clean",
-            shingleSize).localCheckpoint()
-          val indexSigs = stateRead(sigPath, Seq(idCol, "sig"))
-            .getOrElse(newSigs.select(col(idCol), col("sig")).limit(0))
-          val cands = Dedup.incrementalCandidatePairs(newSigs, indexSigs,
-            idCol, bands).localCheckpoint()
-          // candidate-id pushdown into the survivor-corpus read — the
-          // capped-literal pattern of [[nearDupDedupSink]]
-          val oldCorpus = {
-            val base = stateRead(dcPath, Seq(idCol, "clean"))
-            base match {
-              case None => exactKept.select(col(idCol), col("clean")).limit(0)
-              case Some(old) =>
-                val probe = cands.select(col("id_a").as(idCol))
-                  .unionByName(cands.select(col("id_b").as(idCol)))
-                  .distinct().limit(100001).collect()
-                if (probe.isEmpty) old.limit(0)
-                else if (probe.length <= 100000)
-                  old.filter(col(idCol).isInCollection(probe.map(_.get(0)).toSeq))
-                else old
-            }
-          }
-          val verifyCorpus = exactKept.select(col(idCol), col("clean"))
-            .unionByName(oldCorpus)
-          val pairs = Dedup.verifyJaccard(verifyCorpus, cands, idCol, "clean",
-            shingleSize, threshold)
-          val oldIds = indexSigs.select(col(idCol))
-          val dropA = pairs
-            .join(oldIds.withColumnRenamed(idCol, "id_b"), Seq("id_b"), "left_semi")
-            .select(col("id_a").as(idCol))
-          val dropB = pairs
-            .join(oldIds.withColumnRenamed(idCol, "id_b"), Seq("id_b"), "left_anti")
-            .select(col("id_b").as(idCol))
-          val drops = dropA.unionByName(dropB).distinct().localCheckpoint()
+          val (newSigs, drops) = nearDupDrops(exactKept, idCol, "clean",
+            sigPath, dcPath, batchId, shingleSize, threshold, bands)
           val nearKept = exactKept.join(broadcast(drops), Seq(idCol), "left_anti")
             .localCheckpoint()
-          val nN = nearKept.count()
           // ——— 9. decontamination: exact fingerprints, then near n-grams
           val evalFps = evalDocs
             .select(TextFunctions.minShingleFingerprint(col(evalTextCol),
@@ -583,17 +455,21 @@ object Streams {
             .join(broadcast(evalFps.withColumnRenamed("__efp", "__dfp")),
               Seq("__dfp"), "left_anti")
             .drop("__dfp")
-          val dN = decon.count()
           val deconNear = Boilerplate.ngramDecontaminate(decon, idCol, "clean",
             evalDocs, evalTextCol, deconN).localCheckpoint()
-          val dnN = deconNear.count()
           // ——— 10. deterministic sample; 11. packing with carried offsets
           val sampled = graft.operators.Sampling.deterministicSample(
             deconNear, idCol, sampleFraction)
-          val sN = sampled.count()
+          // every post-gate survivor count in one aggregate
+          val tail = Curation.survivorCounts(Seq("model" -> modelKept,
+            "exact_dedup" -> exactKept, "near_dedup" -> nearKept,
+            "decontaminated" -> decon, "decon_near" -> deconNear,
+            "sampled" -> sampled)).head()
+          val n = Seq(gates, tail)
+            .flatMap(r => r.getValuesMap[Long](r.schema.fieldNames.toIndexedSeq)).toMap
           val withTok = sampled.withColumn("n_tokens",
             TextFunctions.bpeTokenCount(col("clean")))
-          val baseOffsets = stateRead(offPath, Seq(sourceCol, "tokens"))
+          val baseOffsets = BatchDirs.read(spark, offPath, batchId)
             .map(_.groupBy(col(sourceCol)).agg(sum(col("tokens")).as("__base")))
             .getOrElse(withTok.select(col(sourceCol), lit(0L).as("__base")).limit(0))
           val w = org.apache.spark.sql.expressions.Window
@@ -609,7 +485,10 @@ object Streams {
             .select(col(idCol), col(sourceCol), col("clean"), col("n_tokens"),
               col("pack_batch"))
             .localCheckpoint()
-          // ——— state + output writes; fpIndex LAST (the state probe key)
+          // ——— state + output writes; fpIndex LAST (the state probe key):
+          // its presence implies every earlier directory's batch committed,
+          // but each read still tolerates an absent sibling (first batch,
+          // or a crash mid-write)
           BatchDirs.write(packed, s"$workDir/corpus", batchId)
           BatchDirs.write(
             packed.groupBy(col(sourceCol)).agg(sum(col("n_tokens")).as("tokens")),
@@ -617,17 +496,13 @@ object Streams {
           BatchDirs.write(nearKept.select(col(idCol), col("clean")), dcPath, batchId)
           BatchDirs.write(newSigs.join(broadcast(drops), Seq(idCol), "left_anti")
             .select(col(idCol), col("sig")), sigPath, batchId)
-          val stages = Seq(
-            (0, "total", total), (1, "blocklist", head.getLong(0)),
-            (2, "lang", head.getLong(1)), (3, "gopher", head.getLong(2)),
-            (4, "c4", head.getLong(3)), (5, "model", mN),
-            (6, "exact_dedup", eN), (7, "near_dedup", nN),
-            (8, "decontaminated", dN), (9, "decon_near", dnN),
-            (10, "sampled", sN))
-          import spark.implicits._
-          BatchDirs.write(stages.toDF("stage_idx", "stage", "n_docs").coalesce(1),
+          val batchStages = PretrainStages.init
+          BatchDirs.write(Curation.stageTable(spark.range(0, 1, 1, 1)
+              .select(batchStages.map(st => lit(n(st)).as(st)): _*), batchStages),
             s"$workDir/stats", batchId)
           BatchDirs.write(exactKept.select(col("__fp").as("fp")), fpPath, batchId)
+          val (hN, mN, nN, dnN, sN) = (if (htmlExtract) n("html") else total,
+            n("model"), n("near_dedup"), n("decon_near"), n("sampled"))
           onLoad(LoadResult.since(t0, s"$workDir/corpus", sN,
             errorMessage = if (sN < total)
               Some((if (htmlExtract) s"html=${total - hN};" else "") +
@@ -641,6 +516,13 @@ object Streams {
         }
       }
 
+  /** The 12 stages of the pretraining flagship's stage-count table, in
+    * order: the batch query's rows, and the streaming sink's per-batch
+    * counts plus the final `batches`. */
+  private[graft] val PretrainStages: Seq[String] = Seq("total", "blocklist",
+    "lang", "gopher", "c4", "model", "exact_dedup", "near_dedup",
+    "decontaminated", "decon_near", "sampled", "batches")
+
   /** The finished-run view of a [[pretrainPipelineSink]] work
     * directory: per-batch stage counts summed across micro-batches,
     * plus the final `batches` stage (distinct (source, pack_batch) —
@@ -649,18 +531,15 @@ object Streams {
     * flagship, so streamed == batch is one DataFrame comparison. */
   def pretrainPipelineStages(spark: SparkSession, workDir: String,
       sourceCol: String = "source"): DataFrame = {
-    val stats = spark.read.parquet(s"$workDir/stats")
-      .groupBy(col("stage_idx"), col("stage"))
-      .agg(sum(col("n_docs")).as("n_docs"))
-      .select(col("stage_idx").cast("int").as("stage_idx"), col("stage"),
-        col("n_docs"))
+    val perStage = PretrainStages.init.map(st =>
+      sum(when(col("stage") === st, col("n_docs"))).as(st))
+    val sums = spark.read.parquet(s"$workDir/stats")
+      .agg(perStage.head, perStage.tail: _*)
     val batches = spark.read.parquet(s"$workDir/corpus")
       .select(col(sourceCol), col("pack_batch"))
       .distinct()
-      .agg(count(lit(1)).as("n_docs"))
-      .select(lit(11).cast("int").as("stage_idx"), lit("batches").as("stage"),
-        col("n_docs"))
-    stats.unionByName(batches).orderBy(col("stage_idx"))
+      .agg(count(lit(1)).as("batches"))
+    Curation.stageTable(sums.crossJoin(batches), PretrainStages)
   }
 
   /** Streaming multilingual routed curation — the streaming twin of
@@ -669,10 +548,9 @@ object Streams {
     * ([[graft.functions.NativeLang.langIdProfile]]), routed through
     * its language's rule table
     * ([[graft.text.Curation.routedCurationFlags]] — one codegen'd CASE
-    * chain, map-side), and the gate survivors exact-dedup on content:
-    * first-wins (lowest id) within the batch, then an anti-join
-    * against the persisted fingerprint index, under the sink state
-    * contract (see [[Streams]]; compactable). Survivors land
+    * chain, map-side), and the gate survivors exact-dedup on content,
+    * under the sink state contract and the curation rules (see
+    * [[Streams]]; compactable). Survivors land
     * `corpusPath/batch=<id>` with their `route_lang`; fingerprints
     * append `indexPath/batch=<id>`.
     * Per-stage drops ride the LoadResult as
@@ -685,33 +563,27 @@ object Streams {
       trig: Trigger = Trigger.AvailableNow(),
       onLoad: LoadResult => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] =
     foldSink(stream, checkpoint, trig) { (batch, batchId) =>
-        import graft.text.Curation
         val t0 = System.nanoTime()
         val spark = batch.sparkSession
         BatchDirs.guardRestart(spark, "multilingualCurationSink", indexPath, batchId)
-        val total = batch.count()
-        if (total > 0) {
-          val detected = batch.withColumn("__lang",
-              coalesce(graft.functions.NativeLang.langIdProfile(col(textCol))
-                .getField("predicted_lang"), lit("unknown")))
-            .localCheckpoint()
-          val flags = Curation.routedCurationFlags(detected, idCol, textCol,
+        // the one read of the micro-batch, with its detected language
+        val detected = batch.withColumn("__lang",
+            coalesce(graft.functions.NativeLang.langIdProfile(col(textCol))
+              .getField("predicted_lang"), lit("unknown")))
+          .localCheckpoint()
+        val flags = Curation.routedCurationFlags(detected, idCol, textCol,
             "__lang", routes)
-          val gated = flags
-            .filter(col("blocklist_pass") && col("quality_pass") &&
-              col("route_lang") =!= "other")
+          .withColumn("__gated", col("blocklist_pass") && col("quality_pass") &&
+            col("route_lang") =!= "other")
+        val head = flags.agg(count(lit(1)),
+          coalesce(sum((col("route_lang") =!= "other").cast("long")), lit(0L)),
+          coalesce(sum(col("__gated").cast("long")), lit(0L))).head()
+        val (total, routedN, gN) = (head.getLong(0), head.getLong(1), head.getLong(2))
+        if (total > 0) {
+          val gated = flags.filter(col("__gated"))
             .select(col("doc_id").as(idCol), col("route_lang"))
             .join(detected.drop("__lang"), Seq(idCol))
-            .localCheckpoint()
-          val routedN = flags.filter(col("route_lang") =!= "other").count()
-          val gN = gated.count()
-          val fp = gated.withColumn("__fp", md5(col(textCol)))
-          val firsts = fp.groupBy(col("__fp")).agg(min(col(idCol)).as(idCol))
-          val inBatch = fp.join(firsts, Seq("__fp", idCol), "left_semi")
-          val indexed = BatchDirs.read(spark, indexPath, batchId)
-            .map(_.select(col("fp").as("__fp")))
-            .getOrElse(fp.select(col("__fp")).limit(0))
-          val kept = inBatch.join(indexed, Seq("__fp"), "left_anti")
+          val kept = exactDedupVsIndex(gated, idCol, textCol, indexPath, batchId)
             .localCheckpoint()
           val keptN = kept.count()
           BatchDirs.write(kept.drop("__fp"), corpusPath, batchId)
@@ -1502,6 +1374,80 @@ object Streams {
     swapIn(targetDir, sources.map(i => s"batch=$i"))
     sources.size
   }
+
+  /** Exact dedup of `docs` on md5(`textCol`) against the persisted
+    * fingerprint index at `indexPath` (column `fp`): first-wins (lowest
+    * id) within the batch, then an anti-join against every other
+    * committed batch's fingerprints. Kept rows carry theirs as `__fp`. */
+  private def exactDedupVsIndex(docs: DataFrame, idCol: String,
+      textCol: String, indexPath: String, batchId: Long): DataFrame = {
+    val fp = docs.withColumn("__fp", md5(col(textCol)))
+    val firsts = fp.groupBy(col("__fp")).agg(min(col(idCol)).as(idCol))
+    val inBatch = fp.join(firsts, Seq("__fp", idCol), "left_semi")
+    BatchDirs.read(docs.sparkSession, indexPath, batchId).fold(inBatch) { idx =>
+      inBatch.join(idx.select(col("fp").as("__fp")), Seq("__fp"), "left_anti")
+    }
+  }
+
+  /** The incremental MinHash near-dedup stage: the increment's
+    * signatures, LSH candidates among them and against the persisted
+    * signature index at `sigPath`, Jaccard verification of the
+    * candidates, and the [[greedyDrops]] rule. Returns the increment's
+    * signatures and the ids to drop, both checkpointed. The signatures
+    * are deterministic, so leaving out this batch's own prior attempt
+    * only changes which greedy direction a replay takes, never the set.
+    *
+    * Candidate ids are batch-bounded (the LSH collisions of ONE
+    * increment), so they are collected once: no candidates means
+    * nothing to verify, and otherwise they are pushed into the read of
+    * the survivor corpus at `corpusPath` as an In filter, so parquet
+    * row-group stats skip everything else and verification I/O tracks
+    * the candidate set, not the accumulated corpus. The literal list is
+    * capped; a collision storm falls back to the plain scan
+    * (verifyJaccard still semi-join-narrows the shingling either way). */
+  private def nearDupDrops(docs: DataFrame, idCol: String, textCol: String,
+      sigPath: String, corpusPath: String, batchId: Long, shingleSize: Int,
+      threshold: Double, bands: Int): (DataFrame, DataFrame) = {
+    val spark = docs.sparkSession
+    val texts = docs.select(col(idCol), col(textCol))
+    val newSigs = Dedup.minhashSignatures(texts, idCol, textCol, shingleSize)
+      .localCheckpoint()
+    val indexSigs = BatchDirs.read(spark, sigPath, batchId)
+      .map(_.select(col(idCol), col("sig")))
+    val cands = Dedup.incrementalCandidatePairs(newSigs,
+      indexSigs.getOrElse(newSigs.limit(0)), idCol, bands).localCheckpoint()
+    val ids = cands.select(explode(array(col("id_a"), col("id_b"))).as(idCol))
+      .distinct().limit(100001).collect().map(_.get(0))
+    val drops =
+      if (ids.isEmpty) newSigs.select(col(idCol)).limit(0)
+      else {
+        val verify = indexSigs.flatMap(_ => BatchDirs.read(spark, corpusPath, batchId))
+          .fold(texts) { old =>
+            val rows = old.select(col(idCol), col(textCol))
+            texts.unionByName(
+              if (ids.length <= 100000) rows.filter(col(idCol).isInCollection(ids.toSeq))
+              else rows)
+          }
+        val pairs = Dedup.verifyJaccard(verify, cands, idCol, textCol,
+          shingleSize, threshold)
+        greedyDrops(pairs, indexSigs.getOrElse(newSigs.limit(0)).select(col(idCol)),
+          idCol).localCheckpoint()
+      }
+    (newSigs, drops)
+  }
+
+  /** The greedy old-wins near-dup drop rule. `pairs` are canonical
+    * (id_a < id_b) and each involves at least one doc of the increment:
+    * if id_b is indexed (old), id_a is the new doc and drops; otherwise
+    * id_b is new and drops. So an indexed doc always survives, and
+    * within the batch the lowest id does. */
+  private def greedyDrops(pairs: DataFrame, oldIds: DataFrame,
+      idCol: String): DataFrame =
+    pairs
+      .join(oldIds.select(col(idCol).as("id_b"), lit(true).as("__indexed")),
+        Seq("id_b"), "left")
+      .select(when(col("__indexed"), col("id_a")).otherwise(col("id_b")).as(idCol))
+      .distinct()
 
   /** The one writeStream wiring of every sink here: the checkpoint, the
     * trigger, and `batchFn` run on each micro-batch with its id. */

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -385,6 +385,106 @@ object Curation {
     * placeholder) or `{` (source code) are removed wholesale. */
   def c4DocDrop(text: Column): Column =
     lower(text).contains("lorem ipsum") || text.contains("{")
+
+  /** The gate stages of [[gateFlags]], in chain order. */
+  private val gateStages = Seq("html", "blocklist", "lang", "gopher", "c4")
+
+  /** The pass-flag column of gate stage `stage` in a [[gateFlags]] frame. */
+  def gateFlag(stage: String): String = s"__$stage"
+
+  /** THE curation gate chain, shared by the batch funnels and the
+    * streaming sinks: optional HTML → text extraction
+    * ([[Html.extractText]], replacing `textCol`; an empty extraction
+    * fails), optional blocklist (`(terms, maxHits)`,
+    * [[blocklistPassed]]), optional language (stopword vote == `lang`),
+    * then the Gopher gate ([[gopherGate]]), then C4: the doc-drop rule
+    * and line cleaning over `segment(text)`, an empty cleaned text
+    * failing. Each stage is a CUMULATIVE pass flag ([[gateFlag]]: a
+    * document passes a stage only if it passed every earlier one). The
+    * cleaned text of the c4 survivors lands in `clean`, NULL for every
+    * dropped document, so a checkpoint of the flags carries text only
+    * for the rows a later stage reads. Map-side only: the survivor
+    * counts of every stage are one aggregate over this one projection
+    * ([[gateCounts]]), never one filtered frame per stage. */
+  def gateFlags(docs: DataFrame, textCol: String, minTokens: Long,
+      minStopWords: Long, maxTokens: Long = 100000L, html: Boolean = false,
+      blocklist: Option[(Seq[String], Long)] = None, lang: Option[String] = None,
+      segment: Column => Column = identity, minWords: Int = 3): DataFrame = {
+    val text = col(textCol)
+    val src = if (html) docs.withColumn(textCol, Html.extractText(text)) else docs
+    val gates = Seq(
+      Option.when(html)("html" -> (text =!= "")),
+      blocklist.map { case (terms, maxHits) =>
+        "blocklist" -> blocklistPassed(text, terms, maxHits) },
+      lang.map(l => "lang" -> (TextFunctions.langId(text) === l)),
+      Some("gopher" ->
+        gopherGate(text, minTokens, maxTokens, minStopWords))).flatten
+    val gated = gates.foldLeft((src, Option.empty[Column])) {
+      case ((df, prev), (stage, pass)) =>
+        (df.withColumn(gateFlag(stage), prev.fold(pass)(_ && pass)),
+          Some(col(gateFlag(stage))))
+    }._1
+    gated.withColumn("__seg", segment(text))
+      .withColumn("__clean", c4CleanedText(col("__seg"), minWords))
+      .withColumn(gateFlag("c4"), col(gateFlag("gopher")) &&
+        !c4DocDrop(col("__seg")) && col("__clean") =!= "")
+      .withColumn("clean", when(col(gateFlag("c4")), col("__clean")))
+      .drop("__seg", "__clean")
+  }
+
+  /** The gate stages whose flag a [[gateFlags]] frame carries. */
+  def gatesOf(flagged: DataFrame): Seq[String] =
+    gateStages.filter(s => flagged.columns.contains(gateFlag(s)))
+
+  /** One row: `total` plus the survivor count of every gate stage
+    * present in `flagged` (a [[gateFlags]] frame), named by stage. The
+    * stage sums of an empty frame are NULL: read them only when
+    * `total > 0`. */
+  def gateCounts(flagged: DataFrame): DataFrame =
+    flagged.agg(count(lit(1)).as("total"), gatesOf(flagged).map(s =>
+      sum(col(gateFlag(s)).cast(LongType)).as(s)): _*)
+
+  /** The committed-model quality gate: the rows of `docs` whose
+    * `textCol` the quantized classifier
+    * ([[QualityClassifier.scoreQuantized]]) passes. Texts with fewer
+    * than two tokens have no features, are absent from scoring, and
+    * fail. An inner join on the (unique) ids, not a semi join: the
+    * planner may then broadcast either side, where a semi join can only
+    * build the scores side, whose size it cannot estimate. */
+  def modelGate(docs: DataFrame, idCol: String, textCol: String,
+      weightsQ: Seq[(Int, Long)], biasQ: Long, buckets: Int): DataFrame =
+    docs.join(
+        QualityClassifier.scoreQuantized(docs.select(col(idCol), col(textCol)),
+            idCol, textCol, weightsQ, biasQ, buckets)
+          .filter(col("clf_pass") === 1).select(col(idCol)),
+        Seq(idCol))
+      .select(docs.columns.toIndexedSeq.map(col): _*)
+
+  /** One row: the row count of each named frame, in ONE aggregate over
+    * a union of stage-tagged rows. count(frame_i) ≡ sum(tag = i), so the
+    * frames share one partial-aggregate pass instead of one count
+    * subtree (and one final-aggregate exchange) each. */
+  def survivorCounts(frames: Seq[(String, DataFrame)]): DataFrame = {
+    val tagged = frames.zipWithIndex
+      .map { case ((_, df), i) => df.select(lit(i).as("__st")) }
+      .reduce(_.union(_))
+    val counts = frames.zipWithIndex.map { case ((name, _), i) =>
+      coalesce(sum((col("__st") === i).cast(LongType)), lit(0L)).as(name)
+    }
+    tagged.agg(counts.head, counts.tail: _*)
+  }
+
+  /** The stage-count table `(stage_idx, stage, n_docs)` of a one-row
+    * frame of counts: column `stages(i)` becomes stage i. */
+  def stageTable(counts: DataFrame, stages: Seq[String]): DataFrame =
+    counts
+      .select(explode(array(stages.zipWithIndex.map { case (name, i) =>
+        struct(lit(i).cast("int").as("stage_idx"), lit(name).as("stage"),
+          col(name).as("n_docs"))
+      }: _*)).as("s"))
+      .select(col("s.stage_idx").as("stage_idx"), col("s.stage").as("stage"),
+        col("s.n_docs").as("n_docs"))
+      .orderBy(col("stage_idx"))
 
   /** The n-gram half of Gopher A1.2: for each document and each n in
     * `ns`, the most frequent n-token gram, its occurrence count, and

@@ -62,6 +62,34 @@ class LayoutSpec extends AnyFunSuite {
     assert(backup == Map("graft/core/AtomicSwap.scala" -> 1), backup)
   }
 
+  test("each curation stage is spelled once") {
+    val curation = "graft/text/Curation.scala"
+    val streams = "graft/streaming/Streams.scala"
+    // the gate chain: Curation.gateFlags is the one caller of the C4
+    // doc-drop rule and of the Gopher gate, besides the standalone
+    // tx_c4_clean operator query
+    val drop = occurrences("c4DocDrop(")
+    assert(drop == Map(curation -> 2, "graft/queries/TextQueries.scala" -> 1), drop)
+    val tq = Files.readString(root.resolve("graft/queries/TextQueries.scala"))
+    val c4Clean = tq.indexOf("def txC4Clean(")
+    val call = tq.indexOf("c4DocDrop(")
+    assert(c4Clean >= 0 && call > c4Clean && call < tq.indexOf("\n  }\n", c4Clean),
+      "c4DocDrop( in TextQueries.scala outside txC4Clean")
+    assert(occurrences("gopherGate(") == Map(curation -> 2))
+    // the model gate: Curation.modelGate
+    assert(occurrences("\"clf_pass\") === 1") == Map(curation -> 1))
+    // the stage-count table: Curation.stageTable
+    assert(occurrences("def stageRow").isEmpty)
+    assert(occurrences("\"stage_idx\"") == Map(curation -> 3), occurrences("\"stage_idx\""))
+    // the greedy old-wins near-dup drop rule and the capped candidate-id
+    // probe: one private helper each in Streams
+    assert(occurrences("Seq(\"id_b\"), \"left_semi\"").isEmpty)
+    assert(occurrences(".otherwise(col(\"id_b\"))") == Map(streams -> 1))
+    assert(occurrences("limit(100001)") == Map(streams -> 1))
+    // the streaming exact dedup against the fingerprint index
+    assert(occurrences(".agg(min(col(idCol)).as(idCol))") == Map(streams -> 1))
+  }
+
   test("the latest-wins tables share one upsert core and one winner") {
     val merge = "graft/operators/Merge.scala"
     assert(!occurrences("latestWins(").contains("graft/streaming/Streams.scala"))

@@ -19,6 +19,37 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
 
   def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
+  // Upper bounds on the Spark jobs of one micro-batch of the sink cases
+  // below (job counts follow the plan, not the host). Measured at 13, 29
+  // and 40; a sink that reads its batch again per stage count (20, 31
+  // and 56 jobs) trips them.
+  private val CurationSinkJobs = 16L
+  private val NearDupSinkJobs = 30L
+  private val PretrainSinkJobs = 46L
+
+  /** `stream` with its Long `idCol` counting every evaluation of a row:
+    * a sink that reads each micro-batch once reads as many rows as were
+    * fed. */
+  private def countingReads(stream: org.apache.spark.sql.DataFrame,
+      idCol: String): (org.apache.spark.sql.DataFrame,
+      org.apache.spark.util.LongAccumulator) = {
+    val reads = spark.sparkContext.longAccumulator("rows-read")
+    val seen = udf { (id: Long) => reads.add(1); id }.asNondeterministic()
+    (stream.withColumn(idCol, seen(col(idCol))), reads)
+  }
+
+  /** The Spark jobs `feed` (one micro-batch, fed and processed) runs. */
+  private def jobsOf(feed: => Unit): Long =
+    graft.TaskTotals.measure(spark)(feed)._2.jobs
+
+  /** The `k=v;k=v` drop accounting of each LoadResult that carries one. */
+  private def stageDrops(loads: Seq[graft.core.LoadResult]): Seq[Map[String, Long]] =
+    loads.flatMap(_.errorMessage).map { m =>
+      m.split(";").map { kv =>
+        val Array(k, v) = kv.split("="); k -> v.toLong
+      }.toMap
+    }
+
   test("C2 dedup: exact re-deliveries collapse, fresh timestamps pass") {
     val spark2 = spark
     import spark2.implicits._
@@ -973,7 +1004,7 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
     val dir = Files.createTempDirectory("graft-csink").toString
     val goodLine = "the cat and the dog run fast together now then."
     val input = MemoryStream[(Long, String)]
-    val stream = input.toDF().toDF("doc_id", "text")
+    val (stream, reads) = countingReads(input.toDF().toDF("doc_id", "text"), "doc_id")
     val loads = scala.collection.mutable.ArrayBuffer.empty[graft.core.LoadResult]
     val q = Streams.curationFunnelSink(stream, s"$dir/corpus", s"$dir/index",
       s"$dir/ckpt", "doc_id", "text", minTokens = 5L,
@@ -991,10 +1022,17 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
       q.processAllAvailable()
       // batch 2: doc 5's cleaned text duplicates the INDEXED doc 1;
       // doc 6 is fresh and survives
-      input.addData(
-        (5L, goodLine + "\nanother junk line"),
-        (6L, "that fox and the bird have come with them here too."))
-      q.processAllAvailable()
+      val jobs = jobsOf {
+        input.addData(
+          (5L, goodLine + "\nanother junk line"),
+          (6L, "that fox and the bird have come with them here too."))
+        q.processAllAvailable()
+      }
+      // one flags scan, one survivor-count aggregate, the dedup and the
+      // two writes
+      assert(jobs <= CurationSinkJobs, s"jobs per micro-batch: $jobs")
+      // each micro-batch is read once, not once per stage count
+      assert(reads.value == 6L, s"rows read: ${reads.value}")
 
       val corpus = spark.read.parquet(s"$dir/corpus")
         .select("doc_id", "text").collect()
@@ -1043,7 +1081,7 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
         .mkString("[", ",", "]")
     val dir = Files.createTempDirectory("graft-sftsink").toString
     val input = MemoryStream[(Long, String)]
-    val stream = input.toDF().toDF("doc_id", "conv")
+    val (stream, reads) = countingReads(input.toDF().toDF("doc_id", "conv"), "doc_id")
     val loads = scala.collection.mutable.ArrayBuffer.empty[graft.core.LoadResult]
     val q = Streams.sftPrepSink(stream, s"$dir/corpus", s"$dir/index",
       s"$dir/ckpt", "doc_id", "conv", trig = Streams.trigger(1),
@@ -1079,6 +1117,8 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
         }
       assert(stages.map(_("invalid")).sum == 1L, stages)
       assert(stages.map(_("dup")).sum == 2L, stages)
+      // each micro-batch is read once
+      assert(reads.value == 5L, s"rows read: ${reads.value}")
     } finally q.stop()
   }
 
@@ -1089,7 +1129,7 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
 
     val dir = Files.createTempDirectory("graft-phsink").toString
     val input = MemoryStream[(Long, Array[Byte])]
-    val stream = input.toDF().toDF("doc_id", "payload")
+    val (stream, reads) = countingReads(input.toDF().toDF("doc_id", "payload"), "doc_id")
     val loads = scala.collection.mutable.ArrayBuffer.empty[graft.core.LoadResult]
     val q = Streams.phashDedupSink(stream, s"$dir/corpus", s"$dir/index",
       s"$dir/ckpt", "doc_id", "payload", maxHamming = 3,
@@ -1127,6 +1167,10 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
         .select("doc_id").collect().map(_.getLong(0)).toSet
       assert(index == Set(1L, 3L, 5L), index)
       assert(loads.map(_.rowsLoaded).sum == 3L, loads)
+      // one drop per batch: 2 in-batch, 4 against the index
+      assert(loads.flatMap(_.errorMessage) == Seq("deduped: 1", "deduped: 1"), loads)
+      // each micro-batch is read once
+      assert(reads.value == 5L, s"rows read: ${reads.value}")
     } finally q.stop()
   }
 
@@ -1263,7 +1307,7 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
     val base = (0 until 80).map(i => s"tok$i").mkString(" ")
     val nearDup = base.replace(" tok40 ", " changed ")
     val input = MemoryStream[(Long, String)]
-    val stream = input.toDF().toDF("doc_id", "text")
+    val (stream, reads) = countingReads(input.toDF().toDF("doc_id", "text"), "doc_id")
     val loads = scala.collection.mutable.ArrayBuffer.empty[graft.core.LoadResult]
     val q = Streams.nearDupDedupSink(stream, s"$dir/corpus", s"$dir/index",
       s"$dir/ckpt", "doc_id", "text", trig = Streams.trigger(1),
@@ -1274,12 +1318,17 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
       q.processAllAvailable()
       // batch 2: doc 3 near-dups the INDEXED doc 1 (dropped against the
       // index, not the batch); doc 4 unique; doc 5 too short to sign
-      input.addData(
-        (3L, base.replace(" tok10 ", " other ")),
-        (4L, "completely different content about databases and shuffles " +
-          "with enough tokens to produce a full minhash signature today"),
-        (5L, "tiny doc"))
-      q.processAllAvailable()
+      val jobs = jobsOf {
+        input.addData(
+          (3L, base.replace(" tok10 ", " other ")),
+          (4L, "completely different content about databases and shuffles " +
+            "with enough tokens to produce a full minhash signature today"),
+          (5L, "tiny doc"))
+        q.processAllAvailable()
+      }
+      assert(jobs <= NearDupSinkJobs, s"jobs per micro-batch: $jobs")
+      // each micro-batch is read once, not once per count and join
+      assert(reads.value == 5L, s"rows read: ${reads.value}")
 
       val corpus = spark.read.parquet(s"$dir/corpus")
         .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -1802,8 +1851,8 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
     val dir = Files.createTempDirectory("ml-sink").toString
     val results = scala.collection.mutable.ArrayBuffer.empty[graft.core.LoadResult]
     val input = MemoryStream[(Long, String)]
-    val q = Streams.multilingualCurationSink(
-        input.toDF().toDF("doc_id", "text"),
+    val (stream, reads) = countingReads(input.toDF().toDF("doc_id", "text"), "doc_id")
+    val q = Streams.multilingualCurationSink(stream,
         s"$dir/corpus", s"$dir/index", s"$dir/cp", "doc_id", "text",
         routes, trig = Streams.trigger(1),
         onLoad = r => results.synchronized { results += r }).start()
@@ -1835,6 +1884,15 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
     assert(streamed.values.toSet == Set("en", "de", "ru"), streamed.values.toSet)
     val msgs = results.synchronized(results.flatMap(_.errorMessage).toVector)
     assert(msgs.exists(_.contains("dup=")), msgs)
+    // the drops of each stage sum to the batch operators' stage counts
+    val routedN = flags.filter(col("route_lang") =!= "other").count()
+    val gatedN = gatedBatch.count()
+    val drops = results.synchronized(stageDrops(results.toSeq))
+    assert(drops.map(_("unrouted")).sum == 60L - routedN, drops)
+    assert(drops.map(_("gated")).sum == routedN - gatedN, drops)
+    assert(drops.map(_("dup")).sum == gatedN - expect.size, drops)
+    // each micro-batch is read once
+    assert(reads.value == 60L, s"rows read: ${reads.value}")
   }
 
   test("streaming flagship refuses to clobber history after checkpoint loss") {
@@ -1891,8 +1949,9 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
     val results = scala.collection.mutable.ArrayBuffer.empty[graft.core.LoadResult]
     val eval = Seq((0L, "zz")).toDF("doc_id", "text")
     val input = MemoryStream[(Long, String, String)]
-    val q = Streams.pretrainPipelineSink(
-        input.toDF().toDF("doc_id", "source", "text"),
+    val (stream, reads) = countingReads(
+      input.toDF().toDF("doc_id", "source", "text"), "doc_id")
+    val q = Streams.pretrainPipelineSink(stream,
         s"$dir/state", s"$dir/cp", "doc_id", "source", "text",
         evalDocs = eval, evalTextCol = "text",
         blocklistTerms = Seq("zzz"), minTokens = 5L,
@@ -1919,6 +1978,63 @@ class StreamsSpec extends AnyFunSuite with SparkSpec {
     // html drops surfaced distinctly from gate drops in the accounting
     val msgs = results.synchronized(results.flatMap(_.errorMessage).toVector)
     assert(msgs.exists(_.startsWith("html=2;")), msgs)
+    // the markup batch drops nothing past extraction, and says so per stage
+    assert(msgs == Seq("html=2;gates=0;dup=0;decon=0;sample=0"), msgs)
+    // each micro-batch is read once
+    assert(reads.value == 3L, s"rows read: ${reads.value}")
+  }
+
+  test("streaming flagship: per-stage drops add up to the stage table, each batch read once") {
+    val spark2 = spark
+    import spark2.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("flag-drops").toString
+    // docs that pass every gate: 336 tokens incl. stopwords, end in '.'
+    def text(i: Long) =
+      (0 until 56).map(t => s"the of and with w${i}x$t word").mkString(" ") + " tail."
+    val eval = Seq((0L, text(100))).toDF("doc_id", "text")
+    val input = MemoryStream[(Long, String, String)]
+    val (stream, reads) = countingReads(
+      input.toDF().toDF("doc_id", "source", "text"), "doc_id")
+    val loads = scala.collection.mutable.ArrayBuffer.empty[graft.core.LoadResult]
+    val q = Streams.pretrainPipelineSink(stream,
+        s"$dir/state", s"$dir/cp", "doc_id", "source", "text",
+        evalDocs = eval, evalTextCol = "text",
+        blocklistTerms = Seq("zzz"), minTokens = 10L,
+        modelWeights = Seq.empty, modelBias = 0L,
+        trig = Streams.trigger(1),
+        onLoad = r => loads.synchronized { loads += r }).start()
+    try {
+      // batch 1: six keepers, a doc too short for the Gopher gate (7),
+      // an exact copy of doc 1 (8)
+      input.addData((1L to 6L).map(i => (i, "s", text(i))) ++
+        Seq((7L, "s", "tiny doc."), (8L, "s", text(1))): _*)
+      q.processAllAvailable()
+      // batch 2: four keepers, a copy of the INDEXED doc 2 (13), and a
+      // copy of the eval document (14)
+      val jobs = jobsOf {
+        input.addData((9L to 12L).map(i => (i, "s", text(i))) ++
+          Seq((13L, "s", text(2)), (14L, "s", text(100))): _*)
+        q.processAllAvailable()
+      }
+      assert(q.exception.isEmpty, q.exception.toString)
+      // one flags scan and one survivor-count aggregate around the
+      // stage operators
+      assert(jobs <= PretrainSinkJobs, s"jobs per micro-batch: $jobs")
+    } finally q.stop()
+    val n = Streams.pretrainPipelineStages(spark, s"$dir/state")
+      .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
+    val drops = loads.synchronized(stageDrops(loads.toSeq))
+    def sum(k: String) = drops.map(_(k)).sum
+    assert(n("total") == 14L, n)
+    assert(sum("gates") == 1L && sum("gates") == n("total") - n("model"), (drops, n))
+    assert(sum("dup") == 2L && sum("dup") == n("model") - n("near_dedup"), (drops, n))
+    assert(sum("decon") == 1L &&
+      sum("decon") == n("near_dedup") - n("decon_near"), (drops, n))
+    assert(sum("sample") > 0L &&
+      sum("sample") == n("decon_near") - n("sampled"), (drops, n))
+    // each micro-batch is read once
+    assert(reads.value == 14L, s"rows read: ${reads.value}")
   }
 
   test("streaming flagship: 3 micro-batches == batch flagship, stage- and doc-exact") {
